@@ -272,9 +272,10 @@ def main() -> int:
     # stalls): the recorded basis for calling a run's session
     # contaminated, instead of a post-hoc narrative
     host = {"start": host_start, "end": host_end}
-    # the anchor rides the stdout line too, so the driver's recorded
-    # BENCH_r{N}.json is self-normalizing in bench_compare (VERDICT r13
-    # #4: raw 1.058 vs anchored 1.010 was the divergence this kills)
+    # the anchor rides the detail file (the stdout line below drops it
+    # to fit more queries), where bench_compare reads it to normalize
+    # a run for host drift (VERDICT r13 #4: raw 1.058 vs anchored 1.010
+    # was the divergence this kills)
     base = {
         "metric": "total_wall_sec_all_queries",
         "value": total,

@@ -35,15 +35,15 @@ def is_contended(snap: dict) -> bool:
     run's, not the session's. The load threshold normalizes by the
     RECORDING host's core count (the snapshot's ``cpus`` field, r18+)
     so a recorded artifact adjudicated on a different machine is
-    judged against the machine that produced the number; snapshots
-    from before the field existed fall back to the evaluating host's
-    count (this repo's artifacts are all same-host). Missing fields
-    read as not-contended (best-effort facility, never an error)."""
-    cores = snap.get("cpus") or os.cpu_count() or 1
-    return (
-        snap.get("loadavg_1m", 0.0) > CONTENTION_LOAD_PER_CORE * cores
-        or snap.get("psi_cpu_some_avg60", 0.0) > CONTENTION_PSI_AVG60
-    )
+    judged against the machine that produced the number. A snapshot
+    from before the field existed is judged by PSI alone: its load has
+    no recorded denominator, and the evaluating host's core count says
+    nothing about the machine that recorded it. Missing fields read as
+    not-contended (best-effort facility, never an error)."""
+    cores = snap.get("cpus")
+    return bool(
+        cores and snap.get("loadavg_1m", 0.0) > CONTENTION_LOAD_PER_CORE * cores
+    ) or snap.get("psi_cpu_some_avg60", 0.0) > CONTENTION_PSI_AVG60
 
 
 def host_snapshot() -> dict:

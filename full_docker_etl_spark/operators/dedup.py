@@ -937,20 +937,22 @@ def _containment_store_write(
     bands = index.withColumn("side", F.lit("i")).unionByName(
         _ensemble_rows(docs, specs).withColumn("side", F.lit("p"))
     )
-    _overlap(
-        lambda: _rebalanced(docs).write.parquet(
-            _store_batch_dir(path, "docs", batch_id)
-        ),
-        lambda: _rebalanced(bands, "side")
-        .write.partitionBy("side")
-        .parquet(_store_batch_dir(path, "bands", batch_id)),
-        lambda: _rebalanced(
-            index.groupBy("p", "r", "band", "bucket")
-            .agg(F.count(F.lit(1)).alias("cnt"))
+    try:
+        _overlap(
+            lambda: _rebalanced(docs).write.parquet(
+                _store_batch_dir(path, "docs", batch_id)
+            ),
+            lambda: _rebalanced(bands, "side")
+            .write.partitionBy("side")
+            .parquet(_store_batch_dir(path, "bands", batch_id)),
+            lambda: _rebalanced(
+                index.groupBy("p", "r", "band", "bucket")
+                .agg(F.count(F.lit(1)).alias("cnt"))
+            )
+            .write.parquet(_store_batch_dir(path, "counts", batch_id)),
         )
-        .write.parquet(_store_batch_dir(path, "counts", batch_id)),
-    )
-    docs.unpersist()
+    finally:
+        docs.unpersist()
     _store_manifest_publish(path, batch_id)
 
 
@@ -3730,15 +3732,17 @@ def _minhash_store_write(
     sig_arr = minhash_signature_array(
         shingle_arrays(df, text_col, id_col, n).where(F.size("sh_arr") > 0), k
     ).persist(StorageLevel.MEMORY_AND_DISK)
-    _overlap(
-        lambda: _rebalanced(sig_arr).write.parquet(
-            _store_batch_dir(path, "sigs", batch_id)
-        ),
-        lambda: _rebalanced(_band_rows(sig_arr, k, bands)).write.parquet(
-            _store_batch_dir(path, "bands", batch_id)
-        ),
-    )
-    sig_arr.unpersist()
+    try:
+        _overlap(
+            lambda: _rebalanced(sig_arr).write.parquet(
+                _store_batch_dir(path, "sigs", batch_id)
+            ),
+            lambda: _rebalanced(_band_rows(sig_arr, k, bands)).write.parquet(
+                _store_batch_dir(path, "bands", batch_id)
+            ),
+        )
+    finally:
+        sig_arr.unpersist()
     _store_manifest_publish(path, batch_id)
 
 

@@ -3,6 +3,7 @@ from full_docker_etl_spark.sources.catalog import (
     list_tables,
     load_table,
     load_tables,
+    read_parquet,
     register_views,
 )
 
@@ -11,5 +12,6 @@ __all__ = [
     "list_tables",
     "load_table",
     "load_tables",
+    "read_parquet",
     "register_views",
 ]

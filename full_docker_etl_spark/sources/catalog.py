@@ -13,6 +13,8 @@ from __future__ import annotations
 
 import glob
 import os
+import threading
+from collections import OrderedDict
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -34,17 +36,90 @@ TESTDATA_TABLES = (
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 
-_NANO_CACHE: dict[str, list[str]] = {}
+# Session confs whose values change what Spark infers from a parquet
+# footer or a partition directory tree: part of every memoized schema's
+# key, so flipping one re-infers instead of replaying a stale schema.
+_INFERENCE_CONFS = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.sources.partitionColumnTypeInference.enabled",
+    "spark.sql.parquet.mergeSchema",
+)
+_MEMO_SIZE = 256
+# real path -> {"sig": (st_ino, st_size, st_mtime_ns), "nanos": list |
+# None, "schemas": {conf values: StructType}}, least recently used first
+_SCHEMA_MEMO: OrderedDict[str, dict] = OrderedDict()
+_MEMO_LOCK = threading.Lock()
 
 
-def _nano_timestamp_columns(path: str) -> list[str]:
+def _memo_entry(path: str) -> dict | None:
+    """The memo entry for ``path``'s current file signature, or None
+    when the path cannot be stat'ed locally (a remote URI, a missing
+    path — the caller then reads unmemoized and Spark reports any
+    error). A signature that no longer matches (the file or directory
+    was rewritten, replaced or touched) starts a fresh entry, so a
+    changed footer is always inferred again."""
+    real = os.path.realpath(path)
+    try:
+        st = os.stat(real)
+    except OSError:
+        return None
+    sig = (st.st_ino, st.st_size, st.st_mtime_ns)
+    with _MEMO_LOCK:
+        entry = _SCHEMA_MEMO.get(real)
+        if entry is None or entry["sig"] != sig:
+            entry = _SCHEMA_MEMO[real] = {"sig": sig, "nanos": None, "schemas": {}}
+        _SCHEMA_MEMO.move_to_end(real)
+        if len(_SCHEMA_MEMO) > _MEMO_SIZE:
+            _SCHEMA_MEMO.popitem(last=False)
+    return entry
+
+
+def _read_memoized(
+    spark: SparkSession, path: str, entry: dict | None
+) -> DataFrame:
+    if entry is None:
+        return spark.read.parquet(path)
+    confs = tuple(spark.conf.get(k, None) for k in _INFERENCE_CONFS)
+    schema = entry["schemas"].get(confs)
+    if schema is not None:
+        return spark.read.schema(schema).parquet(path)
+    df = spark.read.parquet(path)
+    entry["schemas"][confs] = df.schema
+    return df
+
+
+def read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)`` that infers each path's schema once.
+
+    Inference reads a footer in a one-task Spark job on every open; here
+    the schema Spark inferred is remembered and handed back through
+    ``spark.read.schema(...)`` on later opens, which start no job.
+
+    The memo key is the real path, its ``os.stat`` signature
+    ``(st_ino, st_size, st_mtime_ns)`` and the values of the session
+    confs that change parquet inference (``_INFERENCE_CONFS``). A file
+    rewritten in place or replaced, a directory whose entries change,
+    or a flipped conf re-infers. A directory is keyed by its own stat
+    only: files rewritten deeper in a partition tree with the top-level
+    entries unchanged keep the old schema, which is why the memo is
+    meant for immutable inputs (table files, versioned snapshots). The
+    memo is a fixed-size LRU. Only the schema is remembered — every
+    call builds a fresh relation with fresh attribute ids, so two opens
+    of one path self-join unambiguously."""
+    return _read_memoized(spark, path, _memo_entry(path))
+
+
+def _nano_timestamp_columns(path: str, entry: dict | None) -> list[str]:
     """Columns stored as parquet TIMESTAMP(NANOS), which Spark's reader
     rejects outright (PARQUET_TYPE_ILLEGAL). Detected from the footer of
-    one file so the fix is generic, not a per-table hardcode. Cached per
-    path — footers are immutable for the testdata and re-probing costs
-    a pyarrow read per load."""
-    if path in _NANO_CACHE:
-        return _NANO_CACHE[path]
+    one file so the fix is generic, not a per-table hardcode. Kept in
+    the path's schema-memo entry, so the footer is read once per file
+    signature and a rewritten file is probed again."""
+    if entry is not None and entry["nanos"] is not None:
+        return entry["nanos"]
     try:
         import pyarrow as pa
         import pyarrow.parquet as pq
@@ -61,7 +136,8 @@ def _nano_timestamp_columns(path: str) -> list[str]:
         for name, typ in zip(schema.names, schema.types)
         if typ == pa.timestamp("ns")
     ]
-    _NANO_CACHE[path] = out
+    if entry is not None:
+        entry["nanos"] = out
     return out
 
 
@@ -74,13 +150,19 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     (``spark.sql.legacy.parquet.nanosAsLong``) and rebuild proper
     timestamps at microsecond precision — the same truncation DuckDB's
     ``epoch_us`` applies, so oracle comparisons agree.
+
+    The schema and the nanos-column list are inferred once per file
+    signature (see :func:`read_parquet`): the memo is keyed by the real
+    path, its ``(st_ino, st_size, st_mtime_ns)`` and the inference
+    confs, so reopening an unchanged table starts no Spark job and a
+    table rewritten at the same path is inferred again.
     """
     path = os.path.join(sf_dir, f"{name}.parquet")
-    nanos = _nano_timestamp_columns(path)
-    if not nanos:
-        return spark.read.parquet(path)
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    df = spark.read.parquet(path)
+    entry = _memo_entry(path)
+    nanos = _nano_timestamp_columns(path, entry)
+    if nanos:
+        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    df = _read_memoized(spark, path, entry)
     for c in nanos:
         df = df.withColumn(c, F.timestamp_micros(F.expr(f"`{c}` div 1000")))
     return df

@@ -34,6 +34,8 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from full_docker_etl_spark.sources.catalog import read_parquet
+
 
 class ConcurrentWriteError(RuntimeError):
     """A commit lost the optimistic-concurrency check: the table's live
@@ -572,7 +574,16 @@ class VersionedTable:
         Every consumer — queries, merges, diffs, compaction — reads
         through this method, so tombstones are applied uniformly; the
         vectors are reconciled back into the data files by
-        :meth:`compact`."""
+        :meth:`compact`.
+
+        The snapshot's and its vector's schemas are inferred once per
+        directory (:func:`~full_docker_etl_spark.sources.catalog.read_parquet`):
+        the memo is keyed by the directory's real path, its ``os.stat``
+        ``(st_ino, st_size, st_mtime_ns)`` and the parquet-inference
+        confs; a change to any of them infers again. Snapshot
+        directories are immutable once published, so re-reading a
+        version (a merge re-opening its parent, ``compact``) starts no
+        schema-inference job."""
         if version is None:
             version = self.current_version()
             if version is None:
@@ -584,7 +595,7 @@ class VersionedTable:
                 "keep a deeper time-travel horizon"
             )
         vdir = os.path.join(self.root, "_versions", version)
-        df = spark.read.parquet(vdir)
+        df = read_parquet(spark, vdir)
         dv = self._read_dv(spark, version)
         if dv is not None:
             df = df.join(
@@ -606,7 +617,7 @@ class VersionedTable:
         d = self._dv_dir(version)
         if not os.path.isdir(d):
             return None
-        return spark.read.parquet(d)
+        return read_parquet(spark, d)
 
     def overwrite(self, df: DataFrame) -> str:
         """Commit ``df`` as the new table state. Returns the version id."""

@@ -788,6 +788,52 @@ def test_containment_store_append_crash_retry_no_double_count(
         D.containment_store_append(half_b, dead, "text", "doc_id")
 
 
+@pytest.mark.parametrize(
+    "family, parent_fn",
+    [("containment", "_ensemble_docs"), ("minhash", "minhash_signature_array")],
+)
+def test_store_write_failure_releases_persisted_parent(
+    spark, tmp_path, monkeypatch, family, parent_fn
+):
+    """A store write whose table write raises must still release the
+    persisted parent the writes share, and must publish nothing: the
+    append's batch stays invisible and the manifest keeps exactly the
+    batches committed before it."""
+    from full_docker_etl_spark.operators import dedup as D
+
+    df = _quote_corpus(spark)
+    build = getattr(D, f"{family}_store_build")
+    append = getattr(D, f"{family}_store_append")
+    path = str(tmp_path / "store")
+    build(df.where("doc_id % 2 = 0"), path, "text", "doc_id")
+    committed = D._store_manifest(path)
+
+    parents = []
+    real_parent_fn = getattr(D, parent_fn)
+
+    def capture(*args, **kwargs):
+        out = real_parent_fn(*args, **kwargs)
+        parents.append(out)
+        return out
+
+    real_overlap = D._overlap
+
+    def fail_last_write(*thunks):
+        def boom():
+            raise RuntimeError("simulated store write failure")
+
+        real_overlap(*thunks[:-1], boom)
+
+    monkeypatch.setattr(D, parent_fn, capture)
+    monkeypatch.setattr(D, "_overlap", fail_last_write)
+    with pytest.raises(RuntimeError, match="simulated store write failure"):
+        append(df.where("doc_id % 2 = 1"), path, "text", "doc_id")
+
+    assert len(parents) == 1
+    assert not parents[0].is_cached
+    assert D._store_manifest(path) == committed
+
+
 def test_containment_store_compact_folds_batches_same_results(spark):
     """Compaction folds N committed batches into one (small-file
     reclaim after many incremental appends), re-aggregates the

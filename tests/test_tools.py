@@ -275,18 +275,15 @@ def test_bench_contention_gate(monkeypatch):
     finally:
         sys.path.remove(str(REPO))
     monkeypatch.delenv("SPARK_GRAFT_BENCH_DETAIL", raising=False)
-    # the absolute loadavg fixtures below assume the recorded 32-core
-    # calibration; pin the evaluating host's view so the test is not
-    # coupled to whatever machine runs the suite
     from full_docker_etl_spark import contention as C
-
-    monkeypatch.setattr(C.os, "cpu_count", lambda: 32)
 
     assert not bench.is_contended({})
     assert not bench.is_contended(
         {"loadavg_1m": 0.72, "psi_cpu_some_avg60": 0.05}
     )
-    assert bench.is_contended({"loadavg_1m": 10.84})
+    # a load figure is judged against the core count recorded with it
+    # (the 32-core calibration host here)
+    assert bench.is_contended({"loadavg_1m": 10.84, "cpus": 32})
     assert bench.is_contended({"psi_cpu_some_avg60": 0.82})
 
     # the steal counter is adjudication evidence, not a gate input:
@@ -329,12 +326,10 @@ def test_contention_load_threshold_scales_per_core(monkeypatch):
     64-core one. PSI stays absolute (kernel-normalized)."""
     from full_docker_etl_spark import contention as C
 
-    monkeypatch.setattr(C.os, "cpu_count", lambda: 32)
-    assert not C.is_contended({"loadavg_1m": 1.9})   # < 2.0 = 32*0.0625
-    assert C.is_contended({"loadavg_1m": 2.1})
-    monkeypatch.setattr(C.os, "cpu_count", lambda: 2)
-    assert C.is_contended({"loadavg_1m": 1.9})       # saturated 2-core
-    assert not C.is_contended({"loadavg_1m": 0.1})
+    assert not C.is_contended({"loadavg_1m": 1.9, "cpus": 32})  # < 2.0
+    assert C.is_contended({"loadavg_1m": 2.1, "cpus": 32})
+    assert C.is_contended({"loadavg_1m": 1.9, "cpus": 2})  # saturated
+    assert not C.is_contended({"loadavg_1m": 0.1, "cpus": 2})
     # PSI threshold independent of core count
     assert C.is_contended({"psi_cpu_some_avg60": 0.25})
     assert not C.is_contended({"psi_cpu_some_avg60": 0.15})
@@ -349,6 +344,59 @@ def test_contention_load_threshold_scales_per_core(monkeypatch):
     assert C.is_contended({"loadavg_1m": 1.9, "cpus": 2})
     # host_snapshot stamps the denominator into new artifacts
     assert C.host_snapshot().get("cpus") == 32
+
+
+def test_contention_without_recorded_cpus_judges_by_psi_alone(monkeypatch):
+    """A snapshot that recorded no core count (pre-r18 artifacts,
+    hand-made fixtures) is judged by PSI alone: its load average has no
+    denominator, and the evaluating host's core count must not decide
+    the verdict — the same snapshot reads the same on 1 core and on
+    64."""
+    from full_docker_etl_spark import contention as C
+
+    for evaluating_cores in (1, 64):
+        monkeypatch.setattr(C.os, "cpu_count", lambda n=evaluating_cores: n)
+        assert not C.is_contended(
+            {"loadavg_1m": 0.5, "psi_cpu_some_avg60": 0.02}
+        )
+        assert not C.is_contended({"loadavg_1m": 10.84})
+        assert C.is_contended({"loadavg_1m": 0.5, "psi_cpu_some_avg60": 0.82})
+        # a recorded count still judges the load, whatever the evaluator
+        assert C.is_contended({"loadavg_1m": 0.5, "cpus": 4})
+        assert not C.is_contended({"loadavg_1m": 0.5, "cpus": 64})
+
+
+def test_profile_query_counts_jobs_by_watermark_not_retained_list():
+    """profile_query attributes to a query exactly the jobs whose ids
+    lie between the scheduler watermarks taken around it: a status
+    store that has evicted old jobs (its list is shorter than the job
+    ids) or still holds earlier reps' jobs must not move the counts."""
+    import importlib.util
+    from types import SimpleNamespace as NS
+
+    spec = importlib.util.spec_from_file_location(
+        "profile_query_mod", str(REPO / "tools" / "profile_query.py")
+    )
+    mod = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(mod)
+
+    def job(jid, stages, tasks):
+        return NS(
+            jobId=lambda: jid,
+            completionTime=lambda: NS(isDefined=lambda: True),
+            stageIds=lambda: NS(size=lambda: stages),
+            numCompletedTasks=lambda: tasks,
+        )
+
+    # jobs 0-99 ran earlier; only 97-99 are retained; the query ran 100-102
+    retained = [job(j, 1, 1) for j in (97, 98, 99)]
+    retained += [job(100, 2, 4), job(101, 1, 3), job(102, 3, 8)]
+    store = NS(jobsList=lambda _: NS(
+        size=lambda: len(retained), apply=lambda i: retained[i]
+    ))
+    sc = NS(statusStore=lambda: store)
+    spark = NS(sparkContext=NS(_jsc=NS(sc=lambda: sc)))
+    assert mod._layers(spark, 100, 103) == {"jobs": 3, "stages": 6, "tasks": 15}
 
 
 def test_bench_compare_adjudicate_labels_drift_vs_real(monkeypatch):

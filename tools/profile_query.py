@@ -1,10 +1,10 @@
 #!/usr/bin/env python
 """Per-query profiling harness (optimization guide §1): run named
 registered queries through the noop sink in a bench-identical session
-and report, per query, wall seconds plus job/stage/task counts and
-executor-side task time from the live AppStatusStore — the local-mode
-stand-in for the Spark UI's Jobs/Stages tabs (spark.ui.enabled=false
-here).
+and report, per query, wall seconds plus job/stage/task counts: jobs
+by the DAG scheduler's job-id watermark, stages and tasks of those
+jobs from the live AppStatusStore — the local-mode stand-in for the
+Spark UI's Jobs/Stages tabs (spark.ui.enabled=false here).
 
 Usage:
     python tools/profile_query.py q1 q2 ...      # profile these queries
@@ -24,22 +24,35 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
-def _store(spark):
-    return spark.sparkContext._jsc.sc().statusStore()
+def _next_job_id(spark) -> int:
+    """The id the next job will get, read synchronously from the DAG
+    scheduler. The status store cannot give it: the listener bus fills
+    it asynchronously, and it evicts jobs past spark.ui.retainedJobs,
+    so its list size is no job count."""
+    return int(spark.sparkContext._jsc.sc().dagScheduler().numTotalJobs())
 
 
-def _snap(spark) -> dict:
-    """Cumulative job/stage/task counters from the app status store."""
-    store = _store(spark)
-    jobs = store.jobsList(None)
-    n_jobs = jobs.size()
-    n_stages = 0
-    n_tasks = 0
-    for i in range(n_jobs):
-        j = jobs.apply(i)
-        n_stages += j.stageIds().size()
-        n_tasks += j.numCompletedTasks()
-    return {"jobs": n_jobs, "stages": n_stages, "tasks": n_tasks}
+def _layers(spark, lo: int, hi: int) -> dict:
+    """Jobs, stages and tasks of the jobs with ids in [lo, hi). The job
+    count is exact; stages and tasks come from the status store, which
+    is waited on (briefly) until it holds every job of the range."""
+    store = spark.sparkContext._jsc.sc().statusStore()
+    deadline = time.monotonic() + 5.0
+    while True:
+        jobs = store.jobsList(None)
+        mine = [
+            j for j in (jobs.apply(i) for i in range(jobs.size()))
+            if lo <= j.jobId() < hi
+        ]
+        done = all(j.completionTime().isDefined() for j in mine)
+        if (len(mine) == hi - lo and done) or time.monotonic() > deadline:
+            break
+        time.sleep(0.05)
+    return {
+        "jobs": hi - lo,
+        "stages": sum(j.stageIds().size() for j in mine),
+        "tasks": sum(j.numCompletedTasks() for j in mine),
+    }
 
 
 def main() -> int:
@@ -107,12 +120,12 @@ def main() -> int:
     rows = []
     for name in names:
         for rep in range(args.repeat):
-            before = _snap(spark)
+            lo = _next_job_id(spark)
             t0 = time.perf_counter()
             df = specs[name].fn(spark, sf_dir)
             df.write.format("noop").mode("overwrite").save()
             wall = time.perf_counter() - t0
-            after = _snap(spark)
+            layers = _layers(spark, lo, _next_job_id(spark))
             spark.catalog.clearCache()
             try:
                 for jrdd in (
@@ -125,9 +138,7 @@ def main() -> int:
                 "query": name,
                 "rep": rep,
                 "wall_sec": round(wall, 3),
-                "jobs": after["jobs"] - before["jobs"],
-                "stages": after["stages"] - before["stages"],
-                "tasks": after["tasks"] - before["tasks"],
+                **layers,
             }
             rows.append(row)
             print(json.dumps(row), flush=True)
