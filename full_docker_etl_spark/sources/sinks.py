@@ -30,10 +30,13 @@ import os
 import shutil
 import time
 import uuid
+from typing import NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
+from full_docker_etl_spark.operators.util import rebalanced
 from full_docker_etl_spark.sources.catalog import read_parquet
 
 
@@ -144,21 +147,28 @@ def _reject_duplicate_keys(
             dupn > 1,
             F.raise_error(
                 F.concat(
-                    F.lit(
-                        f"{op}: batch carries duplicate rows for key "
-                        f"({', '.join(keys)}) — MERGE semantics forbid "
-                        "two source rows matching one target row; "
-                        "offending key: "
-                    ),
-                    F.concat_ws(
-                        "|", *[F.col(k).cast("string") for k in keys]
-                    ),
+                    F.lit(_duplicate_key_message(op, keys)),
+                    _key_string(keys),
                 )
             ).cast(k0_type),
         )
         .otherwise(F.col(k0))
     )
     return batch.withColumn(k0, guard)
+
+
+def _duplicate_key_message(op: str, keys: list[str]) -> str:
+    """The multiple-source-match refusal, up to the offending key."""
+    return (
+        f"{op}: batch carries duplicate rows for key "
+        f"({', '.join(keys)}) — MERGE semantics forbid two source rows "
+        "matching one target row; offending key: "
+    )
+
+
+def _key_string(keys: list[str]):
+    """A key tuple rendered ``v1|v2|...`` for error messages."""
+    return F.concat_ws("|", *[F.col(k).cast("string") for k in keys])
 
 
 def upsert_parquet(
@@ -367,6 +377,44 @@ def _leaf_rels(root: str, depth: int) -> set[str]:
     if depth > 0:
         rec("", 0)
     return out
+
+
+#: Most touched partition tuples a scoped mutation collects. A batch
+#: naming more is rewriting most of the table anyway:
+#: past the cap the static prune and the link-exclusion set cannot be
+#: complete, so the mutation scopes by join and rewrites without links.
+_TOUCHED_CAP = 10_000
+
+
+class _Touched(NamedTuple):
+    """A scoped mutation's touched partitions, collected in ONE bounded
+    action (:meth:`VersionedTable._touched`)."""
+
+    values: list[tuple]  # raw partition tuples: the static prune
+    strings: frozenset[tuple[str, ...]]  # Spark string casts: leaf dirs
+    schema: StructType  # the batch's partition-column types
+    beyond_cap: DataFrame | None  # every distinct tuple, past the cap only
+
+
+def _leaves_named(
+    root: str, depth: int, strings: frozenset[tuple[str, ...]]
+) -> frozenset[str]:
+    """Relative leaf-dir paths under snapshot ``root`` whose partition
+    values, PARSED from the directory names (unquote — the direction
+    that needs no escaping rules), spell one of ``strings``. The
+    strings must be SPARK's string casts, not Python ``str()``: Spark
+    writes booleans as ``true``/``false`` where Python renders
+    ``True``/``False``, and an emptied boolean/float partition that
+    missed the link-exclusion set would be resurrected by the
+    hardlink step."""
+    from urllib.parse import unquote
+
+    return frozenset(
+        rel
+        for rel in _leaf_rels(root, depth)
+        if tuple(unquote(seg.split("=", 1)[1]) for seg in rel.split(os.sep))
+        in strings
+    )
 
 
 def _write_commit_meta(
@@ -794,9 +842,20 @@ class VersionedTable:
         never-published snapshot and refuses with per-constraint
         counts. Readers can never see a violating state because the
         pointer is only moved after the counts come back clean.
-        Tables without constraints pay nothing."""
+        Tables without constraints pay nothing.
+
+        LAYOUT RULE: a commit the engine DERIVES (one with an
+        ``expected_parent`` — merge, update, delete, compact) is
+        written through :func:`~full_docker_etl_spark.operators.util.rebalanced`
+        on the partition columns, so AQE sizes its files: a rewritten
+        partition below the advisory size lands as ONE file (the next
+        compaction finds nothing to do), a larger one as advisory-sized
+        files split across writer tasks. A blind ``overwrite`` keeps
+        the caller's layout."""
         version = f"v_{uuid.uuid4().hex[:12]}"
         vdir = os.path.join(self.root, "_versions", version)
+        if self.partition_by and expected_parent is not _UNSET:
+            df = rebalanced(df, *self.partition_by)
         observation = None
         if self.constraints:
             from pyspark.sql import Observation
@@ -1084,7 +1143,14 @@ class VersionedTable:
         columns ⊆ ``keys`` — then a key can never move between
         partitions, so pruning by the updates' partition values is
         exhaustive (a matched row always lives in a partition the
-        batch names).
+        batch names). The touched partitions, the NULL-partition
+        refusal and the duplicate-key check come from ONE bounded
+        action over the batch (:meth:`_touched`), so the write plan
+        carries no duplicate-key window. LAYOUT: like every derived
+        commit the rewrite is rebalanced on the partition columns — a
+        touched partition below the AQE advisory size comes back as one
+        file, so merges do not fragment the table — while
+        :meth:`overwrite` keeps the caller's layout.
 
         CONCURRENCY: the merge is derived from the snapshot that was
         live when it started and committed with an optimistic parent
@@ -1124,12 +1190,6 @@ class VersionedTable:
         delete_col: str | None = None,
     ) -> str:
         spark = updates.sparkSession
-        # MERGE forbids two source rows per target key (in-plan guard,
-        # see _reject_duplicate_keys) — a duplicate-keyed batch would
-        # anti-join out ONE live row and insert BOTH copies, and with
-        # delete_col a same-key tombstone+upsert pair has no defined
-        # order. Raises on the first derived action.
-        updates = _reject_duplicate_keys(updates, keys, "merge")
         if delete_col is not None:
             if delete_col in keys:
                 raise ValueError(
@@ -1140,21 +1200,34 @@ class VersionedTable:
                     f"delete_col {delete_col!r} is not in the batch "
                     f"(columns: {updates.columns})"
                 )
+        may_empty = delete_col is not None  # tombstones can drain a partition
+
+        def branches(batch: DataFrame) -> tuple[DataFrame, DataFrame]:
+            """(upserts, probe): flag-false rows upsert (NULL flag =
+            false); BOTH branches' keys leave the current snapshot (a
+            tombstoned key is simply never re-inserted)."""
+            if delete_col is None:
+                return batch, batch.select(*keys)
             flag = F.coalesce(F.col(delete_col).cast("boolean"), F.lit(False))
-            upserts = updates.where(~flag).drop(delete_col)
-            may_empty = True  # tombstones can drain a touched partition
-        else:
-            upserts = updates
-            may_empty = False
-        # BOTH branches' keys leave the current snapshot (a tombstoned
-        # key is simply never re-inserted)
-        probe = updates.select(*keys)
+            return batch.where(~flag).drop(delete_col), batch.select(*keys)
+
+        # MERGE forbids two source rows per target key — a
+        # duplicate-keyed batch would anti-join out ONE live row and
+        # insert BOTH copies, and with delete_col a same-key
+        # tombstone+upsert pair has no defined order. A scoped merge
+        # checks it in its touched-partition action, before writing;
+        # every other path runs no pre-action and carries the in-plan
+        # guard (_reject_duplicate_keys) on the whole batch, so both
+        # branches see it.
         parent = self.current_version()
         if parent is None:
             # first write: parent check still applies (a racing initial
             # writer publishes first → this commit rejects and retries
             # as a real merge against the winner's snapshot); tombstones
             # against an empty table are no-ops by construction
+            upserts, _ = branches(
+                _reject_duplicate_keys(updates, keys, "merge")
+            )
             return self._commit(upserts, expected_parent=None)
         # TYPE RECONCILIATION before any union: unionByName would
         # coerce mismatched types silently (int ∪ string → string) and
@@ -1162,11 +1235,12 @@ class VersionedTable:
         # table-narrower-than-batch widening is a schema change —
         # full-rewrite, gated behind evolve_schema like added columns.
         live = self.read(spark, version=parent)
+        batch_cols = updates.drop(delete_col) if delete_col else updates
         cast_up, cast_table = _plan_type_reconciliation(
-            live, upserts, exempt=frozenset(self.partition_by)
+            live, batch_cols, exempt=frozenset(self.partition_by)
         )
         if cast_up:
-            upserts = upserts.withColumns(
+            updates = updates.withColumns(
                 {c: F.col(c).cast(t) for c, t in cast_up.items()}
             )
         if cast_table and not evolve_schema:
@@ -1179,46 +1253,48 @@ class VersionedTable:
             live = live.withColumns(
                 {c: F.col(c).cast(t) for c, t in cast_table.items()}
             )
-        if not self.partition_by:
+        if self.partition_by:
+            missing = set(self.partition_by) - set(keys)
+            if missing:
+                raise ValueError(
+                    "partition-scoped merge requires partition columns "
+                    f"to be part of the merge key (missing: "
+                    f"{sorted(missing)}); otherwise a matched key could "
+                    "live in a partition the update batch never names "
+                    "and the prune would miss it"
+                )
+        # Plain Parquet has no schema registry: hardlinking old-schema
+        # files next to new-schema files would make the read-back
+        # schema depend on which file Spark samples. Additive evolution
+        # (and type WIDENING — ``live`` already carries the widened
+        # casts) therefore rewrites the WHOLE table once (every file
+        # carries the final schema); subsequent merges return to the
+        # scoped fast path.
+        if not self.partition_by or (
+            evolve_schema
+            and (cast_table or set(batch_cols.columns) != set(live.columns))
+        ):
+            upserts, probe = branches(
+                _reject_duplicate_keys(updates, keys, "merge")
+            )
             keep = live.join(probe, on=keys, how="left_anti")
             return self._commit(
                 keep.unionByName(upserts, allowMissingColumns=evolve_schema),
                 expected_parent=parent,
             )
-        missing = set(self.partition_by) - set(keys)
-        if missing:
-            raise ValueError(
-                "partition-scoped merge requires partition columns to be "
-                f"part of the merge key (missing: {sorted(missing)}); "
-                "otherwise a matched key could live in a partition the "
-                "update batch never names and the prune would miss it"
-            )
-        if evolve_schema and (
-            cast_table or set(upserts.columns) != set(live.columns)
-        ):
-            # Plain Parquet has no schema registry: hardlinking
-            # old-schema files next to new-schema files would make the
-            # read-back schema depend on which file Spark samples.
-            # Additive evolution (and type WIDENING — ``live`` already
-            # carries the widened casts) therefore rewrites the WHOLE
-            # table once (every file carries the final schema);
-            # subsequent merges return to the scoped fast path.
-            keep = live.join(probe, on=keys, how="left_anti")
-            return self._commit(
-                keep.unionByName(upserts, allowMissingColumns=True),
-                expected_parent=parent,
-            )
-        touched, touched_rows, cap = self._touched_tuples(updates, "merge")
+        touched = self._touched(updates, "merge", keys)
+        upserts, probe = branches(updates)
         cur_dir = os.path.join(self.root, "_versions", parent)
-        existing = self._scoped_read(spark, touched, touched_rows, cap, parent)
-        keep = existing.join(probe, on=keys, how="left_anti")
+        keep = self._scoped_read(live, touched).join(
+            probe, on=keys, how="left_anti"
+        )
         merged = keep.unionByName(upserts)
-        if may_empty and len(touched_rows) > cap:
+        if may_empty and touched.beyond_cap is not None:
             # same reasoning as delete(): past the cap a bounded
             # link-exclusion set cannot be complete, so a tombstone
             # merge naming >10k partitions rewrites without links
-            untouched = self.read(spark, version=parent).join(
-                F.broadcast(touched),
+            untouched = live.join(
+                F.broadcast(touched.beyond_cap),
                 on=list(self.partition_by),
                 how="left_anti",
             )
@@ -1226,7 +1302,7 @@ class VersionedTable:
                 merged.unionByName(untouched), expected_parent=parent
             )
         excl = (
-            self._touched_leaf_rels(cur_dir, touched)
+            _leaves_named(cur_dir, len(self.partition_by), touched.strings)
             if may_empty
             else frozenset()
         )
@@ -1237,29 +1313,71 @@ class VersionedTable:
             expected_parent=parent,
         )
 
-    def _touched_tuples(self, frame: DataFrame, op: str):
-        """The batch's distinct partition tuples, collected BOUNDED
-        (past the cap the static prune is skipped — a batch touching
-        >10k partitions is rewriting most of the table anyway — rather
-        than growing the plan or the driver); NULL partition values
-        refuse loudly (they cannot address a directory)."""
-        touched = frame.select(*self.partition_by).distinct()
-        cap = 10_000
-        touched_rows = touched.limit(cap + 1).collect()
-        has_null = any(v is None for row in touched_rows for v in row)
-        if not has_null and len(touched_rows) > cap:
-            # the limit() subset is arbitrary — past the cap a NULL
-            # could hide in the uncollected remainder; check the frame
-            null_pred = touched[self.partition_by[0]].isNull()
-            for c in self.partition_by[1:]:
-                null_pred = null_pred | touched[c].isNull()
-            has_null = bool(touched.where(null_pred).take(1))
-        if has_null:
+    def _touched(
+        self, frame: DataFrame, op: str, keys: list[str] | None = None
+    ) -> _Touched:
+        """The touched partitions of a scoped mutation's batch, in ONE
+        bounded action: a group-by on the partition columns, collected
+        to at most the cap (+1 to detect overflow). Each group carries
+        its raw values (the scoped read's static prune), its Spark
+        string casts (the leaf directory names the writer produced)
+        and, given ``keys``, the batch's row count against its distinct
+        key count. Groups holding a NULL partition value or a
+        duplicate key sort FIRST, so either lands in the collected head
+        even past the cap: a NULL refuses loudly (it cannot address a
+        partition directory), and a duplicate key raises MERGE's
+        multiple-source-match error before anything is written — the
+        offending key is looked up only on that rejection path.
+        Partition columns ⊆ keys, so one key never spans two groups.
+        Past the cap, ``beyond_cap`` carries every distinct tuple for
+        the join-scoped fallbacks."""
+        part = list(self.partition_by)
+        n = len(part)
+        aggs = [F.count(F.lit(1)).alias("__rows")]
+        dup = F.lit(0)
+        if keys:
+            aggs.append(F.count_distinct(F.struct(*keys)).alias("__keys"))
+            dup = F.col("__rows") - F.col("__keys")
+        any_null = F.lit(False)
+        for c in part:
+            any_null = any_null | F.col(c).isNull()
+        head = (
+            frame.groupBy(*part)
+            .agg(*aggs)
+            .select(
+                *part,
+                *[F.col(c).cast("string") for c in part],
+                any_null.alias("__null"),
+                dup.alias("__dup"),
+            )
+            .orderBy(F.col("__null").desc(), F.col("__dup").desc())
+            .limit(_TOUCHED_CAP + 1)
+            .collect()
+        )
+        if head and head[0]["__null"]:
             raise ValueError(
                 f"partition-scoped {op} got a NULL partition value; null "
                 "keys cannot address a partition directory"
             )
-        return touched, touched_rows, cap
+        if head and head[0]["__dup"] > 0:
+            offending = (
+                frame.groupBy(*keys)
+                .agg(F.count(F.lit(1)).alias("__rows"))
+                .where(F.col("__rows") > 1)
+                .select(_key_string(keys))
+                .first()[0]
+            )
+            raise ValueError(_duplicate_key_message(op, keys) + offending)
+        return _Touched(
+            values=[tuple(r[:n]) for r in head],
+            strings=frozenset(tuple(r[n : 2 * n]) for r in head),
+            schema=frame.select(*part).schema,
+            beyond_cap=(
+                frame.select(*part).distinct()
+                if len(head) > _TOUCHED_CAP
+                else None
+            ),
+        )
 
     def update_columns(self, changes: DataFrame, keys: list[str]) -> str:
         """S13 at the warehouse tier: bulk COLUMN update (the
@@ -1340,12 +1458,11 @@ class VersionedTable:
             return joined.select(*out)
 
         if not self.partition_by:
-            existing = self.read(spark, version=parent)
-            if not existing.join(
+            if not live.join(
                 renamed.select(*keys), on=keys, how="left_semi"
             ).take(1):
                 return parent  # nothing matches: no commit, no churn
-            return self._commit(apply(existing), expected_parent=parent)
+            return self._commit(apply(live), expected_parent=parent)
         missing = set(self.partition_by) - set(keys)
         if missing:
             # this also forbids SETTING a partition column (it would
@@ -1357,9 +1474,9 @@ class VersionedTable:
                 "otherwise a matched key could live in a partition the "
                 "change batch never names and the prune would miss it"
             )
-        touched, touched_rows, cap = self._touched_tuples(changes, "update")
+        touched = self._touched(changes, "update")
         cur_dir = os.path.join(self.root, "_versions", parent)
-        scoped = self._scoped_read(spark, touched, touched_rows, cap, parent)
+        scoped = self._scoped_read(live, touched)
         if not scoped.join(
             renamed.select(*keys), on=keys, how="left_semi"
         ).take(1):
@@ -1408,28 +1525,29 @@ class VersionedTable:
                 "otherwise a matched key could live in a partition the "
                 "key batch never names and the prune would miss it"
             )
-        touched, touched_rows, cap = self._touched_tuples(probe, "delete")
+        touched = self._touched(keys_df, "delete")
         cur_dir = os.path.join(self.root, "_versions", parent)
-        existing = self._scoped_read(spark, touched, touched_rows, cap, parent)
+        live = self.read(spark, version=parent)
+        existing = self._scoped_read(live, touched)
         if not existing.join(probe, on=keys, how="left_semi").take(1):
             return parent  # nothing matches: no commit, no churn
         keep = existing.join(probe, on=keys, how="left_anti")
-        if len(touched_rows) > cap:
+        if touched.beyond_cap is not None:
             # Past the cap the collected tuple subset is ARBITRARY, so
             # a bounded link-exclusion set cannot be complete — an
             # emptied partition outside it would be resurrected by the
             # linker. A delete naming >10k partitions is a bulk purge:
             # rewrite the whole table (survivors of touched partitions
             # + every untouched partition) with no links.
-            untouched = self.read(spark, version=parent).join(
-                F.broadcast(touched),
+            untouched = live.join(
+                F.broadcast(touched.beyond_cap),
                 on=list(self.partition_by),
                 how="left_anti",
             )
             return self._commit(
                 keep.unionByName(untouched), expected_parent=parent
             )
-        excl = self._touched_leaf_rels(cur_dir, touched)
+        excl = _leaves_named(cur_dir, len(self.partition_by), touched.strings)
         return self._commit(
             keep, link_from=cur_dir, link_exclude=excl, expected_parent=parent
         )
@@ -1486,14 +1604,12 @@ class VersionedTable:
                 f"(table columns: {live.columns})"
             )
         ltypes = dict(live.dtypes)
-        probe = keys_df.select(
+        cast = keys_df.select(
             *[F.col(k).cast(ltypes[k]).alias(k) for k in keys]
-        ).distinct()
+        )
+        probe = cast.distinct()
         if self.partition_by:
-            touched, touched_rows, cap = self._touched_tuples(probe, "delete")
-            scoped = self._scoped_read(
-                spark, touched, touched_rows, cap, parent
-            )
+            scoped = self._scoped_read(live, self._touched(cast, "delete"))
         else:
             scoped = live
         # matched keys only, via the partition-pruned scan: the vector
@@ -1542,50 +1658,6 @@ class VersionedTable:
             shutil.rmtree(self._dv_dir(version), ignore_errors=True)
             raise
         return version
-
-    def _touched_leaf_rels(
-        self, cur_dir: str, touched: DataFrame
-    ) -> frozenset[str]:
-        """Relative leaf-dir paths of the touched partitions, derived
-        by PARSING the old snapshot's directory names (unquote — the
-        direction that needs no escaping rules) and matching their
-        string values against the touched tuples. The tuple strings
-        come from SPARK's string cast (collected from the probe frame),
-        not Python ``str()`` — Spark writes booleans as ``true``/
-        ``false`` where Python renders ``True``/``False``, and the
-        directory matching must use the writer's formatting or an
-        emptied boolean/float partition would miss the exclusion set
-        and be resurrected by the hardlink step."""
-        from urllib.parse import unquote
-
-        str_rows = touched.select(
-            *[F.col(c).cast("string").alias(c) for c in self.partition_by]
-        ).collect()
-        wanted = {
-            tuple(row[c] for c in self.partition_by) for row in str_rows
-        }
-        out: set[str] = set()
-        depth = len(self.partition_by)
-
-        def rec(rel: str, level: int, vals: tuple[str, ...]) -> None:
-            d = os.path.join(cur_dir, rel) if rel else cur_dir
-            if level == depth:
-                if vals in wanted:
-                    out.add(rel)
-                return
-            for entry in os.listdir(d):
-                sub = os.path.join(d, entry)
-                if not os.path.isdir(sub) or "=" not in entry:
-                    continue
-                raw = entry.split("=", 1)[1]
-                rec(
-                    os.path.join(rel, entry) if rel else entry,
-                    level + 1,
-                    vals + (unquote(raw),),
-                )
-
-        rec("", 0, ())
-        return frozenset(out)
 
     def diff(
         self,
@@ -1639,10 +1711,12 @@ class VersionedTable:
         self, spark: SparkSession, max_files_per_partition: int = 4
     ) -> str | None:
         """OPTIMIZE: rewrite only the partitions whose data-file count
-        exceeds the budget down to ONE file each (small files are the
-        silent 100 TB killer — every query pays per-file open/footer
-        cost, and merge commits write up to a task-count of files into
-        each touched partition). Untouched partitions are hardlinked
+        exceeds the budget (small files are the silent 100 TB killer —
+        every query pays per-file open/footer cost). Derived commits
+        are already rebalanced to one file per touched partition below
+        the AQE advisory size; the files compaction finds come from a
+        caller's ``overwrite``, which keeps the layout it was handed.
+        Untouched partitions are hardlinked
         into the new snapshot exactly like a scoped merge, data is
         byte-identical by construction (same rows, new layout), and
         the publish is the same atomic pointer swap — readers never
@@ -1655,9 +1729,11 @@ class VersionedTable:
         Scale shape: the fat-partition scan is a filesystem listing
         (no data read); the rewrite reads only fat partitions via the
         same per-column isin pruning the merge uses (a SUPERSET of the
-        fat set is harmless — it only compacts more), and
-        ``repartition(partition cols)`` routes each partition's rows
-        to one task → one output file.
+        fat set is harmless — it only compacts more), and the commit's
+        rebalance on the partition columns routes each partition's
+        rows to one writer task → one output file per partition up to
+        the AQE advisory size (a larger partition splits into
+        advisory-sized files rather than serializing on one task).
 
         DELETION-VECTOR RECONCILIATION: when the live snapshot carries
         a merge-on-read vector (:meth:`delete_dv`), compaction is where
@@ -1712,23 +1788,21 @@ class VersionedTable:
             # every DV-touched partition must be rewritten so the new
             # snapshot can drop the sidecar; the vector's partition
             # values are bounded-collected like a scoped merge's
-            cap = 10_000
-            dv_touched = dv.select(*self.partition_by).distinct()
-            dv_parts = dv_touched.limit(cap + 1).collect()
-            if len(dv_parts) > cap:
+            touched = self._touched(dv, "compact")
+            if touched.beyond_cap is not None:
                 # a vector spanning >10k partitions is a bulk purge:
                 # fold via a full rewrite, no links
                 return self._commit(
-                    self.read(spark, version=version).repartition(
-                        *[F.col(c) for c in self.partition_by]
-                    ),
+                    self.read(spark, version=version),
                     expected_parent=version,
                 )
-            fat.extend({c: row[c] for c in self.partition_by}
-                       for row in dv_parts)
+            # directory-value strings, the form _walk parses
+            fat.extend(
+                dict(zip(self.partition_by, t)) for t in touched.strings
+            )
             # a partition the vector EMPTIES produces no directory in
             # the rewrite; the linker must not resurrect its old files
-            excl = self._touched_leaf_rels(cur_dir, dv_touched)
+            excl = _leaves_named(cur_dir, depth, touched.strings)
         if not fat:
             return None
         scoped = self.read(spark, version=version)
@@ -1737,45 +1811,46 @@ class VersionedTable:
                 F.col(c).isin(sorted({vals[c] for vals in fat}))
             )
         return self._commit(
-            scoped.repartition(*[F.col(c) for c in self.partition_by]),
+            scoped,
             link_from=cur_dir,
             link_exclude=excl,
             expected_parent=version,
             drop_dv=True,
         )
 
-    def _scoped_read(
-        self,
-        spark: SparkSession,
-        touched: DataFrame,
-        touched_rows,
-        cap: int,
-        version: str | None = None,
-    ) -> DataFrame:
-        """The merge's partition-pruned view of the current snapshot.
-        Two-layer prune. (1) STATIC, per-column isin of the touched
-        values — ONE In-expression per partition column (never an
-        OR-of-AND chain that grows the catalyst tree per partition),
+    def _scoped_read(self, live: DataFrame, touched: _Touched) -> DataFrame:
+        """A scoped mutation's partition-pruned view of its parent
+        snapshot ``live`` (the frame the mutation already opened — no
+        second read). STATIC prune: per-column isin of the collected
+        touched values — ONE In-expression per partition column (never
+        an OR-of-AND chain that grows the catalyst tree per partition),
         pushed into the scan's PartitionFilters so untouched
         partitions' files are never opened (plan-pinned in
-        tests/test_plans.py). Per-column isin is the cartesian
-        superset of the touched tuples — safe (a superset only reads
-        extra) and exact after layer 2. (2) EXACT, a broadcast
-        semi-join on the full tuples. A semi-join alone is NOT enough:
+        tests/test_plans.py). With one partition column the isin IS
+        the touched set. With several it is the cartesian superset of
+        the touched tuples — safe (a superset only reads extra) and
+        made exact by a broadcast semi-join against a local relation
+        of the collected tuples. The semi-join alone is NOT enough:
         dynamic partition pruning does not fire for a broadcast
-        left-semi against a local tuple set (verified on the physical
-        plan — the scan showed isnotnull-only PartitionFilters), so
-        without the static layer every merge would scan the whole
-        table."""
-        existing = self.read(spark, version=version)
-        if len(touched_rows) <= cap:
-            for c in self.partition_by:
-                existing = existing.where(
-                    F.col(c).isin(sorted({row[c] for row in touched_rows}))
-                )
-        return existing.join(
-            F.broadcast(touched), on=list(self.partition_by), how="left_semi"
+        left-semi against a local tuple set, so without the static
+        layer every mutation would scan the whole table. Past the cap
+        there is no bounded value list: the semi-join runs against
+        every distinct tuple instead."""
+        part = list(self.partition_by)
+        if touched.beyond_cap is not None:
+            return live.join(
+                F.broadcast(touched.beyond_cap), on=part, how="left_semi"
+            )
+        for i, c in enumerate(part):
+            live = live.where(
+                F.col(c).isin(sorted({t[i] for t in touched.values}))
+            )
+        if len(part) == 1:
+            return live
+        tuples = live.sparkSession.createDataFrame(
+            touched.values, schema=touched.schema
         )
+        return live.join(F.broadcast(tuples), on=part, how="left_semi")
 
     def _constraint_aggs(self) -> list:
         """Violation-count aggregates, one per declared CHECK

@@ -209,7 +209,7 @@ def test_versioned_merge_scoped_read_prunes_partitions(spark, tmp_path):
     )
     t.overwrite(base)
     touched = spark.sql("SELECT yr FROM VALUES ('1992'), ('1994') AS t(yr)")
-    pruned = t._scoped_read(spark, touched, touched.collect(), cap=10_000)
+    pruned = t._scoped_read(t.read(spark), t._touched(touched, "merge"))
     buf = io.StringIO()
     with contextlib.redirect_stdout(buf):
         pruned.explain("formatted")

@@ -1514,3 +1514,19 @@ def test_streaming_ingest_loop_quota_then_score(spark):
     shutil.rmtree(out, ignore_errors=True)
     shutil.rmtree(chk, ignore_errors=True)
     shutil.rmtree(d, ignore_errors=True)
+
+
+def test_byte_string_parser_matches_spark(spark):
+    """The size-conf parser stream_quota_admit uses agrees with
+    Spark's own JavaUtils.byteStringAsBytes on every suffix form."""
+    from full_docker_etl_spark.queries.sinks_streaming import (
+        _byte_string_as_bytes,
+    )
+
+    jvm = spark._jvm.org.apache.spark.network.util.JavaUtils
+    forms = ["64m", "64mb", "1g", "128k", "10b", "1048576"]
+    for text in forms + [f.upper() for f in forms] + ["2Gb", " 3kB "]:
+        assert _byte_string_as_bytes(text) == jvm.byteStringAsBytes(text), text
+    for bad in ("1.5g", "12q", "", "m"):
+        with pytest.raises(ValueError, match="invalid byte string"):
+            _byte_string_as_bytes(bad)

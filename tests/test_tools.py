@@ -75,6 +75,22 @@ def test_bench_compare_driver_artifact_shape_no_anchor(tmp_path):
     assert "anchor drift" not in out  # needs BOTH sides
 
 
+def test_bench_compare_warns_when_an_artifact_has_no_anchor(tmp_path):
+    """A stdout-only artifact carries no drift anchor, so the compare
+    cannot normalize: it must say so instead of silently printing raw
+    ratios. Two anchored artifacts print no warning."""
+    anchored = {"queries": {"a": 1.0},
+                "anchor": {"query": "g", "start_sec": 0.1, "end_sec": 0.1}}
+    stdout_only = {"parsed": {"queries": {"a": 1.2}}}
+    out, _rc = _run(anchored, stdout_only, tmp_path)
+    assert "warning: new artifact" in out and "no drift anchor" in out
+    assert "warning: old artifact" not in out
+    out, _rc = _run(stdout_only, anchored, tmp_path)
+    assert "warning: old artifact" in out
+    out, _rc = _run(anchored, anchored, tmp_path)
+    assert "warning" not in out
+
+
 def test_bench_compare_driver_artifact_anchor_under_parsed(tmp_path):
     """From r14 the bench stdout line carries the anchor, so driver
     artifacts expose it under ``parsed`` — bench_compare must find it

@@ -174,6 +174,178 @@ def test_delete_boolean_partition_not_resurrected(spark):
     )
 
 
+def test_merge_tombstones_empty_boolean_partition_not_resurrected(spark):
+    """The merge's link-exclusion set matches leaf directories by the
+    Spark string cast its touched-partition action collects: tombstones
+    that empty `flag=true` must not let the hardlink step bring it
+    back (Python would render the value `True`)."""
+    t = _table(keep_versions=2, partition_by=("flag",))
+    t.overwrite(
+        spark.createDataFrame(
+            [(1, True, "x"), (2, True, "y"), (3, False, "z")],
+            "k int, flag boolean, v string",
+        )
+    )
+    gone = spark.createDataFrame(
+        [(1, True, None, True), (2, True, None, True)],
+        "k int, flag boolean, v string, gone boolean",
+    )
+    v2 = t.merge(gone, keys=["k", "flag"], delete_col="gone")
+    assert {r.k for r in t.read(spark).collect()} == {3}
+    assert "flag=true" not in os.listdir(
+        os.path.join(t.root, "_versions", v2)
+    )
+
+
+def _jobs_started(spark) -> int:
+    """Jobs submitted so far, read synchronously from the DAG scheduler
+    (the status store fills asynchronously and evicts old jobs)."""
+    return int(spark.sparkContext._jsc.sc().dagScheduler().numTotalJobs())
+
+
+def _leaf_inodes(t: VersionedTable, version: str) -> dict[str, dict[str, int]]:
+    """{partition leaf: {data file: inode}} of one snapshot."""
+    vdir = os.path.join(t.root, "_versions", version)
+    out: dict[str, dict[str, int]] = {}
+    for base, _, files in os.walk(vdir):
+        data = {
+            f: os.stat(os.path.join(base, f)).st_ino
+            for f in files
+            if f.endswith(".parquet")
+        }
+        if data:
+            out[os.path.relpath(base, vdir)] = data
+    return out
+
+
+def test_scoped_tombstone_merge_single_pass_one_file(spark):
+    """A tombstone merge into one of three partitions: the touched
+    partitions, the NULL refusal and the duplicate-key check come from
+    one action, the write carries no duplicate-key window, and the
+    rebalanced commit leaves ONE file in the touched partition — so
+    the next compaction has nothing to do — while the untouched
+    partitions are hardlinked from the parent."""
+    import pyarrow as pa
+
+    t = _table(partition_by=("st",))
+    base = spark.createDataFrame(
+        [(i, "FOP"[i % 3], float(i)) for i in range(3000)],
+        "k long, st string, v double",
+    )
+    t.overwrite(base.repartition(4))  # overwrite keeps this layout ...
+    v1 = t.compact(spark, max_files_per_partition=1)  # ... compact fixes it
+    assert v1 is not None
+    assert t.read(spark).count() == 3000  # a reader opened the parent
+    o_keys = [k for k in range(3000) if k % 3 == 1]
+    keys = o_keys[:300] + list(range(3000, 3300)) + o_keys[300:600]
+    batch = spark.createDataFrame(
+        pa.table(
+            {
+                "k": pa.array(keys, pa.int64()),
+                "st": ["O"] * len(keys),
+                "v": [-1.0] * len(keys),
+                "_deleted": [False] * 600 + [True] * 300,
+            }
+        )
+    )
+    before = _jobs_started(spark)
+    v2 = t.merge(batch, ["k", "st"], delete_col="_deleted")
+    assert _jobs_started(spark) - before <= 6
+    old, new = _leaf_inodes(t, v1), _leaf_inodes(t, v2)
+    assert len(new["st=O"]) == 1
+    assert new["st=F"] == old["st=F"] and new["st=P"] == old["st=P"]
+    assert t.compact(spark, max_files_per_partition=1) is None
+    assert t.current_version() == v2
+    got = t.read(spark)
+    assert got.count() == 3000
+    assert got.where("v = -1.0").count() == 600
+
+
+def test_scoped_merge_two_partition_columns_rewrites_exact_tuples(spark):
+    """With two partition columns the per-column isin reads the
+    cartesian superset of the touched tuples; the semi-join against
+    the collected tuples must cut it back, so a merge touching (a,1)
+    and (b,2) leaves (a,2) and (b,1) hardlinked and unchanged."""
+    t = _table(partition_by=("a", "b"))
+    t.overwrite(
+        spark.createDataFrame(
+            [(k, a, b, "old") for a in "ab" for b in (1, 2) for k in range(5)],
+            "k int, a string, b int, v string",
+        )
+    )
+    v1 = t.current_version()
+    v2 = t.merge(
+        spark.createDataFrame(
+            [(0, "a", 1, "new"), (9, "b", 2, "new")],
+            "k int, a string, b int, v string",
+        ),
+        ["k", "a", "b"],
+    )
+    old, new = _leaf_inodes(t, v1), _leaf_inodes(t, v2)
+    for leaf in ("a=a/b=2", "a=b/b=1"):
+        assert new[leaf] == old[leaf], leaf
+    for leaf in ("a=a/b=1", "a=b/b=2"):
+        assert not set(new[leaf].values()) & set(old[leaf].values()), leaf
+    got = {(r.k, r.a, int(r.b), r.v) for r in t.read(spark).collect()}
+    want = {(k, a, b, "old") for a in "ab" for b in (1, 2) for k in range(5)}
+    want -= {(0, "a", 1, "old")}
+    want |= {(0, "a", 1, "new"), (9, "b", 2, "new")}
+    assert got == want
+
+
+def test_scoped_mutations_past_the_touched_cap(spark, monkeypatch):
+    """Past the touched-partition cap the collected head is partial:
+    merge and delete scope by join and rewrite without links (an
+    emptied partition outside the head must stay dead), and a NULL
+    partition value or a duplicate key still refuses because those
+    groups sort into the head. The cap is lowered to 1 so three
+    partitions overflow it."""
+    from full_docker_etl_spark.sources import sinks
+
+    monkeypatch.setattr(sinks, "_TOUCHED_CAP", 1)
+    t = _table(partition_by=("p",))
+    t.overwrite(
+        spark.createDataFrame(
+            [(1, "a", "x"), (2, "b", "x"), (3, "c", "x"), (4, "c", "x")],
+            "k int, p string, v string",
+        )
+    )
+    schema = "k int, p string, v string, gone boolean"
+    published = t.versions()
+    for rows, match in (
+        ([(1, "a", "y", False), (2, None, "y", False), (3, "c", "y", False)],
+         "NULL partition value"),
+        ([(1, "a", "y", False), (2, "b", "y", False), (3, "c", "y", False),
+          (3, "c", "z", True)], "duplicate rows for key"),
+    ):
+        with pytest.raises(ValueError, match=match):
+            t.merge(spark.createDataFrame(rows, schema), ["k", "p"],
+                    delete_col="gone")
+        assert t.versions() == published
+    v = t.merge(
+        spark.createDataFrame(
+            [(1, "a", None, True), (2, "b", "y", False), (3, "c", "y", False)],
+            schema,
+        ),
+        ["k", "p"],
+        delete_col="gone",
+    )
+    assert "p=a" not in os.listdir(os.path.join(t.root, "_versions", v))
+    v = t.delete(
+        spark.createDataFrame([(2, "b"), (3, "c")], "k int, p string"),
+        ["k", "p"],
+    )
+    assert "p=b" not in os.listdir(os.path.join(t.root, "_versions", v))
+    t.update_columns(
+        spark.createDataFrame(
+            [(4, "c", "u"), (9, "b", "u")], "k int, p string, v string"
+        ),
+        ["k", "p"],
+    )
+    got = {(r.k, r.p, r.v) for r in t.read(spark).collect()}
+    assert got == {(4, "c", "u")}
+
+
 def test_delete_nothing_matched_is_a_noop(spark):
     """A key batch matching zero rows returns the current version with
     NO new commit — a re-run retention job must not age real snapshots
@@ -1178,6 +1350,37 @@ def test_merge_rejects_duplicate_key_batch(spark):
     with pytest.raises(Exception, match="duplicate rows for key"):
         t.merge(dup, ["k"])
     assert {r.v for r in t.read(spark).collect()} == {"a"}
+
+    # The same rule with tombstones, on both merge shapes: the
+    # unpartitioned merge guards in-plan, the partition-scoped one in
+    # its touched-partition action. Either way the duplicate may sit in
+    # either branch — two upserts, two tombstones, or one of each.
+    schema = "k int, p string, v string, gone boolean"
+    batches = {
+        "two upserts": [(1, "a", "x", False), (1, "a", "y", False)],
+        "two tombstones": [(1, "a", None, True), (1, "a", None, True)],
+        "tombstone and upsert": [(1, "a", None, True), (1, "a", "y", False)],
+    }
+    for part in ((), ("p",)):
+        t = _table(partition_by=part)
+        t.overwrite(
+            spark.createDataFrame(
+                [(1, "a", "live"), (2, "b", "live")],
+                "k int, p string, v string",
+            )
+        )
+        published = t.versions()
+        for name, rows in batches.items():
+            batch = spark.createDataFrame(
+                rows + [(3, "b", "z", False)], schema
+            )
+            with pytest.raises(Exception, match="duplicate rows for key"):
+                t.merge(batch, ["k", "p"], delete_col="gone")
+            assert t.versions() == published, (part, name)
+        assert {(r.k, r.v) for r in t.read(spark).collect()} == {
+            (1, "live"),
+            (2, "live"),
+        }
 
 
 def test_module_upsert_rejects_duplicate_key_batch(spark):

@@ -47,10 +47,12 @@ def load(
     path: str,
 ) -> tuple[dict[str, float], dict[str, tuple[float, float]], dict]:
     """Per-query timings plus the environment-drift anchors — the
-    (start, end) median-of-3 pairs bench.py stamps into both the
-    detail file and the stdout line, so driver BENCH_r{N}.json
-    artifacts carry them under ``parsed`` from r14 on (empty for older
-    driver artifacts). Two anchor shapes: ``scan`` (global_count — a
+    (start, end) median-of-3 pairs bench.py stamps into its detail
+    file. The stdout line does NOT carry them (it is kept slim), so a
+    BENCH_r{N}.json artifact built from stdout has no anchor unless an
+    older bench put one under ``parsed``; :func:`main` warns when
+    either side has none. Two
+    anchor shapes: ``scan`` (global_count — a
     cached-file-index count) and, from late r14, ``cpu`` (synthetic
     shuffle + percentile aggregate) — the r14 evening host slowdown
     moved shuffle-heavy queries 1.5-2x while the scan anchor stayed
@@ -227,6 +229,17 @@ def main() -> int:
             print(
                 f"host[{label}]: start({fmt('start')}) -> "
                 f"end({fmt('end')}){tag}"
+            )
+    for label, path, anchors in (
+        ("old", argv[0], a_old),
+        ("new", argv[1], a_new),
+    ):
+        if not anchors:
+            print(
+                f"warning: {label} artifact {path} carries no drift "
+                "anchor (a stdout-only artifact: bench.py writes the "
+                "anchor to its detail file only) — ratios below are "
+                "raw, not drift-normalized"
             )
     shared = sorted(set(old) & set(new))
     if not shared:
