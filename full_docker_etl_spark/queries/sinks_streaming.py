@@ -404,11 +404,6 @@ def stream_quota_admit(spark: SparkSession, sf_dir: str) -> DataFrame:
             os.utime(os.path.join(src, f), (t1 + 10, t1 + 10))
 
     out, chk = _tmp("quota_out"), _tmp("quota_chk")
-    stream = (
-        spark.readStream.schema("doc_id long, host string")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
     # State-partition sizing (guide §2.2 fewer-larger partitions,
     # VERDICT r18 #5): the stateful exchange's partition count is
     # PINNED into the checkpoint from spark.sql.shuffle.partitions at
@@ -420,8 +415,13 @@ def stream_quota_admit(spark: SparkSession, sf_dir: str) -> DataFrame:
     # shuffles (one state partition per advisory-sized chunk, capped
     # at the session's parallelism): a 100 TB/day firehose saturates
     # to the core count — identical to today's cluster behavior —
-    # while a small source stops paying empty-state overhead. Restored
-    # after the drain; no local hardcode (both inputs are confs).
+    # while a small source stops paying empty-state overhead. No local
+    # hardcode (both inputs are confs). The stream runs on its own
+    # session (shared context, its own SQL conf), so the caller's
+    # spark.sql.shuffle.partitions never changes, not even mid-drain.
+    # A new session starts from the context's conf, not the caller's
+    # runtime settings: the caller's differing SQL confs are copied
+    # over first, so the derived count is the only difference.
     src_bytes = sum(
         os.path.getsize(os.path.join(src, f))
         for f in os.listdir(src)
@@ -439,29 +439,36 @@ def stream_quota_admit(spark: SparkSession, sf_dir: str) -> DataFrame:
             -(-src_bytes // max(1, int(advisory))),
         ),
     )
-    old_sp = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(n_state))
-    try:
-        q = (
-            host_quota_admitter(stream, quota=150)
-            .writeStream.format("parquet")
-            .option("path", out)
-            .option("checkpointLocation", chk)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
+    stream_spark = spark.newSession()
+    for key, value in spark.conf.getAll.items():
+        if key.startswith("spark.sql.") and (
+            stream_spark.conf.get(key, None) != value
+        ):
+            stream_spark.conf.set(key, value)
+    stream_spark.conf.set("spark.sql.shuffle.partitions", str(n_state))
+    stream = (
+        stream_spark.readStream.schema("doc_id long, host string")
+        .option("maxFilesPerTrigger", 1)
+        .parquet(src)
+    )
+    q = (
+        host_quota_admitter(stream, quota=150)
+        .writeStream.format("parquet")
+        .option("path", out)
+        .option("checkpointLocation", chk)
+        .outputMode("append")
+        .trigger(availableNow=True)
+        .start()
+    )
+    # awaitTermination(timeout) returns False WITHOUT raising on
+    # timeout — proceeding would read a partial sink (a value-
+    # mismatch that masquerades as an admitter bug) and leak a
+    # running query into the shared context
+    if not q.awaitTermination(300):
+        q.stop()
+        raise TimeoutError(
+            "stream_quota_admit: AvailableNow drain exceeded 300 s"
         )
-        # awaitTermination(timeout) returns False WITHOUT raising on
-        # timeout — proceeding would read a partial sink (a value-
-        # mismatch that masquerades as an admitter bug) and leak a
-        # running query into the shared session
-        if not q.awaitTermination(300):
-            q.stop()
-            raise TimeoutError(
-                "stream_quota_admit: AvailableNow drain exceeded 300 s"
-            )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old_sp)
     return spark.read.parquet(out).select("host", "doc_id", "host_seq")
 
 

@@ -738,7 +738,7 @@ def test_containment_store_append_crash_retry_no_double_count(
     # crash the append AFTER all three data writes, BEFORE the publish
     real_publish = D._store_manifest_publish
 
-    def boom(p, batch_id):
+    def boom(p, batch_id, schemas=None):
         raise RuntimeError("simulated crash before manifest publish")
 
     monkeypatch.setattr(D, "_store_manifest_publish", boom)
@@ -1455,6 +1455,230 @@ def test_substring_store_migrate_nested_bucket_partitions(spark, tmp_path):
     assert len(D._store_manifest(old)) == 2
 
 
+def _per_scheme_union_rows(docs, schemes):
+    """The per-scheme band-row formulation ``_ensemble_rows`` replaced:
+    one scan and one sequence-explode per scheme, unioned — the
+    reference the one-scan generator must reproduce row for row (stores
+    written by it must stay probe-compatible)."""
+    out = None
+    for shift, r, nb in schemes:
+        part = docs.select(
+            "doc_id", "sz",
+            (F.col("p") + shift).alias("p"), "sig",
+            F.explode(F.sequence(F.lit(0), F.lit(nb - 1))).alias("band"),
+        ).select(
+            "doc_id", "sz", "p",
+            F.lit(r).alias("r"), "band",
+            F.xxhash64(
+                F.slice("sig", F.col("band") * r + 1, r)
+            ).alias("bucket"),
+        )
+        out = part if out is None else out.unionByName(part)
+    return out
+
+
+def test_ensemble_rows_one_scan_matches_per_scheme_union(spark):
+    """_ensemble_rows builds every scheme's band rows from ONE scan of
+    its input: the same schema and the same multiset of (doc_id, sz, p,
+    r, band, bucket) as the per-scheme union for the default probe
+    specs, a widened max_gap and the index schemes, and an executed
+    plan over a persisted frame that scans it exactly once (the union
+    scans it once per scheme, each scan its own job under AQE)."""
+    from collections import Counter
+
+    from full_docker_etl_spark.operators import dedup as D
+
+    docs = D._ensemble_docs(
+        _quote_corpus(spark), "text", "doc_id", 5, 32
+    ).cache()
+    try:
+        specs = D._ensemble_gap_specs(0.9, 32, 0.95, 0.8)
+        wide = D._ensemble_gap_specs(0.9, 32, 0.95, 0.8, max_gap=5)
+        for schemes in (specs, wide, D._ensemble_index_schemes(specs)):
+            want = _per_scheme_union_rows(docs, schemes)
+            got = D._ensemble_rows(docs, schemes)
+            assert got.schema == want.schema
+            want_rows = Counter(want.collect())
+            assert want_rows  # non-vacuous
+            assert Counter(got.collect()) == want_rows, schemes
+
+        rows = D._ensemble_rows(docs, specs)
+        rows.collect()
+        plan = rows._jdf.queryExecution().executedPlan().toString()
+        assert plan.count("InMemoryTableScan") == 1, plan
+    finally:
+        docs.unpersist()
+
+
+#: Store family -> (physical tables, committed-table reader name).
+_STORE_FAMILIES = {
+    "containment": ("_CONTAINMENT_TABLES", "_store_read_committed"),
+    "minhash": ("_MINHASH_TABLES", "_store_read_committed"),
+    "substring": ("_SUBSTRING_TABLES", "_read_store_table"),
+    "df": ("_DF_TABLES", "_store_read_committed"),
+}
+
+
+def _jobs_started(spark) -> int:
+    """Jobs submitted so far, read synchronously from the DAG scheduler
+    (the status store fills asynchronously and evicts old jobs)."""
+    return int(spark.sparkContext._jsc.sc().dagScheduler().numTotalJobs())
+
+
+def _partition_filters(df) -> str:
+    """The scan's PartitionFilters with expression ids stripped."""
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    (found,) = re.findall(r"PartitionFilters: (\[.*?\]), PushedFilters", plan)
+    return re.sub(r"#\d+L?", "", found)
+
+
+def _batch_dirs(path) -> dict:
+    import os
+
+    return {
+        table: sorted(os.listdir(os.path.join(path, table)))
+        for table in sorted(os.listdir(path))
+        if os.path.isdir(os.path.join(path, table))
+    }
+
+
+@pytest.mark.parametrize("family", sorted(_STORE_FAMILIES))
+def test_store_tables_open_with_pinned_schema_and_no_job(
+    spark, tmp_path, family
+):
+    """Every store write pins its tables' data schemas in the manifest
+    with the first batch; after build + append each committed table
+    opens with that schema and starts no job (no footer inference),
+    with the schema and the ``batch IN (...)`` PartitionFilters a plain
+    inferring read of the table root gives."""
+    from full_docker_etl_spark.operators import dedup as D
+
+    tables_attr, reader = _STORE_FAMILIES[family]
+    df = _quote_corpus(spark)
+    path = str(tmp_path / "store")
+    getattr(D, f"{family}_store_build")(
+        df.where("doc_id % 2 = 0"), path, "text", "doc_id"
+    )
+    getattr(D, f"{family}_store_append")(
+        df.where("doc_id % 2 = 1"), path, "text", "doc_id"
+    )
+    doc = D._store_manifest_load(path)
+    tables = getattr(D, tables_attr)
+    assert len(doc["batches"]) == 2
+    assert sorted(doc["schemas"]) == sorted(tables)
+
+    for table in tables:
+        before = _jobs_started(spark)
+        opened = getattr(D, reader)(spark, path, table)
+        assert _jobs_started(spark) - before == 0, table
+        plain = (
+            spark.read.parquet(f"{path}/{table}")
+            .where(F.col("batch").isin(doc["batches"]))
+            .drop("batch")
+        )
+        assert opened.schema == plain.schema, table
+        filters = _partition_filters(opened)
+        assert "IN (" in filters, filters
+        assert filters == _partition_filters(plain), table
+        assert opened.count() == plain.count() > 0, table
+
+
+@pytest.mark.parametrize("family", sorted(_STORE_FAMILIES))
+def test_store_append_of_another_schema_raises_before_writing(
+    spark, tmp_path, family
+):
+    """An append whose frames would land another schema than the one
+    the store pinned raises before any write: no batch directory
+    appears and the manifest is byte-for-byte unchanged. The sketch
+    stores get ``int`` ids into a ``bigint``-id store; the df store
+    carries no ids, so its pinned counts schema is forged instead."""
+    from pyspark.sql.types import LongType, StructField, StructType
+
+    from full_docker_etl_spark.operators import dedup as D
+
+    df = _quote_corpus(spark)
+    path = str(tmp_path / "store")
+    getattr(D, f"{family}_store_build")(
+        df.where("doc_id % 2 = 0"), path, "text", "doc_id"
+    )
+    arrival = df.where("doc_id % 2 = 1")
+    if family == "df":
+        doc = D._store_manifest_load(path)
+        doc["schemas"]["counts"] = StructType(
+            [StructField("sh", LongType()), StructField("n", LongType())]
+        ).jsonValue()
+        D._store_manifest_write(
+            path, doc["batches"], doc["displaced"], doc["schemas"]
+        )
+    else:
+        arrival = arrival.withColumn("doc_id", F.col("doc_id").cast("int"))
+    with open(D._store_manifest_path(path)) as fh:
+        manifest = fh.read()
+    dirs = _batch_dirs(path)
+
+    with pytest.raises(ValueError, match="schema mismatch"):
+        getattr(D, f"{family}_store_append")(arrival, path, "text", "doc_id")
+    with open(D._store_manifest_path(path)) as fh:
+        assert fh.read() == manifest
+    assert _batch_dirs(path) == dirs
+
+
+@pytest.mark.parametrize("family", ["containment", "minhash", "substring"])
+def test_migrated_store_without_pinned_schemas_reads_and_probes(
+    spark, tmp_path, family
+):
+    """A store folded by ``*_store_migrate`` has a manifest with no
+    schemas: its tables open by inference with the schema a native
+    store's pinned open gives, its probe serves exactly the native
+    store's pairs, and an append keeps it schemaless (the new batch
+    cannot vouch for the migrated files)."""
+    import os
+    import shutil
+
+    from full_docker_etl_spark.operators import dedup as D
+
+    tables_attr, reader = _STORE_FAMILIES[family]
+    tables = getattr(D, tables_attr)
+    store_docs = _quote_corpus(spark)
+    # re-delivered copies under new ids: a duplicate for every tier
+    batch = store_docs.where("doc_id < 3").withColumn(
+        "doc_id", F.col("doc_id") + 1000
+    )
+    probe = getattr(D, f"{family}_probe_store")
+
+    ref = str(tmp_path / "ref")
+    getattr(D, f"{family}_store_build")(store_docs, ref, "text", "doc_id")
+    want = {tuple(r) for r in probe(batch, ref, "text", "doc_id").collect()}
+    assert want
+
+    # forge the pre-manifest layout: flatten each table's batch dir
+    old = str(tmp_path / "old")
+    shutil.copytree(ref, old)
+    os.unlink(D._store_manifest_path(old))
+    for table in tables:
+        tdir = os.path.join(old, table)
+        (bdir,) = [e for e in os.listdir(tdir) if e.startswith("batch=")]
+        for entry in os.listdir(os.path.join(tdir, bdir)):
+            os.rename(
+                os.path.join(tdir, bdir, entry), os.path.join(tdir, entry)
+            )
+        os.rmdir(os.path.join(tdir, bdir))
+    getattr(D, f"{family}_store_migrate")(old)
+    assert D._store_manifest_load(old)["schemas"] == {}
+
+    for table in tables:
+        before = _jobs_started(spark)
+        opened = getattr(D, reader)(spark, old, table)
+        assert _jobs_started(spark) - before >= 1, table  # inferred
+        assert opened.schema == getattr(D, reader)(spark, ref, table).schema
+    got = {tuple(r) for r in probe(batch, old, "text", "doc_id").collect()}
+    assert got == want
+
+    getattr(D, f"{family}_store_append")(batch, old, "text", "doc_id")
+    doc = D._store_manifest_load(old)
+    assert len(doc["batches"]) == 2 and doc["schemas"] == {}
+
+
 def test_containment_probe_cache_released_between_batches(spark):
     """Round-15 review finding: containment_probe_store persisted the
     batch sketch but gave callers no way to release it, so repeated
@@ -1956,7 +2180,7 @@ def test_df_store_append_crash_retry_no_double_count(spark, monkeypatch):
     # crash the append AFTER the partial lands, BEFORE the publish
     real_publish = D._store_manifest_publish
 
-    def boom(p, batch_id):
+    def boom(p, batch_id, schemas=None):
         raise RuntimeError("simulated crash before manifest publish")
 
     monkeypatch.setattr(D, "_store_manifest_publish", boom)
@@ -2672,7 +2896,7 @@ def test_substring_store_append_crash_retry_no_double_count(
     D.substring_store_build(corpus.where("doc_id = 1"), path, "text", "doc_id")
     real_publish = D._store_manifest_publish
 
-    def boom(p, batch_id):
+    def boom(p, batch_id, schemas=None):
         raise RuntimeError("simulated crash before manifest publish")
 
     monkeypatch.setattr(D, "_store_manifest_publish", boom)
@@ -3220,7 +3444,7 @@ def test_minhash_store_crash_retry_and_compact(spark, docs, tmp_path, monkeypatc
     D.minhash_store_build(s1, path, "text", "doc_id")
     real_publish = D._store_manifest_publish
 
-    def boom(p, batch_id):
+    def boom(p, batch_id, schemas=None):
         raise RuntimeError("simulated crash before manifest publish")
 
     monkeypatch.setattr(D, "_store_manifest_publish", boom)

@@ -1530,3 +1530,37 @@ def test_byte_string_parser_matches_spark(spark):
     for bad in ("1.5g", "12q", "", "m"):
         with pytest.raises(ValueError, match="invalid byte string"):
             _byte_string_as_bytes(bad)
+
+
+def test_stream_quota_admit_keeps_caller_shuffle_partitions(
+    spark, sf_dir, monkeypatch
+):
+    """stream_quota_admit sizes its state partitions from source volume
+    on the stream's own session: the caller's
+    spark.sql.shuffle.partitions reads unchanged while the drain runs
+    and after it, and the stream's session carries the derived count
+    (one partition: the sf0.001 source is far below one advisory
+    partition)."""
+    from pyspark.sql.streaming.query import StreamingQuery
+
+    from full_docker_etl_spark.registry import all_specs
+
+    key = "spark.sql.shuffle.partitions"
+    seen = {}
+    real_await = StreamingQuery.awaitTermination
+
+    def await_and_look(self, *args, **kwargs):
+        seen["caller"] = spark.conf.get(key)
+        seen["stream"] = self._jsq.sparkSession().conf().get(key)
+        return real_await(self, *args, **kwargs)
+
+    monkeypatch.setattr(StreamingQuery, "awaitTermination", await_and_look)
+    old = spark.conf.get(key)
+    spark.conf.set(key, "7")
+    try:
+        rows = all_specs()["stream_quota_admit"].fn(spark, sf_dir).collect()
+        assert rows
+        assert seen == {"caller": "7", "stream": "1"}
+        assert spark.conf.get(key) == "7"
+    finally:
+        spark.conf.set(key, old)

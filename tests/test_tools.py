@@ -415,6 +415,58 @@ def test_profile_query_counts_jobs_by_watermark_not_retained_list():
     assert mod._layers(spark, 100, 103) == {"jobs": 3, "stages": 6, "tasks": 15}
 
 
+def test_job_profile_takes_rep_jobs_by_watermark_not_status_store():
+    """job_profile starts each rep at the DAG scheduler's job-id
+    watermark, not at max job id + 1 from the status store: that store
+    fills asynchronously (its newest jobs may not be there yet when the
+    rep starts) and evicts old ones, so a rep gets exactly the jobs
+    whose ids lie between the watermarks taken around it."""
+    import importlib.util
+    from types import SimpleNamespace as NS
+
+    spec = importlib.util.spec_from_file_location(
+        "job_profile_mod", str(REPO / "tools" / "job_profile.py")
+    )
+    mod = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(mod)
+
+    def some(v):
+        return NS(isDefined=lambda: True, get=lambda: v)
+
+    def job(jid, tasks):
+        return NS(
+            jobId=lambda: jid,
+            submissionTime=lambda: some(NS(getTime=lambda: 1000 * jid)),
+            completionTime=lambda: some(NS(getTime=lambda: 1000 * jid + 7)),
+            description=lambda: some(f"j{jid}"),
+            numCompletedTasks=lambda: tasks,
+            stageIds=lambda: NS(size=lambda: 1),
+        )
+
+    # jobs 0-99 ran earlier (97-99 still retained); 100 and 101 were
+    # submitted before the rep but have not reached the store yet; the
+    # rep ran 102-104
+    retained = [job(j, 1) for j in (97, 98, 99)]
+    store = NS(jobsList=lambda _: NS(
+        size=lambda: len(retained), apply=lambda i: retained[i]
+    ))
+    total = [102]
+    sc = NS(
+        statusStore=lambda: store,
+        dagScheduler=lambda: NS(numTotalJobs=lambda: total[0]),
+    )
+    spark = NS(sparkContext=NS(_jsc=NS(sc=lambda: sc)))
+    lo = mod._next_job_id(spark)
+    assert lo == 102
+    retained += [job(100, 1), job(101, 1)]
+    retained += [job(102, 2), job(103, 3), job(104, 8)]
+    total[0] = 105
+    rows = mod._rep_jobs(spark, lo, mod._next_job_id(spark))
+    assert [r["job"] for r in rows] == [102, 103, 104]
+    assert [r["tasks"] for r in rows] == [2, 3, 8]
+    assert rows[0]["dur_ms"] == 7 and rows[0]["desc"] == "j102"
+
+
 def test_bench_compare_adjudicate_labels_drift_vs_real(monkeypatch):
     """--adjudicate's verdict arithmetic: HEAD at-or-faster than the
     old commit in the same session = session-drift; HEAD slower past

@@ -1,8 +1,9 @@
 #!/usr/bin/env python
 """Per-JOB attribution for one registered query (optimization guide
 §1/§7 without a UI): run the query through the noop sink in a
-bench-identical session, then dump every Spark job it launched —
-submission time, duration, task count, description — from the
+bench-identical session, then dump every Spark job it launched (the
+ids between the DAG scheduler's job-id watermarks taken around each
+rep) — submission time, duration, task count, description — from the
 AppStatusStore. This is how a 130-sequential-small-jobs query
 (store protocols, CC loops) gets its wall attributed to phases.
 
@@ -21,6 +22,55 @@ import sys
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
+
+def _next_job_id(spark) -> int:
+    """The id the next job will get, read synchronously from the DAG
+    scheduler. The status store cannot give it: the listener bus fills
+    it asynchronously, and it evicts jobs past spark.ui.retainedJobs, so
+    neither its list size nor its max job id marks where a rep starts."""
+    return int(spark.sparkContext._jsc.sc().dagScheduler().numTotalJobs())
+
+
+def _rep_jobs(spark, lo: int, hi: int) -> list[dict]:
+    """One row per job with id in [lo, hi), in id order, from the status
+    store, which is waited on (briefly) until it holds every job of the
+    range, completed."""
+    store = spark.sparkContext._jsc.sc().statusStore()
+    deadline = time.monotonic() + 5.0
+    while True:
+        jobs = store.jobsList(None)
+        mine = [
+            j for j in (jobs.apply(i) for i in range(jobs.size()))
+            if lo <= j.jobId() < hi
+        ]
+        done = all(j.completionTime().isDefined() for j in mine)
+        if (len(mine) == hi - lo and done) or time.monotonic() > deadline:
+            break
+        time.sleep(0.05)
+    rows = []
+    for j in mine:
+        sub = j.submissionTime()
+        comp = j.completionTime()
+        sub_ms = sub.get().getTime() if sub.isDefined() else None
+        dur_ms = (
+            comp.get().getTime() - sub_ms
+            if comp.isDefined() and sub_ms is not None
+            else None
+        )
+        desc = j.description()
+        rows.append(
+            {
+                "job": j.jobId(),
+                "t_sub_ms": sub_ms,
+                "dur_ms": dur_ms,
+                "tasks": j.numCompletedTasks(),
+                "stages": j.stageIds().size(),
+                "desc": desc.get() if desc.isDefined() else "",
+            }
+        )
+    rows.sort(key=lambda r: r["job"])
+    return rows
 
 
 def main() -> int:
@@ -57,53 +107,13 @@ def main() -> int:
         _prime, "id long"
     ).count()
 
-    store = spark.sparkContext._jsc.sc().statusStore()
-
-    def _next_job_id() -> int:
-        # Watermark with max(jobId)+1, NOT the retained-list size: the
-        # status store evicts beyond spark.ui.retainedJobs, so once
-        # eviction starts size < next job id and prior reps' jobs leak
-        # into the current rep's attribution (ADVICE r18).
-        jobs = store.jobsList(None)
-        hi = -1
-        for i in range(jobs.size()):
-            jid = jobs.apply(i).jobId()
-            if jid > hi:
-                hi = jid
-        return hi + 1
-
     for rep in range(args.repeat):
-        before = _next_job_id()
+        before = _next_job_id(spark)
         t0 = time.perf_counter()
         df = specs[args.query].fn(spark, sf_dir)
         df.write.format("noop").mode("overwrite").save()
         wall = time.perf_counter() - t0
-        jobs = store.jobsList(None)
-        rows = []
-        for i in range(jobs.size()):
-            j = jobs.apply(i)
-            jid = j.jobId()
-            sub = j.submissionTime()
-            comp = j.completionTime()
-            sub_ms = sub.get().getTime() if sub.isDefined() else None
-            dur_ms = (
-                comp.get().getTime() - sub_ms
-                if comp.isDefined() and sub_ms is not None
-                else None
-            )
-            desc = j.description()
-            rows.append(
-                {
-                    "job": jid,
-                    "t_sub_ms": sub_ms,
-                    "dur_ms": dur_ms,
-                    "tasks": j.numCompletedTasks(),
-                    "stages": j.stageIds().size(),
-                    "desc": desc.get() if desc.isDefined() else "",
-                }
-            )
-        rows = [r for r in rows if r["job"] >= before]
-        rows.sort(key=lambda r: r["job"])
+        rows = _rep_jobs(spark, before, _next_job_id(spark))
         t_base = rows[0]["t_sub_ms"] if rows else 0
         busy = sum(r["dur_ms"] or 0 for r in rows)
         print(
