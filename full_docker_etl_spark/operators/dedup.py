@@ -35,6 +35,7 @@ from pyspark.sql import functions as F
 # serialize the whole tier on one core (see operators/util.spread).
 from full_docker_etl_spark.operators.util import rebalanced
 from full_docker_etl_spark.operators.util import spread as _spread
+from full_docker_etl_spark.sources.catalog import data_schema, read_parquet
 
 
 def _overlap(*thunks) -> None:
@@ -1213,58 +1214,53 @@ _STORE_PARTITION_COLS = (_STORE_BATCH_COL, "side", "bkt")
 
 def _store_schemas(path: str, **frames: DataFrame) -> dict[str, dict]:
     """The data schemas of one batch's table frames (partition columns
-    excluded, JSON form) for :func:`_store_manifest_publish` to pin —
-    checked first against the schemas the store already pinned, so an
-    append whose frames would land another schema (``int`` ids into a
-    ``bigint``-id store, say) raises before anything is written.
-    Nullability is not compared: a parquet read makes every column
-    nullable anyway. A store with no manifest yet (a build) or with no
-    pinned schemas (an earlier release, ``*_store_migrate``) checks
-    nothing."""
+    excluded, JSON form — :func:`~full_docker_etl_spark.sources.catalog.data_schema`)
+    for :func:`_store_manifest_publish` to pin — checked first against
+    the schemas the store already pinned, so an append whose frames
+    would land another schema (``int`` ids into a ``bigint``-id store,
+    say) raises before anything is written. Nullability is not
+    compared: a parquet read makes every column nullable anyway. A
+    store with no manifest yet (a build) or with no pinned schemas (an
+    earlier release, ``*_store_migrate``) checks nothing."""
     import os
 
     from pyspark.sql.types import StructType
 
     schemas = {
-        table: StructType(
-            [f for f in df.schema.fields if f.name not in _STORE_PARTITION_COLS]
-        )
+        table: data_schema(df, _STORE_PARTITION_COLS)
         for table, df in frames.items()
     }
     if os.path.exists(_store_manifest_path(path)):
         pinned = _store_manifest_load(path)["schemas"]
         for table, schema in schemas.items():
-            want = pinned.get(table)
-            if want is None:
+            if table not in pinned:
                 continue
-            want = StructType.fromJson(want).simpleString()
-            if schema.simpleString() != want:
+            want, got = (
+                StructType.fromJson(s).simpleString()
+                for s in (pinned[table], schema)
+            )
+            if got != want:
                 raise ValueError(
                     f"schema mismatch: store table {table!r} at {path} "
                     f"is pinned to {want} but this batch writes "
-                    f"{schema.simpleString()} — nothing was written"
+                    f"{got} — nothing was written"
                 )
-    return {table: schema.jsonValue() for table, schema in schemas.items()}
+    return schemas
 
 
 def _store_scan(spark: SparkSession, path: str, table: str) -> DataFrame:
     """One store table restricted to COMMITTED batches (manifest
     ``isin`` → batch-partition pruning: orphans from a crashed write
-    are never scanned), ``batch`` column kept. Opened with the
-    manifest's pinned schema when it has one — no footer-inference
-    job — and by inference otherwise (a manifest from an earlier
-    release or ``*_store_migrate``); partition columns are discovered
-    from paths either way."""
-    from pyspark.sql.types import StructType
-
+    are never scanned), ``batch`` column kept. Opened through
+    :func:`~full_docker_etl_spark.sources.catalog.read_parquet` with
+    the manifest's pinned schema — no footer-inference job — or, when
+    the manifest carries none (an earlier release or
+    ``*_store_migrate``), by memoized inference; partition columns are
+    discovered from paths either way."""
     doc = _store_manifest_load(path)
-    pinned = doc["schemas"].get(table)
-    reader = spark.read
-    if pinned is not None:
-        reader = reader.schema(StructType.fromJson(pinned))
-    return reader.parquet(f"{path}/{table}").where(
-        F.col(_STORE_BATCH_COL).isin(doc["batches"])
-    )
+    return read_parquet(
+        spark, f"{path}/{table}", doc["schemas"].get(table)
+    ).where(F.col(_STORE_BATCH_COL).isin(doc["batches"]))
 
 
 def _store_read_committed(spark: SparkSession, path: str, table: str):

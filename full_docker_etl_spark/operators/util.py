@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+import re
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -112,3 +114,33 @@ def release_checkpoint(df: DataFrame) -> None:
             plan.rdd().unpersist(False)
     except Exception:
         pass
+
+
+#: Power-of-1024 exponent of each size-conf suffix Spark accepts.
+_BYTE_UNITS = {
+    "b": 0, "k": 1, "kb": 1, "m": 2, "mb": 2, "g": 3, "gb": 3,
+    "t": 4, "tb": 4, "p": 5, "pb": 5,
+}
+
+
+def byte_string_as_bytes(text: str) -> int:
+    """A Spark size conf (``64m``, ``1g``, ``10b``, a bare byte count;
+    any case) in bytes — the parse ``JavaUtils.byteStringAsBytes``
+    applies, done here instead of through a private JVM class."""
+    m = re.fullmatch(r"([0-9]+)([a-z]+)?", text.strip().lower())
+    unit = (m.group(2) or "b") if m else None
+    if unit not in _BYTE_UNITS:
+        raise ValueError(
+            f"invalid byte string {text!r}: expected a whole number with "
+            f"an optional suffix in {sorted(_BYTE_UNITS)}"
+        )
+    return int(m.group(1)) * 1024 ** _BYTE_UNITS[unit]
+
+
+def advisory_partition_bytes(spark) -> int:
+    """The session's ``spark.sql.adaptive.advisoryPartitionSizeInBytes``
+    in bytes: the size AQE aims each post-shuffle partition (and so
+    each rebalanced write's file) at."""
+    return byte_string_as_bytes(
+        spark.conf.get("spark.sql.adaptive.advisoryPartitionSizeInBytes", "64m")
+    )

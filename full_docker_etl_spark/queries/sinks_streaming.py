@@ -8,13 +8,15 @@ STORED bytes, not just the in-memory frame.
 
 from __future__ import annotations
 
-import re
 import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from full_docker_etl_spark.operators.util import fresh_checkpoint
+from full_docker_etl_spark.operators.util import (
+    advisory_partition_bytes,
+    fresh_checkpoint,
+)
 from full_docker_etl_spark.registry import query
 from full_docker_etl_spark.sources.catalog import load_table
 from full_docker_etl_spark.sources.sinks import (
@@ -33,27 +35,6 @@ from full_docker_etl_spark.streaming.events import (
 
 def _tmp(name: str) -> str:
     return tempfile.mkdtemp(prefix=f"fde_{name}_") + "/t"
-
-
-#: Power-of-1024 exponent of each size-conf suffix Spark accepts.
-_BYTE_UNITS = {
-    "b": 0, "k": 1, "kb": 1, "m": 2, "mb": 2, "g": 3, "gb": 3,
-    "t": 4, "tb": 4, "p": 5, "pb": 5,
-}
-
-
-def _byte_string_as_bytes(text: str) -> int:
-    """A Spark size conf (``64m``, ``1g``, ``10b``, a bare byte count;
-    any case) in bytes — the parse ``JavaUtils.byteStringAsBytes``
-    applies, done here instead of through a private JVM class."""
-    m = re.fullmatch(r"([0-9]+)([a-z]+)?", text.strip().lower())
-    unit = (m.group(2) or "b") if m else None
-    if unit not in _BYTE_UNITS:
-        raise ValueError(
-            f"invalid byte string {text!r}: expected a whole number with "
-            f"an optional suffix in {sorted(_BYTE_UNITS)}"
-        )
-    return int(m.group(1)) * 1024 ** _BYTE_UNITS[unit]
 
 
 @query(
@@ -427,11 +408,7 @@ def stream_quota_admit(spark: SparkSession, sf_dir: str) -> DataFrame:
         for f in os.listdir(src)
         if f.endswith(".parquet")
     )
-    advisory = _byte_string_as_bytes(
-        spark.conf.get(
-            "spark.sql.adaptive.advisoryPartitionSizeInBytes", "64m"
-        )
-    )
+    advisory = advisory_partition_bytes(spark)
     n_state = max(
         1,
         min(

@@ -67,6 +67,14 @@ _CLUSTER_READY_DEFAULTS = {
     # value re-inference would silently turn a string partition key
     # ('yr=2001') into an int, breaking round-trip schema stability.
     "spark.sql.sources.partitionColumnTypeInference.enabled": "false",
+    # Parquet TIMESTAMP(NANOS) columns (the testdata ``events.ts`` of
+    # earlier rounds) are illegal to Spark's reader unless read as raw
+    # nanos longs; load_table rebuilds microsecond timestamps from
+    # them. Declared here, for the whole session, because the scan
+    # needs it while it runs: set by load_table on first use, it would
+    # change every later parquet read (and every memoized schema key)
+    # depending on whether such a table had been opened yet.
+    "spark.sql.legacy.parquet.nanosAsLong": "true",
 }
 
 # Runtime-settable subset (SQLConf) — applicable to a session we did not

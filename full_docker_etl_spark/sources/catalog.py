@@ -15,9 +15,11 @@ import glob
 import os
 import threading
 from collections import OrderedDict
+from collections.abc import Iterable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 # Driver-generated synthetic tables (TESTDATA.md).
 TESTDATA_TABLES = (
@@ -36,11 +38,13 @@ TESTDATA_TABLES = (
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 
+_NANOS_AS_LONG = "spark.sql.legacy.parquet.nanosAsLong"
+
 # Session confs whose values change what Spark infers from a parquet
 # footer or a partition directory tree: part of every memoized schema's
 # key, so flipping one re-infers instead of replaying a stale schema.
 _INFERENCE_CONFS = (
-    "spark.sql.legacy.parquet.nanosAsLong",
+    _NANOS_AS_LONG,
     "spark.sql.parquet.inferTimestampNTZ.enabled",
     "spark.sql.parquet.binaryAsString",
     "spark.sql.parquet.int96AsTimestamp",
@@ -91,11 +95,31 @@ def _read_memoized(
     return df
 
 
-def read_parquet(spark: SparkSession, path: str) -> DataFrame:
-    """``spark.read.parquet(path)`` that infers each path's schema once.
+def data_schema(df: DataFrame, partition_cols: Iterable[str] = ()) -> dict:
+    """``df``'s schema in Spark's JSON form with ``partition_cols``
+    left out: what a writer pins for :func:`read_parquet`'s ``schema``.
+    Partition columns are never pinned — the directory paths supply
+    them on every read, with their types decided by the session's
+    ``spark.sql.sources.partitionColumnTypeInference.enabled`` exactly
+    as an inferred read decides them."""
+    drop = set(partition_cols)
+    return StructType([f for f in df.schema.fields if f.name not in drop]).jsonValue()
 
-    Inference reads a footer in a one-task Spark job on every open; here
-    the schema Spark inferred is remembered and handed back through
+
+def read_parquet(
+    spark: SparkSession, path: str, schema: dict | None = None
+) -> DataFrame:
+    """``spark.read.parquet(path)`` that starts no footer-inference job
+    when it need not.
+
+    With ``schema`` (a data schema recorded by the writer, see
+    :func:`data_schema`) the path is opened with it directly: the
+    writer already knew what it wrote, so nothing is inferred. Spark
+    reads a user schema as nullable and appends the partition columns
+    it discovers from paths, so the frame equals an inferred open.
+
+    Without one, inference reads a footer in a one-task Spark job; the
+    schema Spark inferred is remembered and handed back through
     ``spark.read.schema(...)`` on later opens, which start no job.
 
     The memo key is the real path, its ``os.stat`` signature
@@ -109,6 +133,8 @@ def read_parquet(spark: SparkSession, path: str) -> DataFrame:
     memo is a fixed-size LRU. Only the schema is remembered — every
     call builds a fresh relation with fresh attribute ids, so two opens
     of one path self-join unambiguously."""
+    if schema is not None:
+        return spark.read.schema(StructType.fromJson(schema)).parquet(path)
     return _read_memoized(spark, path, _memo_entry(path))
 
 
@@ -146,10 +172,15 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     pushdown + column pruning for free (SURVEY.md §4.1).
 
     TIMESTAMP(NANOS) columns (e.g. the testdata ``events.ts``) are
-    illegal to Spark's parquet reader; we read them as raw nanos longs
-    (``spark.sql.legacy.parquet.nanosAsLong``) and rebuild proper
-    timestamps at microsecond precision — the same truncation DuckDB's
-    ``epoch_us`` applies, so oracle comparisons agree.
+    illegal to Spark's parquet reader; they are read as raw nanos longs
+    and rebuilt as timestamps at microsecond precision — the same
+    truncation DuckDB's ``epoch_us`` applies, so oracle comparisons
+    agree. Reading them as longs needs
+    ``spark.sql.legacy.parquet.nanosAsLong=true`` for as long as the
+    scan runs, so it is a session default (``session.py``) and this
+    function never sets it: a session with it off gets a ``ValueError``
+    naming the conf, instead of a silent session-wide flip that would
+    change every later parquet read in the session.
 
     The schema and the nanos-column list are inferred once per file
     signature (see :func:`read_parquet`): the memo is keyed by the real
@@ -160,8 +191,13 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     path = os.path.join(sf_dir, f"{name}.parquet")
     entry = _memo_entry(path)
     nanos = _nano_timestamp_columns(path, entry)
-    if nanos:
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    if nanos and str(spark.conf.get(_NANOS_AS_LONG, "false")).lower() != "true":
+        raise ValueError(
+            f"table {name!r} at {path} stores TIMESTAMP(NANOS) columns "
+            f"{nanos}, which Spark reads only with {_NANOS_AS_LONG}=true; "
+            "this session has it off (sessions from get_spark or "
+            "tune_session have it on)"
+        )
     df = _read_memoized(spark, path, entry)
     for c in nanos:
         df = df.withColumn(c, F.timestamp_micros(F.expr(f"`{c}` div 1000")))

@@ -36,8 +36,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
-from full_docker_etl_spark.operators.util import rebalanced
-from full_docker_etl_spark.sources.catalog import read_parquet
+from full_docker_etl_spark.operators.util import (
+    advisory_partition_bytes,
+    rebalanced,
+)
+from full_docker_etl_spark.sources.catalog import data_schema, read_parquet
 
 
 class ConcurrentWriteError(RuntimeError):
@@ -417,8 +420,20 @@ def _leaves_named(
     )
 
 
+def _holds_data(d: str) -> bool:
+    """Whether the directory tree ``d`` holds any parquet data file."""
+    return any(
+        f.endswith(".parquet") for _, _, files in os.walk(d) for f in files
+    )
+
+
 def _write_commit_meta(
-    vdir: str, full: bool, leaves: list[str], dv: bool
+    vdir: str,
+    full: bool,
+    leaves: list[str],
+    dv: bool,
+    schema: dict | None = None,
+    dv_schema: dict | None = None,
 ) -> None:
     """Record WHAT a commit touched next to its snapshot
     (``_COMMIT.json``, hidden from the data scan): ``full`` = the whole
@@ -428,8 +443,23 @@ def _write_commit_meta(
     This is the touched-set record partition-level conflict detection
     reads: a rejected scoped commit whose leaves are disjoint from
     every intervening commit's can REBASE onto the new head instead of
-    re-running its Spark job."""
-    meta = {"full": bool(full), "leaves": sorted(leaves), "dv": bool(dv)}
+    re-running its Spark job.
+
+    ``schema`` is the snapshot's DATA schema (Spark JSON, partition
+    columns excluded — :func:`~full_docker_etl_spark.sources.catalog.data_schema`)
+    and ``dv_schema`` its deletion vector's: what the writer already
+    knew it wrote, so :meth:`VersionedTable.read` opens the snapshot
+    without a footer-inference job (Delta keeps the table schema in its
+    log for the same reason). ``schema`` is recorded as None when the
+    snapshot holds no data file: an emptied partitioned table keeps
+    reading by inference, exactly as before pins existed."""
+    meta = {
+        "full": bool(full),
+        "leaves": sorted(leaves),
+        "dv": bool(dv),
+        "schema": schema if schema is not None and _holds_data(vdir) else None,
+        "dv_schema": dv_schema,
+    }
     tmp = os.path.join(vdir, f"._commit.tmp.{uuid.uuid4().hex[:8]}")
     with open(tmp, "w") as fh:
         json.dump(meta, fh)
@@ -437,8 +467,11 @@ def _write_commit_meta(
 
 
 def _read_commit_meta(vdir: str) -> dict | None:
-    """The commit's touched-set record, or None for snapshots that
-    predate it (treated as touching everything — rebase refuses)."""
+    """The commit's record (see :func:`_write_commit_meta`), or None for
+    snapshots that predate it (treated as touching everything — rebase
+    refuses — and read by inference). A record from a release before
+    pinned schemas has no ``schema``/``dv_schema`` keys; readers take
+    a missing or None pin as "infer"."""
     try:
         with open(os.path.join(vdir, "_COMMIT.json")) as fh:
             return json.load(fh)
@@ -624,14 +657,17 @@ class VersionedTable:
         vectors are reconciled back into the data files by
         :meth:`compact`.
 
-        The snapshot's and its vector's schemas are inferred once per
-        directory (:func:`~full_docker_etl_spark.sources.catalog.read_parquet`):
-        the memo is keyed by the directory's real path, its ``os.stat``
-        ``(st_ino, st_size, st_mtime_ns)`` and the parquet-inference
-        confs; a change to any of them infers again. Snapshot
-        directories are immutable once published, so re-reading a
-        version (a merge re-opening its parent, ``compact``) starts no
-        schema-inference job."""
+        PINNED OPEN: every commit records the data schema it wrote (and
+        its vector's) in ``_COMMIT.json``, and the snapshot is opened
+        with it (:func:`~full_docker_etl_spark.sources.catalog.read_parquet`
+        with ``schema``), so even the first read of a version just
+        published starts no footer-inference job; partition columns
+        still come from the directory paths. A snapshot without a pin —
+        written by an earlier release, missing its ``_COMMIT.json``, or
+        holding no data file — falls back to inference through the
+        per-directory memo (keyed by real path, ``os.stat`` signature
+        and the parquet-inference confs), which infers each immutable
+        snapshot once."""
         if version is None:
             version = self.current_version()
             if version is None:
@@ -643,7 +679,8 @@ class VersionedTable:
                 "keep a deeper time-travel horizon"
             )
         vdir = os.path.join(self.root, "_versions", version)
-        df = read_parquet(spark, vdir)
+        pins = _read_commit_meta(vdir) or {}
+        df = read_parquet(spark, vdir, pins.get("schema"))
         dv = self._read_dv(spark, version)
         if dv is not None:
             df = df.join(
@@ -661,11 +698,13 @@ class VersionedTable:
 
     def _read_dv(self, spark: SparkSession, version: str) -> DataFrame | None:
         """The snapshot's deletion vector (distinct tombstoned key
-        tuples), or None when the snapshot carries none."""
+        tuples), or None when the snapshot carries none; opened with
+        the ``dv_schema`` its commit recorded, inferred without one."""
         d = self._dv_dir(version)
         if not os.path.isdir(d):
             return None
-        return read_parquet(spark, d)
+        pins = _read_commit_meta(os.path.join(self.root, "_versions", version))
+        return read_parquet(spark, d, (pins or {}).get("dv_schema"))
 
     def overwrite(self, df: DataFrame) -> str:
         """Commit ``df`` as the new table state. Returns the version id."""
@@ -714,6 +753,8 @@ class VersionedTable:
             )
         new_version = f"v_{uuid.uuid4().hex[:12]}"
         vdir = os.path.join(dest_root, "_versions", new_version)
+        src_dir = os.path.join(self.root, "_versions", version)
+        pins = _read_commit_meta(src_dir) or {}
         # Linking races the SOURCE table's GC: after the retention check
         # above, a burst of source commits can age this snapshot out and
         # rmtree it mid-_link_tree. A vanished FILE raises; a vanished
@@ -721,11 +762,7 @@ class VersionedTable:
         # FileNotFoundError is not enough, the snapshot must ALSO still
         # be retained after linking or the clone may be silently PARTIAL.
         try:
-            _link_tree(
-                os.path.join(self.root, "_versions", version),
-                vdir,
-                skip=frozenset({"_COMMIT.json"}),
-            )
+            _link_tree(src_dir, vdir, skip=frozenset({"_COMMIT.json"}))
             if os.path.isdir(self._dv_dir(version)):
                 # the snapshot's deletion vector is part of its state
                 _link_tree(self._dv_dir(version), dest._dv_dir(new_version))
@@ -746,11 +783,14 @@ class VersionedTable:
                 "partial and was discarded — re-clone from a live "
                 "version"
             )
+        has_dv = os.path.isdir(dest._dv_dir(new_version))
         _write_commit_meta(
             vdir,
             full=True,
             leaves=[],
-            dv=os.path.isdir(dest._dv_dir(new_version)),
+            dv=has_dv,
+            schema=pins.get("schema"),
+            dv_schema=pins.get("dv_schema") if has_dv else None,
         )
         raced = False
         with dest._publish_lock():
@@ -854,6 +894,7 @@ class VersionedTable:
         the caller's layout."""
         version = f"v_{uuid.uuid4().hex[:12]}"
         vdir = os.path.join(self.root, "_versions", version)
+        schema = data_schema(df, self.partition_by)
         if self.partition_by and expected_parent is not _UNSET:
             df = rebalanced(df, *self.partition_by)
         observation = None
@@ -878,8 +919,11 @@ class VersionedTable:
                 self._raise_constraint_violation(df, bad)
         if link_from is not None:
             touched_leaves = _leaf_rels(vdir, len(self.partition_by))
+            dv_schema = None
             if not drop_dv:
-                self._propagate_dv(df.sparkSession, link_from, vdir, version)
+                dv_schema = self._propagate_dv(
+                    df.sparkSession, link_from, vdir, version, schema
+                )
             try:
                 _link_missing_partitions(
                     link_from, vdir, len(self.partition_by), link_exclude
@@ -903,10 +947,14 @@ class VersionedTable:
                 vdir,
                 full=False,
                 leaves=sorted(touched_leaves | set(link_exclude)),
-                dv=os.path.isdir(self._dv_dir(version)),
+                dv=dv_schema is not None,
+                schema=schema,
+                dv_schema=dv_schema,
             )
         else:
-            _write_commit_meta(vdir, full=True, leaves=[], dv=False)
+            _write_commit_meta(
+                vdir, full=True, leaves=[], dv=False, schema=schema
+            )
         self.last_commit_rebased = False
         try:
             self._publish(
@@ -997,7 +1045,11 @@ class VersionedTable:
                 return None  # head GC'd mid-link: give up, re-derive
             # relative to the new head we still touched exactly `mine`
             _write_commit_meta(
-                new_vdir, full=False, leaves=sorted(mine), dv=False
+                new_vdir,
+                full=False,
+                leaves=sorted(mine),
+                dv=False,
+                schema=my_meta.get("schema"),
             )
             try:
                 self._publish(new_version, new_vdir, head)
@@ -1010,8 +1062,13 @@ class VersionedTable:
         return None
 
     def _propagate_dv(
-        self, spark: SparkSession, link_from: str, vdir: str, version: str
-    ) -> None:
+        self,
+        spark: SparkSession,
+        link_from: str,
+        vdir: str,
+        version: str,
+        schema: dict | None = None,
+    ) -> dict | None:
         """Carry the parent snapshot's deletion vector forward into a
         scoped commit, MINUS any key tuple the fresh write legitimately
         re-introduces (a MERGE that re-inserts a tombstoned key must
@@ -1020,11 +1077,18 @@ class VersionedTable:
         subtracting the fresh write's tuples is exact). The rewritten
         partitions were derived from the DV-applied read, so their
         files already exclude every remaining tombstone; the vector is
-        only needed for the HARDLINKED untouched partitions."""
+        only needed for the HARDLINKED untouched partitions.
+
+        Both reads are pinned: the parent's vector with the
+        ``dv_schema`` its commit recorded, the fresh write with
+        ``schema``, the data schema it was just written with (either
+        is inferred when absent). Returns the carried vector's schema,
+        or None when nothing is left to carry."""
         parent_dv = self._dv_dir(os.path.basename(link_from))
         if not os.path.isdir(parent_dv):
-            return
-        old_dv = spark.read.parquet(parent_dv)
+            return None
+        pins = _read_commit_meta(link_from) or {}
+        old_dv = read_parquet(spark, parent_dv, pins.get("dv_schema"))
         # Pre-probe the snapshot for data files instead of catching the
         # reader's schema-inference error: a bare except here would also
         # swallow TRANSIENT read failures and silently freeze the
@@ -1032,26 +1096,21 @@ class VersionedTable:
         # the probe, only the legitimately-empty write takes the
         # carry-unchanged path; any real read/schema fault propagates
         # and fails the commit loudly.
-        has_data = any(
-            f.endswith(".parquet")
-            for _, _, files in os.walk(vdir)
-            for f in files
-        )
-        if not has_data:
+        if not _holds_data(vdir):
             dv = old_dv  # empty fresh write: nothing re-introduced
         else:
             fresh = (
-                spark.read.parquet(vdir)
+                read_parquet(spark, vdir, schema)
                 .select(*old_dv.columns)
                 .distinct()
             )
             dv = old_dv.join(
                 fresh, on=list(old_dv.columns), how="left_anti"
             )
-        if dv.take(1):
-            dv.coalesce(1).write.mode("overwrite").parquet(
-                self._dv_dir(version)
-            )
+        if not dv.take(1):
+            return None
+        dv.coalesce(1).write.mode("overwrite").parquet(self._dv_dir(version))
+        return data_schema(old_dv)
 
     def _publish(
         self,
@@ -1633,7 +1692,8 @@ class VersionedTable:
     def _commit_dv(self, dv_df: DataFrame, expected_parent: str) -> str:
         """Publish a new snapshot that is the parent's data files
         HARDLINKED wholesale plus a fresh deletion-vector sidecar —
-        zero data bytes written, O(|vector|) bytes total."""
+        zero data bytes written, O(|vector|) bytes total. The commit
+        record carries the parent's data schema and pins the vector's."""
         version = f"v_{uuid.uuid4().hex[:12]}"
         vdir = os.path.join(self.root, "_versions", version)
         parent_dir = os.path.join(self.root, "_versions", expected_parent)
@@ -1651,7 +1711,14 @@ class VersionedTable:
         )
         # a DV commit touches no partitions but changes read-side
         # visibility everywhere — rebase across it is never safe
-        _write_commit_meta(vdir, full=False, leaves=[], dv=True)
+        _write_commit_meta(
+            vdir,
+            full=False,
+            leaves=[],
+            dv=True,
+            schema=(_read_commit_meta(parent_dir) or {}).get("schema"),
+            dv_schema=data_schema(dv_df),
+        )
         try:
             self._publish(version, vdir, expected_parent)
         except ConcurrentWriteError:
@@ -1710,12 +1777,19 @@ class VersionedTable:
     def compact(
         self, spark: SparkSession, max_files_per_partition: int = 4
     ) -> str | None:
-        """OPTIMIZE: rewrite only the partitions whose data-file count
-        exceeds the budget (small files are the silent 100 TB killer —
-        every query pays per-file open/footer cost). Derived commits
-        are already rebalanced to one file per touched partition below
-        the AQE advisory size; the files compaction finds come from a
-        caller's ``overwrite``, which keeps the layout it was handed.
+        """OPTIMIZE: rewrite only the partitions holding more than
+        ``max_files_per_partition`` SMALL data files (small files are
+        the silent 100 TB killer — every query pays per-file
+        open/footer cost). A file is small when it is under half the
+        AQE advisory size (``spark.sql.adaptive.advisoryPartitionSizeInBytes``
+        — Delta's ``minFileSize`` rule): a partition larger than the
+        advisory size is written by every rebalanced commit, this one
+        included, as several advisory-sized files, and counting those
+        would make it over budget forever and rewrite it on every
+        call. Derived commits are already rebalanced to one file per
+        touched partition below the advisory size; the files
+        compaction finds come from a caller's ``overwrite``, which
+        keeps the layout it was handed.
         Untouched partitions are hardlinked
         into the new snapshot exactly like a scoped merge, data is
         byte-identical by construction (same rows, new layout), and
@@ -1747,16 +1821,19 @@ class VersionedTable:
             raise FileNotFoundError(f"no committed version at {self.root}")
         cur_dir = os.path.join(self.root, "_versions", version)
         dv = self._read_dv(spark, version)
+        small = advisory_partition_bytes(spark) // 2
 
-        def _n_files(d: str) -> int:
+        def _n_small(d: str) -> int:
             return sum(
                 1
                 for f in os.listdir(d)
-                if f.endswith(".parquet") and not f.startswith((".", "_"))
+                if f.endswith(".parquet")
+                and not f.startswith((".", "_"))
+                and os.path.getsize(os.path.join(d, f)) < small
             )
 
         if not self.partition_by:
-            if dv is None and _n_files(cur_dir) <= max_files_per_partition:
+            if dv is None and _n_small(cur_dir) <= max_files_per_partition:
                 return None
             return self._commit(
                 self.read(spark, version=version).coalesce(1),
@@ -1770,7 +1847,7 @@ class VersionedTable:
 
         def _walk(d: str, level: int, vals: dict[str, str]) -> None:
             if level == depth:
-                if _n_files(d) > max_files_per_partition:
+                if _n_small(d) > max_files_per_partition:
                     fat.append(vals)
                 return
             for entry in os.listdir(d):

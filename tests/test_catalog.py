@@ -9,6 +9,7 @@ from collections import OrderedDict
 
 import pyarrow as pa
 import pyarrow.parquet as pq
+import pytest
 
 from full_docker_etl_spark.sources import load_table, read_parquet
 from full_docker_etl_spark.sources.sinks import VersionedTable
@@ -89,10 +90,11 @@ def test_two_opens_of_one_table_self_join(spark, tmp_path):
     assert sorted(tuple(r) for r in pairs) == [(1, 10), (2, 20), (3, 30), (4, 40)]
 
 
-def test_events_nanos_table_yields_microsecond_timestamps(spark, sf_dir, tmp_path):
-    """``events.ts`` stored as TIMESTAMP(NANOS) (the format earlier
-    testdata rounds shipped): the memoized reopen must still rebuild
-    microsecond timestamps, truncating the sub-microsecond digits."""
+def _write_nanos_events(sf_dir: str, dst) -> dict:
+    """Write ``events`` with ``ts`` as TIMESTAMP(NANOS) (the format
+    earlier testdata rounds shipped) to ``dst/events.parquet``, with
+    sub-microsecond digits; returns {event_id: epoch micros} a correct
+    read must give."""
     raw = pq.read_table(os.path.join(sf_dir, "events.parquet"))
     ts = raw.column("ts").cast(pa.int64()).to_pylist()
     unit = {"us": 1, "ns": 1000}[raw.schema.field("ts").type.unit]
@@ -100,11 +102,18 @@ def test_events_nanos_table_yields_microsecond_timestamps(spark, sf_dir, tmp_pat
     nanos = raw.set_column(
         raw.schema.get_field_index("ts"), "ts", pa.array(ns, type=pa.timestamp("ns"))
     )
-    pq.write_table(nanos, tmp_path / "events.parquet", version="2.6")
-    want = {
+    pq.write_table(nanos, dst / "events.parquet", version="2.6")
+    return {
         eid: None if v is None else v // 1000
         for eid, v in zip(raw.column("event_id").to_pylist(), ns)
     }
+
+
+def test_events_nanos_table_yields_microsecond_timestamps(spark, sf_dir, tmp_path):
+    """``events.ts`` stored as TIMESTAMP(NANOS) (the format earlier
+    testdata rounds shipped): the memoized reopen must still rebuild
+    microsecond timestamps, truncating the sub-microsecond digits."""
+    want = _write_nanos_events(sf_dir, tmp_path)
     load_table(spark, str(tmp_path), "events")
     df, jobs = _jobs_for(spark, lambda: load_table(spark, str(tmp_path), "events"))
     assert jobs == 0
@@ -154,3 +163,57 @@ def test_memo_is_a_bounded_lru(spark, tmp_path, monkeypatch):
     _, hit = _jobs_for(spark, lambda: read_parquet(spark, paths[0]))
     _, evicted = _jobs_for(spark, lambda: read_parquet(spark, paths[1]))
     assert hit == 0 and evicted >= 1
+
+
+def _all_confs(spark) -> dict:
+    return dict(spark.conf.getAll)
+
+
+def test_load_table_of_a_nanos_table_changes_no_session_conf(spark, sf_dir, tmp_path):
+    """Opening a TIMESTAMP(NANOS) table leaves every session conf as it
+    found it: the conf the scan needs is a session default, not a flip
+    made on first use that every later query would inherit."""
+    _write_nanos_events(sf_dir, tmp_path)
+    s = spark.newSession()
+    before = _all_confs(s)
+    assert before["spark.sql.legacy.parquet.nanosAsLong"] == "true"
+    load_table(s, str(tmp_path), "events").collect()
+    assert _all_confs(s) == before
+
+
+def test_reads_do_not_depend_on_whether_events_was_loaded(spark, sf_dir, tmp_path):
+    """A query over ``orders`` and ``read_parquet`` of the nanos table
+    give the same rows and schemas before and after ``events`` is
+    loaded: nothing a load does is visible to a later read."""
+    _write_nanos_events(sf_dir, tmp_path)
+    nanos_path = str(tmp_path / "events.parquet")
+    s = spark.newSession()
+
+    def observe():
+        orders = load_table(s, sf_dir, "orders")
+        rows = sorted(
+            tuple(r)
+            for r in orders.groupBy("o_orderstatus")
+            .agg({"o_totalprice": "sum", "*": "count"})
+            .collect()
+        )
+        return rows, orders.schema, read_parquet(s, nanos_path).schema
+
+    first = observe()
+    load_table(s, str(tmp_path), "events").collect()
+    assert observe() == first
+    assert first[2]["ts"].dataType.simpleString() == "bigint"  # raw nanos
+
+
+def test_load_table_refuses_nanos_table_when_session_lacks_the_conf(
+    spark, sf_dir, tmp_path
+):
+    """A session with ``nanosAsLong`` off cannot read a nanos column:
+    the load raises naming the conf and leaves it off."""
+    _write_nanos_events(sf_dir, tmp_path)
+    s = spark.newSession()
+    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "false")
+    with pytest.raises(ValueError, match="spark.sql.legacy.parquet.nanosAsLong"):
+        load_table(s, str(tmp_path), "events")
+    assert s.conf.get("spark.sql.legacy.parquet.nanosAsLong") == "false"
+    assert load_table(s, sf_dir, "orders").count() > 0  # no nanos: unaffected

@@ -1519,8 +1519,8 @@ def test_streaming_ingest_loop_quota_then_score(spark):
 def test_byte_string_parser_matches_spark(spark):
     """The size-conf parser stream_quota_admit uses agrees with
     Spark's own JavaUtils.byteStringAsBytes on every suffix form."""
-    from full_docker_etl_spark.queries.sinks_streaming import (
-        _byte_string_as_bytes,
+    from full_docker_etl_spark.operators.util import (
+        byte_string_as_bytes as _byte_string_as_bytes,
     )
 
     jvm = spark._jvm.org.apache.spark.network.util.JavaUtils

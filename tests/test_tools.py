@@ -91,6 +91,24 @@ def test_bench_compare_warns_when_an_artifact_has_no_anchor(tmp_path):
     assert "warning" not in out
 
 
+def test_bench_compare_labels_cross_core_comparisons(tmp_path):
+    """Per-query walls at different core counts are not comparable, so
+    the compare says so above the ratios: a detail file's top-level
+    ``cpus`` and a driver artifact's ``parsed.cpus`` both count, an
+    artifact without one is labelled unknown, and two artifacts at one
+    core count print no label."""
+    c32 = {"cpus": 32, "queries": {"a": 1.0}}
+    c4 = {"parsed": {"cpus": 4, "queries": {"a": 1.2}}}
+    bare = {"queries": {"a": 1.1}}
+    out, _rc = _run(c32, c4, tmp_path)
+    assert "** CROSS-CORE (old 32 cpus, new 4 cpus) **" in out
+    assert out.index("CROSS-CORE") < out.index("median per-query ratio")
+    out, _rc = _run(bare, c4, tmp_path)
+    assert "** CROSS-CORE (old unknown cpus, new 4 cpus) **" in out
+    out, _rc = _run(c4, {"cpus": 4, "queries": {"a": 1.0}}, tmp_path)
+    assert "CROSS-CORE" not in out
+
+
 def test_bench_compare_driver_artifact_anchor_under_parsed(tmp_path):
     """From r14 the bench stdout line carries the anchor, so driver
     artifacts expose it under ``parsed`` — bench_compare must find it

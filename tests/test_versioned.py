@@ -14,6 +14,7 @@ link-exclusion set.
 
 from __future__ import annotations
 
+import contextlib
 import os
 import tempfile
 import threading
@@ -1459,3 +1460,294 @@ def test_module_update_columns_rejects_widening_batch(spark):
     with pytest.raises(ValueError, match="widens table column"):
         update_columns(spark, path, wide, ["k"])
     assert dict(spark.read.parquet(path).dtypes)["amt"] == "int"
+
+
+# ------------------------------------------------------ pinned schemas
+
+
+def _pin(t: VersionedTable, version: str) -> dict:
+    import json
+
+    with open(os.path.join(t.root, "_versions", version, "_COMMIT.json")) as fh:
+        return json.load(fh)
+
+
+def _open_jobs(spark, t: VersionedTable, version: str | None = None):
+    """(frame, jobs started by opening it) for ``t.read``."""
+    before = _jobs_started(spark)
+    df = t.read(spark, version)
+    return df, _jobs_started(spark) - before
+
+
+def test_new_version_opens_with_its_pinned_schema_and_no_job(spark, monkeypatch):
+    """Every commit path records the data schema it wrote, so opening a
+    version just published starts no footer-inference job: overwrite,
+    scoped / full / evolve-schema merge, update_columns, delete,
+    delete_dv, a scoped merge carrying that vector, compact folding it,
+    a rebased commit and clone_to. A fresh vector directory would be
+    inferred too, so 0 jobs also shows its open was pinned."""
+    schema = "k long, p string, v double"
+    t = _table(keep_versions=4, partition_by=("p",))
+    flat = _table(keep_versions=4)
+    opened: list[tuple[str, int, bool]] = []
+
+    def opens(label: str, table: VersionedTable = t) -> dict:
+        """{k: v} of the live version, recording the jobs its open
+        started and whether its commit pinned a schema."""
+        df, jobs = _open_jobs(spark, table)
+        pinned = _pin(table, table.current_version()).get("schema") is not None
+        opened.append((label, jobs, pinned))
+        return {r.k: r.v for r in df.collect()}
+
+    rows = [(i, "AB"[i % 2], float(i)) for i in range(8)]
+    t.overwrite(spark.createDataFrame(rows, schema))
+    assert len(opens("overwrite")) == 8
+    t.merge(spark.createDataFrame([(0, "A", -1.0), (9, "B", 9.0)], schema), ["k", "p"])
+    assert opens("scoped merge")[0] == -1.0
+    flat.overwrite(spark.createDataFrame(rows, schema))
+    flat.merge(spark.createDataFrame([(1, "B", -1.0)], schema), ["k"])
+    assert opens("full merge", flat)[1] == -1.0
+    t.update_columns(
+        spark.createDataFrame([(2, "A", -2.0)], schema), ["k", "p"]
+    )
+    assert opens("update_columns")[2] == -2.0
+    t.delete(spark.createDataFrame([(3, "B")], "k long, p string"), ["k", "p"])
+    assert 3 not in opens("delete")
+    t.delete_dv(spark.createDataFrame([(4, "A")], "k long, p string"), ["k", "p"])
+    assert 4 not in opens("delete_dv")
+    t.merge(spark.createDataFrame([(5, "B", -5.0)], schema), ["k", "p"])
+    assert os.path.isdir(t._dv_dir(t.current_version()))  # vector carried
+    got = opens("scoped merge over a vector")
+    assert got[5] == -5.0 and 4 not in got
+    assert t.compact(spark, max_files_per_partition=4) is not None  # DV fold
+    assert not os.path.isdir(t._dv_dir(t.current_version()))
+    assert 4 not in opens("compact")
+    t.merge(
+        spark.createDataFrame([(6, "A", -6.0, "x")], schema + ", w string"),
+        ["k", "p"],
+        evolve_schema=True,
+    )
+    assert opens("evolve-schema merge")[6] == -6.0
+
+    real_commit = VersionedTable._commit
+    raced = {"done": False}
+
+    def racing_commit(self, df, **kw):
+        if not raced["done"]:
+            raced["done"] = True
+            VersionedTable(t.root, keep_versions=4, partition_by=("p",)).merge(
+                df.sparkSession.createDataFrame(
+                    [(7, "B", -7.0, None)], schema + ", w string"
+                ),
+                ["k", "p"],
+            )
+        return real_commit(self, df, **kw)
+
+    monkeypatch.setattr(VersionedTable, "_commit", racing_commit)
+    t.merge(
+        spark.createDataFrame([(8, "A", -8.0, "y")], schema + ", w string"),
+        ["k", "p"],
+    )
+    monkeypatch.undo()
+    assert t.last_commit_rebased
+    live = opens("rebased commit")
+    assert live[7] == -7.0 and live[8] == -8.0
+    clone = t.clone_to(tempfile.mkdtemp(prefix="fde_vt7_clone_") + "/c")
+    assert opens("clone_to", clone) == live
+    assert [label for label, jobs, _ in opened if jobs] == [], opened
+    assert all(pinned for _, _, pinned in opened), opened
+
+
+_ALL_TYPES = (
+    "i int, l bigint, dec decimal(12,3), d double, s string, b binary, "
+    "f boolean, dt date, ts timestamp, arr array<bigint>, "
+    "m map<string,int>, st struct<x:int,y:string>, nul_i int, "
+    "nul_s string, sh smallint, fl float, tn timestamp_ntz, "
+    "ps string, pi int"
+)
+
+
+def _all_types_frame(spark):
+    import datetime as dtm
+    from decimal import Decimal
+
+    rows = [
+        (
+            n,
+            10**12 + n,
+            Decimal(f"{n}.125"),
+            n / 3,
+            f"s{n}",
+            bytes([n, 255 - n]),
+            n % 2 == 0,
+            dtm.date(2024, 1, 1 + n),
+            dtm.datetime(2024, 1, 1, n, 30, 15, 123456),
+            [n, None, n * 2],
+            {"a": n, "b": None},
+            (n, f"y{n}"),
+            None,
+            None,
+            n,
+            n / 4,
+            dtm.datetime(2024, 2, 1, n, 0, 0, 5),
+            "xy"[n % 2],
+            n % 3,
+        )
+        for n in range(6)
+    ]
+    return spark.createDataFrame(rows, _ALL_TYPES)
+
+
+@pytest.mark.parametrize(
+    "partition_by", [("ps", "pi"), ("pi",), ()], ids=["str+int", "int", "flat"]
+)
+def test_pinned_open_equals_inferred_open(spark, partition_by):
+    """A pinned open is the same frame as inferring the snapshot:
+    equal schemas (nullability and partition-column types included —
+    an int partition column reads back as a string either way) and
+    equal rows, over every column type the table writes."""
+    t = _table(partition_by=partition_by)
+    v = t.overwrite(_all_types_frame(spark))
+    assert _pin(t, v)["schema"] is not None
+    pinned, jobs = _open_jobs(spark, t)
+    inferred = spark.read.parquet(os.path.join(t.root, "_versions", v))
+    assert jobs == 0
+    assert pinned.schema == inferred.schema
+    assert sorted(map(str, pinned.collect())) == sorted(map(str, inferred.collect()))
+
+
+def test_unpinned_snapshots_still_read_by_inference(spark):
+    """A commit record without a schema (an earlier release) and a
+    snapshot without any commit record both open by inference, with
+    the same schema and rows a pinned open gives."""
+    import json
+
+    t = _table(keep_versions=4, partition_by=("ps", "pi"))
+    v = t.overwrite(_all_types_frame(spark))
+    want = t.read(spark)
+    want_rows = sorted(map(str, want.collect()))
+    meta_path = os.path.join(t.root, "_versions", v, "_COMMIT.json")
+    with open(meta_path) as fh:
+        meta = json.load(fh)
+    with open(meta_path, "w") as fh:
+        json.dump({k: meta[k] for k in ("full", "leaves", "dv")}, fh)
+    for label in ("no schema", "no record"):
+        if label == "no record":
+            os.unlink(meta_path)
+        got, jobs = _open_jobs(spark, t)
+        assert jobs >= 1, label  # inferred, not pinned
+        assert got.schema == want.schema, label
+        assert sorted(map(str, got.collect())) == want_rows, label
+
+
+def test_empty_snapshot_reads_as_before_pins(spark):
+    """A partitioned snapshot holding no data file records no schema
+    and still refuses to infer one; an unpartitioned empty write holds
+    one empty file and opens with its schema."""
+    from pyspark.errors import AnalysisException
+
+    t = _table(partition_by=("p",))
+    v = t.overwrite(spark.createDataFrame([], "k long, p string"))
+    assert _pin(t, v)["schema"] is None
+    with pytest.raises(AnalysisException, match="UNABLE_TO_INFER_SCHEMA"):
+        t.read(spark)
+    flat = _table()
+    v = flat.overwrite(spark.createDataFrame([], "k long, p string"))
+    got = flat.read(spark)
+    assert got.schema == spark.read.parquet(
+        os.path.join(flat.root, "_versions", v)
+    ).schema
+    assert got.count() == 0
+
+
+# ------------------------------------------- layout under a low advisory
+
+
+@contextlib.contextmanager
+def _session_confs(spark, confs: dict[str, str]):
+    """Set ``confs`` on the session for the block, then restore them."""
+    saved = {k: spark.conf.get(k, None) for k in confs}
+    for k, v in confs.items():
+        spark.conf.set(k, v)
+    try:
+        yield
+    finally:
+        for k, v in saved.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
+
+
+#: A 64 KB advisory size: a partition of a few hundred KB is written by
+#: a rebalanced commit as several advisory-sized files.
+_LOW_ADVISORY = {
+    "spark.sql.adaptive.advisoryPartitionSizeInBytes": "64k",
+    "spark.sql.shuffle.partitions": "50",
+}
+
+
+def _blob_rows(n: int, part, start: int = 0) -> list[tuple]:
+    """``n`` rows of (k, p, 256 random bytes): incompressible, so a
+    file's size on disk tracks the shuffle bytes AQE split it by."""
+    return [(start + i, part(i), os.urandom(256)) for i in range(n)]
+
+
+def _files_per_leaf(t: VersionedTable) -> dict[str, list[int]]:
+    """{partition leaf: [data-file sizes]} of the live snapshot."""
+    return {
+        leaf: [
+            os.path.getsize(
+                os.path.join(t.root, "_versions", t.current_version(), leaf, f)
+            )
+            for f in files
+        ]
+        for leaf, files in _leaf_inodes(t, t.current_version()).items()
+    }
+
+
+def test_compact_leaves_a_partition_of_advisory_sized_files_alone(spark):
+    """A partition larger than the advisory size is written by a
+    rebalanced commit as several advisory-sized files. Compaction
+    judges a partition by its SMALL files (under half the advisory
+    size), so it does not rewrite that partition again and again."""
+    schema = "k long, p string, blob binary"
+    t = _table(partition_by=("p",))
+    with _session_confs(spark, _LOW_ADVISORY):
+        t.overwrite(
+            spark.createDataFrame(_blob_rows(2400, lambda i: "A"), schema)
+            .repartition(40)
+        )
+        v1 = t.compact(spark, max_files_per_partition=1)
+        assert v1 is not None  # forty ~16 KB files from the overwrite
+        sizes = _files_per_leaf(t)["p=A"]
+        assert len(sizes) > 1, sizes
+        assert t.compact(spark, max_files_per_partition=1) is None
+        assert t.compact(spark, max_files_per_partition=1) is None
+    assert t.current_version() == v1
+    assert t.read(spark).count() == 2400
+
+
+def test_rebalanced_commit_splits_a_hot_partition_only(spark):
+    """The skew claim behind every derived commit's REBALANCE: a merge
+    whose batch puts about 90% of its rows in one partition (a hot IVF
+    centroid) lands that partition as several files across writer
+    tasks, while every other partition stays one file."""
+    schema = "k long, c int, blob binary"
+    t = _table(partition_by=("c",))
+    t.overwrite(
+        spark.createDataFrame(_blob_rows(10, lambda i: i % 10), schema)
+    )
+    batch = _blob_rows(2700, lambda i: 0, start=100) + _blob_rows(
+        300, lambda i: 1 + i % 9, start=10_000
+    )
+    with _session_confs(spark, _LOW_ADVISORY):
+        t.merge(
+            spark.createDataFrame(batch, schema).repartition(8), ["k", "c"]
+        )
+    files = _files_per_leaf(t)
+    assert len(files["c=0"]) > 1, files["c=0"]
+    assert {leaf: len(f) for leaf, f in files.items() if leaf != "c=0"} == {
+        f"c={c}": 1 for c in range(1, 10)
+    }
+    assert t.read(spark).count() == 3010

@@ -45,7 +45,7 @@ from full_docker_etl_spark.contention import is_contended  # noqa: E402
 
 def load(
     path: str,
-) -> tuple[dict[str, float], dict[str, tuple[float, float]], dict]:
+) -> tuple[dict[str, float], dict[str, tuple[float, float]], dict, int | None]:
     """Per-query timings plus the environment-drift anchors — the
     (start, end) median-of-3 pairs bench.py stamps into its detail
     file. The stdout line does NOT carry them (it is kept slim), so a
@@ -66,7 +66,11 @@ def load(
     contention context, not auto-judged: a saturating local[n] bench
     generates PSI of its own, so the fields distinguish 'this session
     was already loaded' from 'the run loaded it', which is exactly
-    the adjudication the r14/r15 rounds made by narrative."""
+    the adjudication the r14/r15 rounds made by narrative. The fourth
+    is the core count the run was benched at (``cpus``, top level or
+    under ``parsed``; None when the artifact does not record it):
+    per-query walls at different core counts are not comparable, so
+    :func:`main` labels such a comparison."""
     data = json.load(open(path))
     parsed = data.get("parsed") or {}
     if "queries" in data and isinstance(data["queries"], dict):
@@ -84,10 +88,12 @@ def load(
             if s > 0 and e > 0:
                 anchors[name] = (s, e)
     host = data.get("host") or parsed.get("host") or {}
+    cpus = data.get("cpus", parsed.get("cpus"))
     return (
         {k: float(v) for k, v in q.items() if v is not None and v >= 0},
         anchors,
         host,
+        None if cpus is None else int(cpus),
     )
 
 
@@ -198,7 +204,7 @@ def main() -> int:
     if len(argv) != 2:
         print(__doc__)
         return 2
-    (old, a_old, h_old), (new, a_new, h_new) = (
+    (old, a_old, h_old, c_old), (new, a_new, h_new, c_new) = (
         load(argv[0]),
         load(argv[1]),
     )
@@ -241,6 +247,13 @@ def main() -> int:
                 "anchor to its detail file only) — ratios below are "
                 "raw, not drift-normalized"
             )
+    if c_old != c_new:
+        o, n = ("unknown" if c is None else c for c in (c_old, c_new))
+        print(
+            f"** CROSS-CORE (old {o} cpus, new {n} cpus) ** per-query "
+            "walls at different core counts are not comparable — ratios "
+            "below mix code and core count"
+        )
     shared = sorted(set(old) & set(new))
     if not shared:
         print("no shared queries between the two artifacts")
