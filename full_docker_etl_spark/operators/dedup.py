@@ -33,34 +33,9 @@ from pyspark.sql import functions as F
 
 # Shingling/sketching is CPU-bound per row; a one-partition scan would
 # serialize the whole tier on one core (see operators/util.spread).
-from full_docker_etl_spark.operators.util import rebalanced
+from full_docker_etl_spark.operators.util import concurrently, rebalanced
 from full_docker_etl_spark.operators.util import spread as _spread
 from full_docker_etl_spark.sources.catalog import data_schema, read_parquet
-
-
-def _overlap(*thunks) -> None:
-    """Run the independent write actions of ONE store pass concurrently
-    (optimization guide §2.6 — overlap independent jobs): the derived
-    tables of a batch (docs/bands/counts, fps/counts, the compaction
-    rewrites) share a persisted parent and no ordering constraint —
-    only the trailing manifest publish sequences visibility. Submitted
-    from a small thread pool, the scheduler back-fills one write's
-    straggler tail with the next write's tasks instead of leaving the
-    cluster idle between sequential ~1-task-deep actions. Concurrent
-    jobs over the same persisted parent are safe: block-level locking
-    makes the first arrival compute a partition and later arrivals
-    wait, so nothing is computed twice. All thunks are awaited (and the
-    first exception re-raised) before returning, so a crash still
-    leaves invisible orphans, never a half-published batch."""
-    from concurrent.futures import ThreadPoolExecutor
-
-    if len(thunks) == 1:
-        thunks[0]()
-        return
-    with ThreadPoolExecutor(max_workers=len(thunks)) as pool:
-        futures = [pool.submit(t) for t in thunks]
-        for f in futures:
-            f.result()
 
 
 def content_hash(col: Column) -> Column:
@@ -942,7 +917,11 @@ def _containment_store_write(
             F.count(F.lit(1)).alias("cnt")
         )
         schemas = _store_schemas(path, docs=docs, bands=bands, counts=counts)
-        _overlap(
+        # the derived tables share the persisted parent and no ordering:
+        # only the manifest publish below sequences visibility, so they
+        # write concurrently, and a failed write leaves invisible
+        # orphans, never a half-published batch
+        concurrently(
             lambda: rebalanced(docs).write.parquet(
                 _store_batch_dir(path, "docs", batch_id)
             ),
@@ -2022,7 +2001,7 @@ def containment_store_compact(spark: SparkSession, path: str) -> list[str]:
     if len(old) <= 1:
         return []
     batch_id = uuid.uuid4().hex[:12]
-    _overlap(
+    concurrently(
         lambda: rebalanced(_store_read_committed(spark, path, "docs"))
         .write.parquet(_store_batch_dir(path, "docs", batch_id)),
         lambda: rebalanced(
@@ -2527,7 +2506,7 @@ def _substring_store_write(
     try:
         counts = fps.groupBy("fp").agg(F.count(F.lit(1)).alias("cnt"))
         schemas = _store_schemas(path, fps=fps, counts=counts)
-        _overlap(
+        concurrently(
             lambda: rebalanced(fps, "bkt")
             .write.partitionBy("bkt")
             .parquet(_store_batch_dir(path, "fps", batch_id)),
@@ -2623,7 +2602,7 @@ def substring_store_compact(spark: "SparkSession", path: str) -> dict:
     old = _store_manifest(path)
     before = {"fps": len(_files("fps")), "counts": len(_files("counts"))}
     batch_id = uuid.uuid4().hex[:12]
-    _overlap(
+    concurrently(
         lambda: rebalanced(
             _read_store_table(spark, path, "counts")
             .groupBy("fp")
@@ -3801,9 +3780,10 @@ def _minhash_store_write(
     cut stops projection collapse re-inlining it, the
     :func:`_band_rows` caveat), then the sigs and bands tables write
     CONCURRENTLY from it (guide §2.6 — the containment-store
-    `_overlap` shape; the old sequential read-back paid an extra
-    listing + scan and left the cluster idle between the two writes),
-    and the atomic manifest publish makes both visible together."""
+    :func:`concurrently` shape; the old sequential read-back paid an
+    extra listing + scan and left the cluster idle between the two
+    writes), and the atomic manifest publish makes both visible
+    together."""
     import uuid
 
     from pyspark import StorageLevel
@@ -3815,7 +3795,7 @@ def _minhash_store_write(
     try:
         band_rows = _band_rows(sig_arr, k, bands)
         schemas = _store_schemas(path, sigs=sig_arr, bands=band_rows)
-        _overlap(
+        concurrently(
             lambda: rebalanced(sig_arr).write.parquet(
                 _store_batch_dir(path, "sigs", batch_id)
             ),
@@ -3943,7 +3923,7 @@ def minhash_store_compact(spark: SparkSession, path: str) -> list[str]:
     if len(old) <= 1:
         return []
     batch_id = uuid.uuid4().hex[:12]
-    _overlap(
+    concurrently(
         *[
             lambda table=table: rebalanced(
                 _store_read_committed(spark, path, table)

@@ -44,6 +44,50 @@ def rebalanced(df: DataFrame, *cols: str) -> DataFrame:
     return df.hint("rebalance", *[F.col(c) for c in cols])
 
 
+def concurrently(*thunks) -> list:
+    """Run independent eager thunks from one thread each and return
+    their results in submission order (optimization guide §2.6 —
+    overlap independent jobs): the scheduler back-fills one chain's
+    driver-side gaps and straggler tails with the other's tasks.
+
+    Each thunk runs through ``pyspark.util.inheritable_thread_target``,
+    so its jobs carry the caller's job description, job group and
+    scheduler pool (each thunk a copy of its own); a plain pool thread
+    starts with none of them, and its jobs would lose the caller's
+    ``bench:<name>`` label. Every thunk is awaited before any result is
+    read, and the first exception (in submission order) is re-raised
+    only then: a failing thunk never leaves a sibling's jobs running
+    past the call, so a store write that raises still publishes
+    nothing half-done. A single thunk runs inline.
+
+    Concurrent jobs over one persisted parent compute each partition
+    once (block-level locking makes later arrivals wait), so sharing a
+    cached frame across thunks costs no recomputation."""
+    if len(thunks) <= 1:
+        return [t() for t in thunks]
+    from concurrent.futures import ThreadPoolExecutor
+
+    from pyspark import SparkContext
+    from pyspark.sql import SparkSession
+    from pyspark.util import inheritable_thread_target
+
+    targets = list(thunks)
+    if SparkContext._active_spark_context is not None:
+        session = SparkSession.active()
+        # one wrapper per thunk: each takes its own copy of the caller's
+        # properties, so a label one thunk sets never reaches a sibling.
+        # The session form also carries job tags; PySpark's unpinned
+        # thread mode returns the session itself, and there threads
+        # hold no per-thread properties to carry.
+        for i, t in enumerate(thunks):
+            wrap = inheritable_thread_target(session)
+            if callable(wrap):
+                targets[i] = wrap(t)
+    with ThreadPoolExecutor(max_workers=len(targets)) as pool:
+        futures = [pool.submit(t) for t in targets]
+    return [f.result() for f in futures]
+
+
 def fresh_checkpoint(df: DataFrame) -> DataFrame:
     """Eager ``localCheckpoint`` that also RESETS Catalyst's size
     statistics — REQUIRED wherever checkpointed frames chain through

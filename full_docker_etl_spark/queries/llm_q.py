@@ -963,6 +963,32 @@ def dedup_containment_lsh_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _probe_hits(cand: DataFrame) -> DataFrame:
+    """A store probe's candidates as distinct ``d1 < d2`` pairs flagged
+    ``_hit``, checkpointed: the found set of the recall composites."""
+    from full_docker_etl_spark.operators.util import fresh_checkpoint
+
+    return fresh_checkpoint(
+        cand.select(
+            F.least("d1", "d2").alias("d1"),
+            F.greatest("d1", "d2").alias("d2"),
+            F.lit(1).alias("_hit"),
+        ).distinct()
+    )
+
+
+def _batch_jaccard_pairs(docs: DataFrame) -> DataFrame:
+    """The exact-Jaccard ≥0.8 pairs touching the 10% batch,
+    checkpointed: the exact tier of the MinHash recall composites."""
+    from full_docker_etl_spark.operators.util import fresh_checkpoint
+
+    return fresh_checkpoint(
+        jaccard_pairs(docs, "text", "doc_id", n=5, threshold=0.8, max_df=1000)
+        .where((F.col("d1") % 10 == 0) | (F.col("d2") % 10 == 0))
+        .select("d1", "d2")
+    )
+
+
 @query(
     "dedup_containment_incremental_recall",
     oracle=f"""
@@ -989,7 +1015,12 @@ def dedup_containment_incremental_recall(
     against the exact ≥0.9 containment pairs touching the batch —
     whose count the oracle recomputes portably, with the ≥80% floor as
     the hash-checked boolean. A store-format, counts-rollup,
-    probe-direction, or gap-tuning regression flips the row red."""
+    probe-direction, or gap-tuning regression flips the row red.
+
+    The store chain (build, append, probe) and the exact tier need
+    only the corpus, so they run concurrently from two threads (the
+    ``dedup_arrival_probe`` shape), each ending in a checkpointed pair
+    set; the closing join-agg joins the two checkpoints."""
     import tempfile
 
     from full_docker_etl_spark.operators.dedup import (
@@ -998,6 +1029,10 @@ def dedup_containment_incremental_recall(
         containment_store_append,
         containment_store_build,
     )
+    from full_docker_etl_spark.operators.util import (
+        concurrently,
+        fresh_checkpoint,
+    )
 
     corpus = _quotation_corpus(
         _judge_slice(_docs(spark, sf_dir), memo_key=sf_dir)
@@ -1005,35 +1040,34 @@ def dedup_containment_incremental_recall(
     batch = corpus.where(F.col("doc_id") % 10 == 0)
     rest = corpus.where(F.col("doc_id") % 10 != 0)
     path = tempfile.mkdtemp(prefix="fde_cstore_") + "/store"
-    containment_store_build(
-        rest.where(F.col("doc_id") % 2 != 0), path, "text", "doc_id"
-    )
-    containment_store_append(
-        rest.where(F.col("doc_id") % 2 == 0), path, "text", "doc_id"
-    )
-    # fresh_checkpoint (r19): the probe candidate set is tiny (pairs of
-    # ids), but leaving it lazy makes the closing join-agg action plan
-    # probe ∪ exact as ONE tree — profiled as a ~1.3 s pure
-    # driver-planning gap; the checkpoint splits the plan at no extra
-    # pass (the probe subtree executed exactly once either way).
-    from full_docker_etl_spark.operators.util import fresh_checkpoint
 
-    found = fresh_checkpoint(
-        containment_probe_store(batch, path, "text", "doc_id")
-        .select(
-            F.least("d1", "d2").alias("d1"),
-            F.greatest("d1", "d2").alias("d2"),
-            F.lit(1).alias("_hit"),
+    # Both chains are runs of short jobs separated by driver-side
+    # planning gaps, so two threads overlap the latencies (guide
+    # §2.6). Each ends in fresh_checkpoint, not persist+count: every
+    # subtree executes exactly once, in its checkpoint, and the closing
+    # join-agg plans two LogicalRDDs instead of probe ∪ exact as one
+    # tree (profiled as a ~1.3 s driver-planning gap).
+    def _found():
+        containment_store_build(
+            rest.where(F.col("doc_id") % 2 != 0), path, "text", "doc_id"
         )
-        .distinct()
-    )
-    exact = (
-        containment_pairs(
-            corpus, "text", "doc_id", n=5, threshold=0.9, max_df=1000
+        containment_store_append(
+            rest.where(F.col("doc_id") % 2 == 0), path, "text", "doc_id"
         )
-        .where((F.col("d1") % 10 == 0) | (F.col("d2") % 10 == 0))
-        .select("d1", "d2")
-    )
+        return _probe_hits(
+            containment_probe_store(batch, path, "text", "doc_id")
+        )
+
+    def _exact():
+        return fresh_checkpoint(
+            containment_pairs(
+                corpus, "text", "doc_id", n=5, threshold=0.9, max_df=1000
+            )
+            .where((F.col("d1") % 10 == 0) | (F.col("d2") % 10 == 0))
+            .select("d1", "d2")
+        )
+
+    found, exact = concurrently(_found, _exact)
     return (
         exact.join(found, ["d1", "d2"], "left")
         .agg(
@@ -1071,39 +1105,31 @@ def dedup_incremental_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact-Jaccard ≥0.8 pairs touching the batch — whose count the
     oracle recomputes (portable), with the ≥90% floor as the
     hash-checked boolean. A store-format, probe-join, or fold
-    regression flips the row red."""
+    regression flips the row red.
+
+    The store chain (build, probe) and the exact tier run concurrently
+    from two threads, each ending in a checkpointed pair set — the
+    ``dedup_containment_incremental_recall`` shape."""
     import tempfile
 
     from full_docker_etl_spark.operators.dedup import (
         minhash_probe_store,
         minhash_store_build,
     )
+    from full_docker_etl_spark.operators.util import concurrently
 
     docs = _judge_slice(_docs(spark, sf_dir), memo_key=sf_dir)
     batch = docs.where(F.col("doc_id") % 10 == 0)
     store = docs.where(F.col("doc_id") % 10 != 0)
     path = tempfile.mkdtemp(prefix="fde_mhstore_") + "/store"
-    minhash_store_build(store, path, "text", "doc_id")
-    # fresh_checkpoint (r19): keep the closing join-agg from planning
-    # probe ∪ exact as one tree (the dedup_containment_incremental_
-    # recall rationale — the probe subtree executes exactly once
-    # either way, the checkpoint just cuts the plan)
-    from full_docker_etl_spark.operators.util import fresh_checkpoint
 
-    found = fresh_checkpoint(
-        minhash_probe_store(batch, path, "text", "doc_id", threshold=0.5)
-        .select(
-            F.least("d1", "d2").alias("d1"),
-            F.greatest("d1", "d2").alias("d2"),
-            F.lit(1).alias("_hit"),
+    def _found():
+        minhash_store_build(store, path, "text", "doc_id")
+        return _probe_hits(
+            minhash_probe_store(batch, path, "text", "doc_id", threshold=0.5)
         )
-        .distinct()
-    )
-    exact = (
-        jaccard_pairs(docs, "text", "doc_id", n=5, threshold=0.8, max_df=1000)
-        .where((F.col("d1") % 10 == 0) | (F.col("d2") % 10 == 0))
-        .select("d1", "d2")
-    )
+
+    found, exact = concurrently(_found, lambda: _batch_jaccard_pairs(docs))
     return (
         exact.join(found, ["d1", "d2"], "left")
         .agg(
@@ -1146,7 +1172,12 @@ def dedup_store_maintain(spark: SparkSession, sf_dir: str) -> DataFrame:
     recomputing the exact count portably. A compaction that dropped
     or duplicated signature rows, a vacuum that deleted a committed
     partition, or a manifest flip that lost an append flips the row
-    red."""
+    red.
+
+    The store chain (build, appends, maintain, probe) and the exact
+    tier run concurrently from two threads, each ending in a
+    checkpointed pair set — the ``dedup_containment_incremental_recall``
+    shape."""
     import tempfile
 
     from full_docker_etl_spark.operators.dedup import (
@@ -1155,43 +1186,37 @@ def dedup_store_maintain(spark: SparkSession, sf_dir: str) -> DataFrame:
         minhash_store_build,
         minhash_store_maintain,
     )
+    from full_docker_etl_spark.operators.util import concurrently
 
     docs = _judge_slice(_docs(spark, sf_dir), memo_key=sf_dir)
     batch = docs.where(F.col("doc_id") % 10 == 0)
     store = docs.where(F.col("doc_id") % 10 != 0)
     path = tempfile.mkdtemp(prefix="fde_mhmaint_") + "/store"
-    minhash_store_build(
-        store.where(F.col("doc_id") % 3 == 0), path, "text", "doc_id"
-    )
-    for rem in (1, 2):
-        minhash_store_append(
-            store.where(F.col("doc_id") % 3 == rem), path, "text", "doc_id"
-        )
-    r = minhash_store_maintain(
-        spark, path, max_batches=1, probe_grace_seconds=0.0
-    )
-    maintained_ok = (
-        r["compacted"]
-        and sorted(r["vacuumed"]) == sorted(r["displaced"])
-        and r["after"]["committed_batches"] == 1
-        and r["after"]["orphan_batches"] == 0
-    )
-    # fresh_checkpoint (r19): the dedup_incremental_recall rationale
-    from full_docker_etl_spark.operators.util import fresh_checkpoint
 
-    found = fresh_checkpoint(
-        minhash_probe_store(batch, path, "text", "doc_id", threshold=0.5)
-        .select(
-            F.least("d1", "d2").alias("d1"),
-            F.greatest("d1", "d2").alias("d2"),
-            F.lit(1).alias("_hit"),
+    def _found():
+        minhash_store_build(
+            store.where(F.col("doc_id") % 3 == 0), path, "text", "doc_id"
         )
-        .distinct()
-    )
-    exact = (
-        jaccard_pairs(docs, "text", "doc_id", n=5, threshold=0.8, max_df=1000)
-        .where((F.col("d1") % 10 == 0) | (F.col("d2") % 10 == 0))
-        .select("d1", "d2")
+        for rem in (1, 2):
+            minhash_store_append(
+                store.where(F.col("doc_id") % 3 == rem),
+                path, "text", "doc_id",
+            )
+        r = minhash_store_maintain(
+            spark, path, max_batches=1, probe_grace_seconds=0.0
+        )
+        maintained_ok = (
+            r["compacted"]
+            and sorted(r["vacuumed"]) == sorted(r["displaced"])
+            and r["after"]["committed_batches"] == 1
+            and r["after"]["orphan_batches"] == 0
+        )
+        return maintained_ok, _probe_hits(
+            minhash_probe_store(batch, path, "text", "doc_id", threshold=0.5)
+        )
+
+    (maintained_ok, found), exact = concurrently(
+        _found, lambda: _batch_jaccard_pairs(docs)
     )
     return (
         exact.join(found, ["d1", "d2"], "left")
@@ -3634,9 +3659,10 @@ def dedup_keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:
     # 6a shape: the NB subtree executed exactly once either way, so
     # the eager checkpoint adds no extra pass, and its jobs back-fill
     # the CC rounds' driver gaps).
-    from concurrent.futures import ThreadPoolExecutor
-
-    from full_docker_etl_spark.operators.util import fresh_checkpoint
+    from full_docker_etl_spark.operators.util import (
+        concurrently,
+        fresh_checkpoint,
+    )
 
     def _scored():
         return fresh_checkpoint(
@@ -3646,10 +3672,7 @@ def dedup_keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).select("doc_id", "log_odds")
         )
 
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        f_comps = pool.submit(connected_components, pairs)
-        f_scored = pool.submit(_scored)
-        comps, scored = f_comps.result(), f_scored.result()
+    comps, scored = concurrently(lambda: connected_components(pairs), _scored)
     return keep_best_per_cluster(
         scored, comps, [F.col("log_odds").desc()]
     ).select("doc_id", "comp", "log_odds")
@@ -3721,7 +3744,10 @@ def dedup_arrival_policy(spark: SparkSession, sf_dir: str) -> DataFrame:
         resolve_arrival,
     )
     from full_docker_etl_spark.operators.text import nb_quality_classifier
-    from full_docker_etl_spark.operators.util import fresh_checkpoint
+    from full_docker_etl_spark.operators.util import (
+        concurrently,
+        fresh_checkpoint,
+    )
 
     docs = _docs(spark, sf_dir).where(F.col("text").isNotNull())
     # fresh_checkpoint, not persist: the dedup_batch_arrival rationale
@@ -3734,8 +3760,6 @@ def dedup_arrival_policy(spark: SparkSession, sf_dir: str) -> DataFrame:
     # CC refresh chain (eager, latency-bound) overlapped with the NB
     # training/scoring pipeline (compute-bound, consumed only by the
     # final resolution) — the dedup_keep_best rationale.
-    from concurrent.futures import ThreadPoolExecutor
-
     def _labels():
         standing = connected_components(
             pairs.where(~in_batch[0] & ~in_batch[1])
@@ -3755,10 +3779,7 @@ def dedup_arrival_policy(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
 
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        f_labels = pool.submit(_labels)
-        f_scored = pool.submit(_scored)
-        labels, scored = f_labels.result(), f_scored.result()
+    labels, scored = concurrently(_labels, _scored)
     return resolve_arrival(
         scored, labels, [F.col("log_odds").desc()]
     ).select("doc_id", "comp", "log_odds", "is_new", "kept")
@@ -3811,7 +3832,6 @@ def dedup_arrival_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     A store-format, probe-join, verify, incremental-CC or resolution
     regression flips a boolean red."""
     import tempfile
-    from concurrent.futures import ThreadPoolExecutor
 
     from full_docker_etl_spark.operators.dedup import (
         connected_components,
@@ -3822,7 +3842,10 @@ def dedup_arrival_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
         minhash_store_build,
         resolve_arrival,
     )
-    from full_docker_etl_spark.operators.util import fresh_checkpoint
+    from full_docker_etl_spark.operators.util import (
+        concurrently,
+        fresh_checkpoint,
+    )
 
     docs = _judge_slice(_docs(spark, sf_dir), memo_key=sf_dir)
     batch = docs.where(F.col("doc_id") % 10 == 0)
@@ -3835,10 +3858,12 @@ def dedup_arrival_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     # standing-component CC, an eager checkpoint loop) are independent
     # until the label refreshes below consume both; each is a run of
     # sub-second jobs separated by driver-side planning gaps, so two
-    # threads overlap the latencies (guide §2.6). Unlike the rejected
-    # exact-tier overlap in the one-shot recall queries (see
-    # OPTIMIZATION_r18.md), BOTH chains here are already eager — no
-    # extra materializing action is introduced.
+    # threads overlap the latencies (guide §2.6). The rule for such an
+    # overlap: the exact side ends in a CHECKPOINTED pair set, the one
+    # pass its consumers need anyway, never in persist+count — that
+    # runs the pair pipeline in an extra counting action and leaves
+    # every consumer planning through it (measured net-negative, see
+    # OPTIMIZATION_r18.md). The recall composites overlap the same way.
     def _store_side():
         minhash_store_build(
             standing_docs.where(F.col("doc_id") % 2 == 0),
@@ -3865,11 +3890,7 @@ def dedup_arrival_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
             exact_all.where(~in_batch[0] & ~in_batch[1])
         )
 
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        f_store = pool.submit(_store_side)
-        f_exact = pool.submit(_exact_side)
-        f_store.result()
-        exact_all, standing_labels = f_exact.result()
+    _, (exact_all, standing_labels) = concurrently(_store_side, _exact_side)
     cand = minhash_probe_store(
         batch, path, "text", "doc_id", threshold=0.5
     ).select(
@@ -3917,10 +3938,9 @@ def dedup_arrival_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select("doc_id")
         )
 
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        f_probe = pool.submit(_drops, verified)
-        f_exact = pool.submit(_drops, exact_batch)
-        probe_drops, exact_drops = f_probe.result(), f_exact.result()
+    probe_drops, exact_drops = concurrently(
+        lambda: _drops(verified), lambda: _drops(exact_batch)
+    )
     pair_stats = (
         exact_batch.join(
             verified.withColumn("_hit", F.lit(1)), ["d1", "d2"], "left"

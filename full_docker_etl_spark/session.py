@@ -75,6 +75,14 @@ _CLUSTER_READY_DEFAULTS = {
     # change every later parquet read (and every memoized schema key)
     # depending on whether such a table had been opened yet.
     "spark.sql.legacy.parquet.nanosAsLong": "true",
+    # No DataFrame call-site capture: with it on, every F.* and
+    # DataFrame call also pays getActiveSession, a conf.get, a JVM
+    # PySparkCurrentOrigin set and clear, and a Python inspect.stack()
+    # — about half the py4j round trips of planning a store probe.
+    # Off, an error names no Python call site for the failing
+    # expression. A static conf that PySpark reads once per process, so
+    # it is set here and not by tune_session.
+    "spark.python.sql.dataFrameDebugging.enabled": "false",
 }
 
 # Runtime-settable subset (SQLConf) — applicable to a session we did not

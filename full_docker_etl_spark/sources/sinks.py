@@ -434,6 +434,7 @@ def _write_commit_meta(
     dv: bool,
     schema: dict | None = None,
     dv_schema: dict | None = None,
+    partition_by: tuple[str, ...] = (),
 ) -> None:
     """Record WHAT a commit touched next to its snapshot
     (``_COMMIT.json``, hidden from the data scan): ``full`` = the whole
@@ -450,14 +451,25 @@ def _write_commit_meta(
     and ``dv_schema`` its deletion vector's: what the writer already
     knew it wrote, so :meth:`VersionedTable.read` opens the snapshot
     without a footer-inference job (Delta keeps the table schema in its
-    log for the same reason). ``schema`` is recorded as None when the
-    snapshot holds no data file: an emptied partitioned table keeps
-    reading by inference, exactly as before pins existed."""
+    log for the same reason). A snapshot holding no data file (an
+    emptied partitioned table) has no directory path to supply the
+    ``partition_by`` columns, so its pin carries them too, typed as
+    string — what a path reads as with partition type inference off,
+    the session default — and the snapshot reads as an empty frame
+    instead of failing to infer a schema."""
+    if schema is not None:
+        fields = [f for f in schema["fields"] if f["name"] not in partition_by]
+        if not _holds_data(vdir):
+            fields += [
+                {"name": c, "type": "string", "nullable": True, "metadata": {}}
+                for c in partition_by
+            ]
+        schema = {**schema, "fields": fields}
     meta = {
         "full": bool(full),
         "leaves": sorted(leaves),
         "dv": bool(dv),
-        "schema": schema if schema is not None and _holds_data(vdir) else None,
+        "schema": schema,
         "dv_schema": dv_schema,
     }
     tmp = os.path.join(vdir, f"._commit.tmp.{uuid.uuid4().hex[:8]}")
@@ -662,12 +674,12 @@ class VersionedTable:
         with it (:func:`~full_docker_etl_spark.sources.catalog.read_parquet`
         with ``schema``), so even the first read of a version just
         published starts no footer-inference job; partition columns
-        still come from the directory paths. A snapshot without a pin —
-        written by an earlier release, missing its ``_COMMIT.json``, or
-        holding no data file — falls back to inference through the
-        per-directory memo (keyed by real path, ``os.stat`` signature
-        and the parquet-inference confs), which infers each immutable
-        snapshot once."""
+        still come from the directory paths (an empty snapshot's pin
+        carries them). A snapshot without a pin — written by an earlier
+        release or missing its ``_COMMIT.json`` — falls back to
+        inference through the per-directory memo (keyed by real path,
+        ``os.stat`` signature and the parquet-inference confs), which
+        infers each immutable snapshot once."""
         if version is None:
             version = self.current_version()
             if version is None:
@@ -791,6 +803,7 @@ class VersionedTable:
             dv=has_dv,
             schema=pins.get("schema"),
             dv_schema=pins.get("dv_schema") if has_dv else None,
+            partition_by=dest.partition_by,
         )
         raced = False
         with dest._publish_lock():
@@ -950,10 +963,12 @@ class VersionedTable:
                 dv=dv_schema is not None,
                 schema=schema,
                 dv_schema=dv_schema,
+                partition_by=self.partition_by,
             )
         else:
             _write_commit_meta(
-                vdir, full=True, leaves=[], dv=False, schema=schema
+                vdir, full=True, leaves=[], dv=False, schema=schema,
+                partition_by=self.partition_by,
             )
         self.last_commit_rebased = False
         try:
@@ -1050,6 +1065,7 @@ class VersionedTable:
                 leaves=sorted(mine),
                 dv=False,
                 schema=my_meta.get("schema"),
+                partition_by=self.partition_by,
             )
             try:
                 self._publish(new_version, new_vdir, head)
@@ -1718,6 +1734,7 @@ class VersionedTable:
             dv=True,
             schema=(_read_commit_meta(parent_dir) or {}).get("schema"),
             dv_schema=data_schema(dv_df),
+            partition_by=self.partition_by,
         )
         try:
             self._publish(version, vdir, expected_parent)

@@ -816,16 +816,16 @@ def test_store_write_failure_releases_persisted_parent(
         parents.append(out)
         return out
 
-    real_overlap = D._overlap
+    real_concurrently = D.concurrently
 
     def fail_last_write(*thunks):
         def boom():
             raise RuntimeError("simulated store write failure")
 
-        real_overlap(*thunks[:-1], boom)
+        real_concurrently(*thunks[:-1], boom)
 
     monkeypatch.setattr(D, parent_fn, capture)
-    monkeypatch.setattr(D, "_overlap", fail_last_write)
+    monkeypatch.setattr(D, "concurrently", fail_last_write)
     with pytest.raises(RuntimeError, match="simulated store write failure"):
         append(df.where("doc_id % 2 = 1"), path, "text", "doc_id")
 

@@ -1640,17 +1640,23 @@ def test_unpinned_snapshots_still_read_by_inference(spark):
         assert sorted(map(str, got.collect())) == want_rows, label
 
 
-def test_empty_snapshot_reads_as_before_pins(spark):
-    """A partitioned snapshot holding no data file records no schema
-    and still refuses to infer one; an unpartitioned empty write holds
-    one empty file and opens with its schema."""
-    from pyspark.errors import AnalysisException
-
+def test_empty_snapshot_reads_as_an_empty_frame(spark):
+    """A partitioned snapshot holding no data file has no directory
+    path to supply its partition columns, so its pin carries them as
+    strings and it reads as an empty frame with the schema a non-empty
+    snapshot of the table reads with; an unpartitioned empty write
+    holds one empty file and opens with its schema."""
     t = _table(partition_by=("p",))
-    v = t.overwrite(spark.createDataFrame([], "k long, p string"))
-    assert _pin(t, v)["schema"] is None
-    with pytest.raises(AnalysisException, match="UNABLE_TO_INFER_SCHEMA"):
-        t.read(spark)
+    v = t.overwrite(spark.createDataFrame([], "k long, p int"))
+    assert [(f["name"], f["type"]) for f in _pin(t, v)["schema"]["fields"]] == [
+        ("k", "long"), ("p", "string")
+    ]
+    got, jobs = _open_jobs(spark, t)
+    assert jobs == 0
+    full = _table(partition_by=("p",))
+    full.overwrite(spark.createDataFrame([(1, 7)], "k long, p int"))
+    assert got.schema == full.read(spark).schema
+    assert got.count() == 0
     flat = _table()
     v = flat.overwrite(spark.createDataFrame([], "k long, p string"))
     got = flat.read(spark)
@@ -1658,6 +1664,33 @@ def test_empty_snapshot_reads_as_before_pins(spark):
         os.path.join(flat.root, "_versions", v)
     ).schema
     assert got.count() == 0
+
+
+def test_empty_partitioned_table_takes_merge_delete_dv_and_compact(spark):
+    """An emptied partitioned table stays usable: a vector on the empty
+    snapshot compacts away, a merge lands its rows, and a compaction
+    folding a vector over them reads back the surviving rows, each new
+    snapshot pinned with its data schema only."""
+    schema = "k long, p string, v string"
+    t = _table(partition_by=("p",))
+    t.overwrite(spark.createDataFrame([], schema))
+    t.delete_dv(spark.createDataFrame([(9, "a")], "k long, p string"), ["k", "p"])
+    t.compact(spark)
+    assert t.read(spark).count() == 0
+
+    t.merge(
+        spark.createDataFrame(
+            [(1, "a", "x"), (2, "a", "y"), (3, "b", "z")], schema
+        ),
+        keys=["k", "p"],
+    )
+    t.delete_dv(spark.createDataFrame([(2, "a")], "k long, p string"), ["k", "p"])
+    v = t.compact(spark)
+    assert v is not None
+    assert [f["name"] for f in _pin(t, v)["schema"]["fields"]] == ["k", "v"]
+    assert sorted(
+        tuple(r) for r in t.read(spark).select("k", "p", "v").collect()
+    ) == [(1, "a", "x"), (3, "b", "z")]
 
 
 # ------------------------------------------- layout under a low advisory

@@ -23,13 +23,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-
-def _next_job_id(spark) -> int:
-    """The id the next job will get, read synchronously from the DAG
-    scheduler. The status store cannot give it: the listener bus fills
-    it asynchronously, and it evicts jobs past spark.ui.retainedJobs,
-    so its list size is no job count."""
-    return int(spark.sparkContext._jsc.sc().dagScheduler().numTotalJobs())
+from tools.job_profile import _next_job_id  # noqa: E402
 
 
 def _layers(spark, lo: int, hi: int) -> dict:
