@@ -58,7 +58,8 @@ def concurrently(*thunks) -> list:
     read, and the first exception (in submission order) is re-raised
     only then: a failing thunk never leaves a sibling's jobs running
     past the call, so a store write that raises still publishes
-    nothing half-done. A single thunk runs inline.
+    nothing half-done. A single thunk runs inline; several need an
+    active session, in PySpark's default pinned thread mode.
 
     Concurrent jobs over one persisted parent compute each partition
     once (block-level locking makes later arrivals wait), so sharing a
@@ -67,22 +68,14 @@ def concurrently(*thunks) -> list:
         return [t() for t in thunks]
     from concurrent.futures import ThreadPoolExecutor
 
-    from pyspark import SparkContext
     from pyspark.sql import SparkSession
     from pyspark.util import inheritable_thread_target
 
-    targets = list(thunks)
-    if SparkContext._active_spark_context is not None:
-        session = SparkSession.active()
-        # one wrapper per thunk: each takes its own copy of the caller's
-        # properties, so a label one thunk sets never reaches a sibling.
-        # The session form also carries job tags; PySpark's unpinned
-        # thread mode returns the session itself, and there threads
-        # hold no per-thread properties to carry.
-        for i, t in enumerate(thunks):
-            wrap = inheritable_thread_target(session)
-            if callable(wrap):
-                targets[i] = wrap(t)
+    # one wrapper per thunk: each takes its own copy of the caller's
+    # properties (and, through the session, its job tags), so a label
+    # one thunk sets never reaches a sibling
+    session = SparkSession.active()
+    targets = [inheritable_thread_target(session)(t) for t in thunks]
     with ThreadPoolExecutor(max_workers=len(targets)) as pool:
         futures = [pool.submit(t) for t in targets]
     return [f.result() for f in futures]

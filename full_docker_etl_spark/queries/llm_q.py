@@ -1109,7 +1109,10 @@ def dedup_incremental_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     The store chain (build, probe) and the exact tier run concurrently
     from two threads, each ending in a checkpointed pair set — the
-    ``dedup_containment_incremental_recall`` shape."""
+    ``dedup_containment_incremental_recall`` shape. Measured in one
+    process at local[3]: 14-15% faster than running the two chains one
+    after the other, or than planning the exact tier into the closing
+    join-agg."""
     import tempfile
 
     from full_docker_etl_spark.operators.dedup import (
@@ -1177,7 +1180,9 @@ def dedup_store_maintain(spark: SparkSession, sf_dir: str) -> DataFrame:
     The store chain (build, appends, maintain, probe) and the exact
     tier run concurrently from two threads, each ending in a
     checkpointed pair set — the ``dedup_containment_incremental_recall``
-    shape."""
+    shape. Measured in one process at local[3]: 8-16% faster than
+    running the two chains one after the other, or than planning the
+    exact tier into the closing join-agg."""
     import tempfile
 
     from full_docker_etl_spark.operators.dedup import (

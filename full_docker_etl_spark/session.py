@@ -79,9 +79,13 @@ _CLUSTER_READY_DEFAULTS = {
     # DataFrame call also pays getActiveSession, a conf.get, a JVM
     # PySparkCurrentOrigin set and clear, and a Python inspect.stack()
     # — about half the py4j round trips of planning a store probe.
-    # Off, an error names no Python call site for the failing
-    # expression. A static conf that PySpark reads once per process, so
-    # it is set here and not by tune_session.
+    # The cost of turning it off is diagnostics: an analysis or runtime
+    # error no longer names the Python call site of the failing
+    # expression. To debug one, build the process's first session with
+    # get_spark(extra_conf={"spark.python.sql.dataFrameDebugging.enabled":
+    # "true"}) — extra_conf overrides every default here. PySpark reads
+    # the conf once per process, from the first active session, so it is
+    # set here and not by tune_session.
     "spark.python.sql.dataFrameDebugging.enabled": "false",
 }
 

@@ -137,3 +137,21 @@ def test_session_builds_columns_without_call_site_capture(spark, monkeypatch):
     assert spark.conf.get("spark.python.sql.dataFrameDebugging.enabled") == "false"
     spark.range(3).select((F.col("id") + F.lit(1)).alias("x")).where("x > 1")
     assert captured == []
+
+
+def test_call_site_capture_can_be_turned_back_on(monkeypatch):
+    """``extra_conf`` overrides the capture default, so a debugging
+    session can name the Python call site of a failing expression
+    again. Checked on the confs the builder receives (no session is
+    built: PySpark reads the conf once per process)."""
+    from pyspark.sql import SparkSession
+
+    from full_docker_etl_spark.session import get_spark
+
+    monkeypatch.setattr(
+        SparkSession.Builder, "getOrCreate", lambda self: dict(self._options)
+    )
+    key = "spark.python.sql.dataFrameDebugging.enabled"
+    assert get_spark(master="local[1]")[key] == "false"
+    on = get_spark(master="local[1]", extra_conf={key: "true"})
+    assert on[key] == "true"
