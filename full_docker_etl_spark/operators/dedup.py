@@ -35,7 +35,11 @@ from pyspark.sql import functions as F
 # serialize the whole tier on one core (see operators/util.spread).
 from full_docker_etl_spark.operators.util import concurrently, rebalanced
 from full_docker_etl_spark.operators.util import spread as _spread
-from full_docker_etl_spark.sources.catalog import data_schema, read_parquet
+from full_docker_etl_spark.sources.catalog import (
+    atomic_write,
+    data_schema,
+    read_parquet,
+)
 
 
 def content_hash(col: Column) -> Column:
@@ -818,61 +822,62 @@ def containment_store_build(
       rolled up at build/append time so probes never rescan the index
       to enforce the ``max_bucket`` cap.
 
-    All three tables are hive-partitioned by ``batch`` (one value per
-    build/append call) and governed by ``_manifest.json``, an atomic
-    commit pointer listing the batch ids readers may see: the three
-    physical writes land first, the manifest publishes last via
-    ``os.replace`` (the :class:`~full_docker_etl_spark.sources.sinks.
-    VersionedTable` pointer pattern). A build/append that dies between
-    writes leaves orphan ``batch=`` partitions NO reader ever selects,
-    so a retried append can never double-count bucket occupancy or
-    duplicate sketch rows — the retry writes a fresh batch id and only
-    a fully-written batch is ever published.
-    :func:`containment_store_vacuum` reclaims orphans.
+    Crash safety and visibility are :func:`_store_write`'s: a retried
+    append can never double-count bucket occupancy or duplicate sketch
+    rows.
 
     Parameters persist in ``_meta.json`` and are VALIDATED at probe
     time — mismatched sketches would otherwise fail silently as zero
     candidates (disjoint bucket spaces), admitting every duplicate."""
-    import json
-    import os
-
     specs = _ensemble_gap_specs(
         threshold, k, target_recall, floor_recall, max_gap
     )
-    _store_build_reset(path)  # guarded: empty dir or existing store only
-    with open(os.path.join(path, "_meta.json"), "w") as fh:
-        json.dump(
-            {
-                "n": n, "k": k, "threshold": threshold,
-                "target_recall": target_recall,
-                "floor_recall": floor_recall, "max_bucket": max_bucket,
-                "max_gap": max_gap,
-                # The DERIVED band specs, persisted alongside the
-                # parameters they derive from: the probe's meta guard
-                # compares parameters, but the bucket space is built
-                # from the specs — if a future release's
-                # _ensemble_gap_specs derives different specs from the
-                # same parameters (a rounding-edge change: r15's
-                # log(1-p)→log1p(-p) flip could move a ceil()), probes
-                # against an old store must fail LOUDLY instead of
-                # silently losing index/probe bucket overlap.
-                "gap_specs": specs,
-            },
-            fh,
-        )
+    _store_build_reset(
+        path,
+        {
+            "n": n, "k": k, "threshold": threshold,
+            "target_recall": target_recall,
+            "floor_recall": floor_recall, "max_bucket": max_bucket,
+            "max_gap": max_gap,
+            # The DERIVED band specs, persisted alongside the
+            # parameters they derive from: the probe's meta guard
+            # compares parameters, but the bucket space is built
+            # from the specs — if a future release's
+            # _ensemble_gap_specs derives different specs from the
+            # same parameters (a rounding-edge change: r15's
+            # log(1-p)→log1p(-p) flip could move a ceil()), probes
+            # against an old store must fail LOUDLY instead of
+            # silently losing index/probe bucket overlap.
+            "gap_specs": specs,
+        },
+    )
     _containment_store_write(df, path, text_col, id_col, n, k, specs)
 
 
 #: Manifest/partition column governing persisted-store visibility —
 #: shared by every incremental sketch store in this module (containment
-#: ensemble, MinHash, substring fingerprints). Reserved in the sketch
-#: tables; never collides with user columns (the tables carry only
-#: generated names).
+#: ensemble, MinHash, substring fingerprints, shingle df). Reserved in
+#: the sketch tables; never collides with user columns (the tables
+#: carry only generated names).
 _STORE_BATCH_COL = "batch"
-#: Per-store physical tables, for vacuum.
-_CONTAINMENT_TABLES = ("docs", "bands", "counts")
-_MINHASH_TABLES = ("sigs", "bands")
-_SUBSTRING_TABLES = ("fps", "counts")
+#: The store layout on disk. Every lifecycle operation except
+#: sketching (write, read, compact, stats, vacuum, maintain, migrate)
+#: reads a store through these three rules, so none needs to know
+#: which family wrote it:
+#:
+#: (a) Tables: a store's tables are the directories under its root
+#:     whose names start with neither ``_`` nor ``.`` — ``_meta.json``,
+#:     ``_manifest.json`` and its lock are metadata (:func:`_store_tables`).
+#: (b) Partitioning: a table is hive-partitioned by ``batch`` (the
+#:     batch directory a write targets) and by whichever of
+#:     ``side``/``bkt`` its frame carries — containment ``bands`` by
+#:     ``side``, substring ``fps`` by ``bkt``. Partition columns are
+#:     discovered from paths on read, so never part of a pinned data
+#:     schema.
+#: (c) Additive tables: a table named ``counts`` holds additive
+#:     partials that readers sum over ``cnt``; compaction re-aggregates
+#:     ``sum(cnt)`` grouped by its other data columns.
+_STORE_PARTITION_COLS = (_STORE_BATCH_COL, "side", "bkt")
 
 
 def _containment_store_write(
@@ -884,31 +889,13 @@ def _containment_store_write(
     k: int,
     specs: list[tuple[int, int, int]],
 ) -> None:
-    """Shared write half of build/append: per-doc state, both band
-    sides (one pass, one side-partitioned write), and the additive
-    bucket-count rollup — all stamped with a fresh batch id and made
-    visible ONLY by the trailing atomic manifest publish (see
-    :func:`containment_store_build`: a crash mid-way leaves invisible
-    orphans, never a half-applied batch). The docs frame is the
-    materialization boundary (the :func:`_ensemble_rows` caveat) —
-    persisted SERIALIZED with disk spill like every other corpus-scale
-    hashed-shingle frame in this tier (it carries harr for the whole
-    build/append input; the deserialized default would pin executor
-    heap), and released once the derived tables are on disk."""
-    import uuid
+    """The ensemble sketch: per-doc state is the persisted parent (the
+    :func:`_ensemble_rows` materialization boundary; it carries harr
+    for the whole build/append input), banded into both sides in one
+    pass and one side-partitioned table, plus the additive
+    bucket-count rollup."""
 
-    from pyspark import StorageLevel
-
-    batch_id = uuid.uuid4().hex[:12]
-    # writes target the batch partition DIRECTORY directly (hive
-    # layout by path, discovered as the `batch` column on read) — the
-    # plain-committer fast path; a constant-valued partitionBy would
-    # route every write through the dynamic-partition committer for
-    # the same bytes on disk
-    docs = _ensemble_docs(df, text_col, id_col, n, k).persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
-    try:
+    def tables(docs: DataFrame) -> dict[str, DataFrame]:
         index = _ensemble_rows(docs, _ensemble_index_schemes(specs))
         bands = index.withColumn("side", F.lit("i")).unionByName(
             _ensemble_rows(docs, specs).withColumn("side", F.lit("p"))
@@ -916,25 +903,79 @@ def _containment_store_write(
         counts = index.groupBy("p", "r", "band", "bucket").agg(
             F.count(F.lit(1)).alias("cnt")
         )
-        schemas = _store_schemas(path, docs=docs, bands=bands, counts=counts)
-        # the derived tables share the persisted parent and no ordering:
-        # only the manifest publish below sequences visibility, so they
-        # write concurrently, and a failed write leaves invisible
-        # orphans, never a half-published batch
-        concurrently(
-            lambda: rebalanced(docs).write.parquet(
-                _store_batch_dir(path, "docs", batch_id)
-            ),
-            lambda: rebalanced(bands, "side")
-            .write.partitionBy("side")
-            .parquet(_store_batch_dir(path, "bands", batch_id)),
-            lambda: rebalanced(counts).write.parquet(
-                _store_batch_dir(path, "counts", batch_id)
-            ),
-        )
+        return {"docs": docs, "bands": bands, "counts": counts}
+
+    _store_write(path, _ensemble_docs(df, text_col, id_col, n, k), tables)
+
+
+def _store_write(path: str, parent: DataFrame, tables) -> None:
+    """THE write half of every store build and append: ``tables`` maps
+    the family's sketch frame ``parent`` to the batch's named table
+    frames, and this writes them as one batch.
+
+    Crash safety and visibility: every table lands under a fresh
+    ``batch=<id>`` partition (:func:`_store_write_tables`), and the
+    batch becomes visible ONLY with the trailing atomic manifest
+    publish (``os.replace`` — the :class:`~full_docker_etl_spark.
+    sources.sinks.VersionedTable` pointer pattern). A build/append
+    that dies between writes leaves orphan ``batch=`` partitions NO
+    reader ever selects, so a retried append can never double-count an
+    additive ``counts`` partial or duplicate sketch rows — the retry
+    writes a fresh batch id and only a fully-written batch is ever
+    published. :func:`store_vacuum` reclaims the orphans.
+
+    When several tables derive from ``parent`` it is their
+    materialization boundary, so the sketch is computed once: persisted
+    SERIALIZED with disk spill like every other corpus-scale
+    hashed-shingle frame in this module (it can carry per-doc arrays
+    for the whole build/append input; the deserialized default would
+    pin executor heap). A single table is written as it is computed: a
+    persisted frame with one consumer saves nothing and costs its own
+    job under AQE. The ``finally`` that releases the parent covers
+    deriving the tables, checking their schemas against the pinned
+    ones (:func:`_store_schemas`) and writing them — a failure at any
+    step releases what it pinned and publishes nothing. The tables
+    share the parent and no ordering: only the manifest publish
+    sequences visibility, so they write concurrently, and a failed
+    write leaves invisible orphans, never a half-published batch."""
+    import uuid
+
+    from pyspark import StorageLevel
+
+    batch_id = uuid.uuid4().hex[:12]
+    try:
+        frames = tables(parent)
+        if len(frames) > 1:
+            parent.persist(StorageLevel.MEMORY_AND_DISK)
+        schemas = _store_schemas(path, **frames)
+        _store_write_tables(path, batch_id, frames)
     finally:
-        docs.unpersist()
+        parent.unpersist()
     _store_manifest_publish(path, batch_id, schemas)
+
+
+def _store_write_tables(
+    path: str, batch_id: str, frames: dict[str, DataFrame]
+) -> None:
+    """Write each named frame to its table's ``batch_id`` directory,
+    all concurrently, each through :func:`rebalanced` and
+    hive-partitioned by the ``side``/``bkt`` columns it carries (layout
+    rule b). Writes target the batch partition DIRECTORY directly
+    (hive layout by path, discovered as the ``batch`` column on read) —
+    the plain-committer fast path; a constant-valued ``partitionBy``
+    would route every write through the dynamic-partition committer for
+    the same bytes on disk."""
+
+    def write(table: str, frame: DataFrame) -> None:
+        parts = [c for c in ("side", "bkt") if c in frame.columns]
+        writer = rebalanced(frame, *parts).write
+        if parts:
+            writer = writer.partitionBy(*parts)
+        writer.parquet(_store_batch_dir(path, table, batch_id))
+
+    concurrently(
+        *[lambda t=t, f=f: write(t, f) for t, f in frames.items()]
+    )
 
 
 def _store_manifest_path(path: str) -> str:
@@ -943,13 +984,15 @@ def _store_manifest_path(path: str) -> str:
     return os.path.join(path, "_manifest.json")
 
 
-def _store_build_reset(path: str) -> None:
-    """Clear ``path`` for a fresh ``*_store_build`` — guarded: only a
+def _store_build_reset(path: str, meta: dict) -> None:
+    """Clear ``path`` for a fresh ``*_store_build`` and record the
+    store's sketch parameters in ``_meta.json`` — guarded: only a
     directory that is empty or LOOKS LIKE A STORE (carries
     ``_meta.json`` or ``_manifest.json``) is deleted. An unconditional
     rmtree would silently destroy whatever a mistyped path points at
     (the pre-r16 behavior rewrote only known table subdirs, so the
     blast radius of a bad path was bounded — keep it bounded)."""
+    import json
     import os
     import shutil
 
@@ -964,6 +1007,56 @@ def _store_build_reset(path: str) -> None:
             )
         shutil.rmtree(path)
     os.makedirs(path, exist_ok=True)
+    atomic_write(os.path.join(path, "_meta.json"), json.dumps(meta))
+
+
+def _store_meta(path: str) -> dict:
+    """The sketch parameters the store's build recorded in
+    ``_meta.json``: what appends re-use (the caller cannot
+    desynchronize them) and probes validate against."""
+    import json
+    import os
+
+    with open(os.path.join(path, "_meta.json")) as fh:
+        return json.load(fh)
+
+
+def _store_tables(path: str) -> list[str]:
+    """The store's table names, sorted (layout rule a)."""
+    import os
+
+    return sorted(
+        entry
+        for entry in os.listdir(path)
+        if entry[0] not in "_." and os.path.isdir(os.path.join(path, entry))
+    )
+
+
+def _store_batch_dirs(path: str):
+    """``(table, batch_id, directory)`` for every ``batch=`` partition
+    on disk, committed or not."""
+    import os
+
+    prefix = f"{_STORE_BATCH_COL}="
+    for table in _store_tables(path):
+        tdir = os.path.join(path, table)
+        for entry in sorted(os.listdir(tdir)):
+            if entry.startswith(prefix):
+                yield table, entry[len(prefix):], os.path.join(tdir, entry)
+
+
+def _store_orphan_clock(stamps: dict[str, float], bid: str, bdir: str):
+    """When an orphan batch stopped being visible: the manifest's
+    displaced-at stamp, else its directory mtime (None once a
+    concurrent vacuum has removed it)."""
+    import os
+
+    if bid in stamps:
+        return stamps[bid]
+    try:
+        return os.path.getmtime(bdir)
+    except OSError:
+        return None
 
 
 def _store_batch_dir(path: str, table: str, batch_id: str) -> str:
@@ -987,7 +1080,7 @@ def _store_manifest_load(path: str) -> dict:
     carries them unchanged. Readers open committed batches with
     ``spark.read.schema(pinned)`` (:func:`_store_read_committed`), so an
     open starts no footer-inference job. Manifests written by an earlier
-    release or by ``*_store_migrate`` carry none and load with
+    release or by :func:`store_migrate` carry none and load with
     ``schemas`` empty — their readers infer, as before.
 
     The ``displaced`` map records the
@@ -1009,7 +1102,7 @@ def _store_manifest_load(path: str) -> dict:
             "either a build that crashed before publishing (rebuild "
             "with the store's *_store_build) or a pre-manifest layout "
             "(fold it into one published batch, without re-sketching, "
-            "via the store's *_store_migrate)"
+            "via store_migrate)"
         )
     with open(mpath) as fh:
         doc = json.load(fh)
@@ -1031,25 +1124,21 @@ def _store_manifest_write(
     schemas: dict[str, dict] | None = None,
 ) -> None:
     """Publish the committed set (with the displaced-at stamp map and
-    the pinned table schemas) atomically (write sibling tmp,
-    ``os.replace`` — readers see the old or the new document, never a
-    torn file)."""
+    the pinned table schemas) atomically
+    (:func:`~full_docker_etl_spark.sources.catalog.atomic_write` —
+    readers see the old or the new document, never a torn file)."""
     import json
-    import os
-    import uuid
 
-    mpath = _store_manifest_path(path)
-    tmp = f"{mpath}.tmp.{uuid.uuid4().hex[:8]}"
-    with open(tmp, "w") as fh:
-        json.dump(
+    atomic_write(
+        _store_manifest_path(path),
+        json.dumps(
             {
                 "batches": batches,
                 "displaced": displaced or {},
                 "schemas": schemas or {},
-            },
-            fh,
-        )
-    os.replace(tmp, mpath)
+            }
+        ),
+    )
 
 
 @_contextmanager
@@ -1123,7 +1212,7 @@ def _store_manifest_replace(
     Every DISPLACED batch id (committed under ``expected``, absent
     from ``batches``) gets a displaced-at stamp recorded in the
     manifest's ``displaced`` map IN THE SAME ATOMIC WRITE as the flip:
-    :func:`_store_vacuum`'s grace window measures against that stamp,
+    :func:`store_vacuum`'s grace window measures against that stamp,
     and displacement is the instant the race it protects against (a
     probe planned under the pre-flip manifest) starts its clock.
     Because stamp and flip are one ``os.replace``, there is no window
@@ -1144,7 +1233,6 @@ def _store_manifest_replace(
     import os
     import time
 
-    prefix = f"{_STORE_BATCH_COL}="
     with _store_manifest_lock(path):
         doc = _store_manifest_load(path)
         current = doc["batches"]
@@ -1156,26 +1244,13 @@ def _store_manifest_replace(
                 "batch was NOT published (re-run compaction)"
             )
         displaced = set(expected) - set(batches)
-        table_dirs = [
-            os.path.join(path, entry)
-            for entry in os.listdir(path)
-            if not entry.startswith("_")
-            and os.path.isdir(os.path.join(path, entry))
-        ]
-        for tdir in table_dirs:
-            for batch_id in displaced:
-                try:
-                    # mtime fallback clock, refreshed pre-flip while
-                    # the batch is still committed (see docstring)
-                    os.utime(os.path.join(tdir, f"{prefix}{batch_id}"))
-                except OSError:
-                    pass  # table without this batch
-        on_disk = {
-            entry[len(prefix):]
-            for tdir in table_dirs
-            for entry in os.listdir(tdir)
-            if entry.startswith(prefix)
-        }
+        on_disk: set[str] = set()
+        for _, bid, bdir in _store_batch_dirs(path):
+            on_disk.add(bid)
+            if bid in displaced:
+                # mtime fallback clock, refreshed pre-flip while the
+                # batch is still committed (see docstring)
+                os.utime(bdir)
         now = time.time()
         stamps = {
             bid: ts
@@ -1184,11 +1259,6 @@ def _store_manifest_replace(
         }
         stamps.update({bid: now for bid in displaced})
         _store_manifest_write(path, batches, stamps, doc["schemas"])
-
-
-#: Hive partition columns of the store tables: discovered from paths
-#: on read, so never part of a pinned data schema.
-_STORE_PARTITION_COLS = (_STORE_BATCH_COL, "side", "bkt")
 
 
 def _store_schemas(path: str, **frames: DataFrame) -> dict[str, dict]:
@@ -1200,7 +1270,7 @@ def _store_schemas(path: str, **frames: DataFrame) -> dict[str, dict]:
     say) raises before anything is written. Nullability is not
     compared: a parquet read makes every column nullable anyway. A
     store with no manifest yet (a build) or with no pinned schemas (an
-    earlier release, ``*_store_migrate``) checks nothing."""
+    earlier release, :func:`store_migrate`) checks nothing."""
     import os
 
     from pyspark.sql.types import StructType
@@ -1234,35 +1304,113 @@ def _store_scan(spark: SparkSession, path: str, table: str) -> DataFrame:
     :func:`~full_docker_etl_spark.sources.catalog.read_parquet` with
     the manifest's pinned schema — no footer-inference job — or, when
     the manifest carries none (an earlier release or
-    ``*_store_migrate``), by memoized inference; partition columns are
-    discovered from paths either way."""
+    :func:`store_migrate`), by memoized inference; partition columns
+    are discovered from paths either way.
+
+    A crashed build (no manifest) raises first. A MISSING table
+    directory raises too: it means the store path is wrong or the
+    table was never written, and silently treating it as empty would
+    drop an occurrence cap or admit every duplicate. A table holding
+    no data file — a partitioned write of no rows lands none, e.g. a
+    corpus whose docs are all shorter than n — leaves path discovery
+    nothing to find, so its pinned open lacks the partition columns:
+    it opens as an empty frame of its data schema plus every partition
+    column (rule b; ``bkt`` typed as path inference types it). A batch
+    probed against such a store sees an empty corpus (batch×batch pairs
+    only), not a crash."""
+    import os
+
+    from pyspark.sql.types import StructType
+
     doc = _store_manifest_load(path)
-    return read_parquet(
-        spark, f"{path}/{table}", doc["schemas"].get(table)
-    ).where(F.col(_STORE_BATCH_COL).isin(doc["batches"]))
+    tdir = os.path.join(path, table)
+    if not os.path.isdir(tdir):
+        raise FileNotFoundError(
+            f"store table missing: {tdir} — either the store path is "
+            "wrong or the table was never written; refusing to treat a "
+            "missing table as an empty corpus"
+        )
+    frame = read_parquet(spark, tdir, doc["schemas"].get(table))
+    if _STORE_BATCH_COL not in frame.columns:
+        frame = spark.createDataFrame(
+            [],
+            StructType(frame.schema.fields)
+            .add(_STORE_BATCH_COL, "string")
+            .add("side", "string")
+            .add("bkt", "integer"),
+        )
+    return frame.where(F.col(_STORE_BATCH_COL).isin(doc["batches"]))
 
 
 def _store_read_committed(spark: SparkSession, path: str, table: str):
     """Read one store table restricted to COMMITTED batches with the
     stamp column dropped — consumers see the logical schema. Opened
     with the schema the manifest pins for ``table`` (no inference job)
-    unless the manifest carries none (see :func:`_store_scan`)."""
+    unless the manifest carries none; missing and file-less tables as
+    :func:`_store_scan` opens them."""
     return _store_scan(spark, path, table).drop(_STORE_BATCH_COL)
 
 
-def _store_vacuum(
-    path: str, tables: tuple[str, ...], older_than_seconds: float = 0.0
-) -> list[str]:
-    """Delete orphan ``batch=`` partitions (written by a build/append/
-    compact that died before its manifest publish, or displaced by a
-    compaction — invisible to every NEW reader but still on disk).
-    Returns the removed batch ids.
+def store_compact(spark: SparkSession, path: str) -> list[str]:
+    """Fold every committed batch of a store into ONE — the small-file
+    reclaim for a store that has absorbed many incremental appends:
+    every append adds a ``batch=`` partition to each table (at least
+    one file per touched bucket or side), so after many batches each
+    probe pays per-batch file listing, a long committed ``isin``
+    prune, and one additive ``counts`` partial per batch — at 100 TB
+    exactly the small-file problem table formats compact away. Every
+    table is rewritten under a fresh batch id with its own partitioning
+    (layout rule b) and the additive ``counts`` partials are
+    re-AGGREGATED (rule c: probes then sum one row per key instead of
+    one per append); the store is then equivalent to a fresh build of
+    the same corpus (pinned by probe-equality tests).
+
+    Crash safety is the build/append model, not a directory swap: the
+    folded batch lands under a fresh ``batch=`` partition and the
+    manifest REPLACE publishes it atomically, so a compaction that dies
+    mid-write leaves the store serving the old batches exactly as they
+    were (the half-written batch is an unpublished orphan). Returns the
+    displaced batch ids, which are NOT deleted here: a probe planned
+    under the pre-compaction manifest still reads them mid-scan, so
+    their files must outlive the flip — reclaim them with
+    :func:`store_vacuum` once such probes have drained. Single-writer
+    like build/append; a concurrent append that lands mid-compaction
+    makes the final manifest flip raise rather than silently erase the
+    append. No-op on a store with ≤1 committed batch."""
+    import uuid
+
+    old = _store_manifest(path)
+    if len(old) <= 1:
+        return []
+    batch_id = uuid.uuid4().hex[:12]
+    frames = {
+        table: _store_read_committed(spark, path, table)
+        for table in _store_tables(path)
+    }
+    if "counts" in frames:
+        counts = frames["counts"]
+        frames["counts"] = counts.groupBy(
+            *[c for c in counts.columns if c != "cnt"]
+        ).agg(F.sum("cnt").alias("cnt"))
+    _store_write_tables(path, batch_id, frames)
+    # REPLACE the committed set (not extend): readers flip from the N
+    # old batches to the one compacted batch in a single os.replace —
+    # guarded against a concurrent append having moved the manifest.
+    _store_manifest_replace(path, old, [batch_id])
+    return list(old)
+
+
+def store_vacuum(path: str, older_than_seconds: float = 0.0) -> list[str]:
+    """Delete a store's orphan ``batch=`` partitions (written by a
+    build/append/compact that died before its manifest publish, or
+    displaced by a compaction — invisible to every NEW reader but still
+    on disk). Returns the removed batch ids.
 
     Concurrency contract: CRASH orphans are referenced by no reader
     ever, so vacuuming them is safe while probes run. COMPACTION-
     DISPLACED partitions are different — a probe planned under the
     pre-compaction manifest still reads them mid-scan, which is
-    exactly why ``*_store_compact`` defers their deletion to this
+    exactly why :func:`store_compact` defers their deletion to this
     call. Either run vacuum once probes planned before the last
     compaction have drained, or pass ``older_than_seconds`` set to
     your longest plausible probe duration: partitions inside the
@@ -1283,41 +1431,25 @@ def _store_vacuum(
     by a pre-stamp release's compaction (mtime = touch-at-flip on
     mtime-preserving filesystems; on gateways that synthesize mtimes,
     drain probes before the first vacuum after upgrading)."""
-    import os
     import shutil
     import time
 
     doc = _store_manifest_load(path)
     committed = set(doc["batches"])
-    stamps = doc["displaced"]
     removed: set[str] = set()
     cutoff = time.time() - older_than_seconds
-    prefix = f"{_STORE_BATCH_COL}="
-    for table in tables:
-        tdir = os.path.join(path, table)
-        if not os.path.isdir(tdir):
+    for _, bid, bdir in _store_batch_dirs(path):
+        if bid in committed:
             continue
-        for entry in os.listdir(tdir):
-            if not entry.startswith(prefix):
-                continue
-            bid = entry[len(prefix):]
-            if bid in committed:
-                continue
-            full = os.path.join(tdir, entry)
-            clock = stamps.get(bid)
-            if clock is None:
-                try:
-                    clock = os.path.getmtime(full)
-                except OSError:
-                    continue  # raced away by a concurrent vacuum
-            if clock > cutoff:
-                continue  # inside the grace window — skip this run
-            shutil.rmtree(full, ignore_errors=True)
-            removed.add(bid)
+        clock = _store_orphan_clock(doc["displaced"], bid, bdir)
+        if clock is None or clock > cutoff:
+            continue  # raced away, or inside the grace window
+        shutil.rmtree(bdir, ignore_errors=True)
+        removed.add(bid)
     return sorted(removed)
 
 
-def _store_migrate(path: str, tables: tuple[str, ...]) -> str:
+def store_migrate(path: str) -> str:
     """One-shot migration of a PRE-MANIFEST store layout (valid
     ``_meta.json``, tables written flat at ``<path>/<table>``, no
     ``_manifest.json``) into the batch-partitioned manifest layout:
@@ -1325,14 +1457,14 @@ def _store_migrate(path: str, tables: tuple[str, ...]) -> str:
     no data rewritten, no re-sketching) under a single fresh
     ``batch=`` directory, then a manifest naming that one batch is
     published. After migration the store reads, appends and compacts
-    exactly like one built by the current release.
+    exactly like one built by the current release. An ensemble store
+    also needs its band specs pinned: :func:`containment_store_migrate`.
 
     Refuses to run on a store that already has a manifest (nothing to
     migrate) or that already carries ``batch=`` directories without
     one (a build/append crashed pre-publish, or a previous migration
     died half-way — the safe recovery there is a rebuild, because
     this helper cannot tell recoverable moves from orphaned data)."""
-    import json
     import os
     import uuid
 
@@ -1345,21 +1477,17 @@ def _store_migrate(path: str, tables: tuple[str, ...]) -> str:
             f"no _meta.json at {path} — not a sketch store"
         )
     prefix = f"{_STORE_BATCH_COL}="
-    for table in tables:
-        tdir = os.path.join(path, table)
-        if os.path.isdir(tdir) and any(
-            e.startswith(prefix) for e in os.listdir(tdir)
-        ):
-            raise ValueError(
-                f"{tdir} already contains {prefix} partitions but the "
-                "store has no manifest — a write or migration died "
-                "half-way; rebuild the store with its *_store_build"
-            )
+    half = next(_store_batch_dirs(path), None)
+    if half is not None:
+        raise ValueError(
+            f"{os.path.dirname(half[2])} already contains {prefix} "
+            "partitions but the store has no manifest — a write or "
+            "migration died half-way; rebuild the store with its "
+            "*_store_build"
+        )
     batch_id = uuid.uuid4().hex[:12]
-    for table in tables:
+    for table in _store_tables(path):
         tdir = os.path.join(path, table)
-        if not os.path.isdir(tdir):
-            continue
         dest = os.path.join(tdir, f"{prefix}{batch_id}")
         os.makedirs(dest)
         for entry in os.listdir(tdir):
@@ -1377,11 +1505,11 @@ def _store_migrate(path: str, tables: tuple[str, ...]) -> str:
 
 def containment_store_migrate(path: str) -> str:
     """Fold a pre-manifest ensemble-store layout into one published
-    batch without re-sketching (see :func:`_store_migrate`), then pin
+    batch without re-sketching (:func:`store_migrate`), then pin
     the derived band specs into ``_meta.json`` (pre-r17 stores carry
     none — see :func:`containment_store_pin_specs` for exactly what
     the pin does and does not guarantee)."""
-    batch = _store_migrate(path, _CONTAINMENT_TABLES)
+    batch = store_migrate(path)
     containment_store_pin_specs(path)
     return batch
 
@@ -1405,14 +1533,13 @@ def containment_store_pin_specs(path: str) -> list[tuple[int, int, int]]:
     specs are already pinned is returned unchanged (never
     overwritten — that would erase the very record the guard checks).
 
-    The ``_meta.json`` rewrite is atomic (sibling tmp + ``os.replace``)
-    and runs under the store's manifest lock: metadata writes obey the
+    The ``_meta.json`` rewrite is atomic
+    (:func:`~full_docker_etl_spark.sources.catalog.atomic_write`) and
+    runs under the store's manifest lock: metadata writes obey the
     same single-writer loud-failure contract as manifest writes."""
     import json
     import os
-    import uuid
 
-    mpath = os.path.join(path, "_meta.json")
     # read + already-pinned check + rewrite ALL inside the lock: a
     # pre-lock read would let two racing pinners (or a pin racing any
     # future meta writer) both pass the None check and the loser's
@@ -1426,26 +1553,11 @@ def containment_store_pin_specs(path: str) -> list[tuple[int, int, int]]:
             meta["target_recall"], meta["floor_recall"], meta["max_gap"],
         )
         meta["gap_specs"] = specs
-        tmp = f"{mpath}.tmp.{uuid.uuid4().hex[:8]}"
-        with open(tmp, "w") as fh:
-            json.dump(meta, fh)
-        os.replace(tmp, mpath)
+        atomic_write(os.path.join(path, "_meta.json"), json.dumps(meta))
     return specs
 
 
-def minhash_store_migrate(path: str) -> str:
-    """Fold a pre-manifest MinHash-store layout into one published
-    batch without re-sketching (see :func:`_store_migrate`)."""
-    return _store_migrate(path, _MINHASH_TABLES)
-
-
-def substring_store_migrate(path: str) -> str:
-    """Fold a pre-manifest substring-store layout into one published
-    batch without re-fingerprinting (see :func:`_store_migrate`)."""
-    return _store_migrate(path, _SUBSTRING_TABLES)
-
-
-def _store_stats(path: str, tables: tuple[str, ...]) -> dict:
+def store_stats(path: str) -> dict:
     """Maintenance-decision snapshot for a persisted sketch store —
     the input a scheduler needs to decide WHEN to compact (committed
     batch count: each append adds a ``batch=`` partition to every
@@ -1466,44 +1578,25 @@ def _store_stats(path: str, tables: tuple[str, ...]) -> dict:
 
     doc = _store_manifest_load(path)
     committed = doc["batches"]
-    stamps = doc["displaced"]
-    committed_set = set(committed)
-    prefix = f"{_STORE_BATCH_COL}="
     orphans: set[str] = set()
     oldest: float | None = None
-    census: dict[str, dict] = {}
-    for table in tables:
-        tdir = os.path.join(path, table)
-        files = 0
-        size = 0
-        if os.path.isdir(tdir):
-            for entry in os.listdir(tdir):
-                if not entry.startswith(prefix):
-                    continue
-                bid = entry[len(prefix):]
-                full = os.path.join(tdir, entry)
-                if bid not in committed_set:
-                    orphans.add(bid)
-                    # same clock precedence as _store_vacuum: the
-                    # manifest's displaced-at stamp, mtime fallback
-                    m = stamps.get(bid)
-                    if m is None:
-                        try:
-                            m = os.path.getmtime(full)
-                        except OSError:
-                            m = None
-                    if m is not None:
-                        oldest = m if oldest is None else min(oldest, m)
-                    continue
-                for f in _glob.glob(
-                    os.path.join(full, "**", "*.parquet"), recursive=True
-                ):
-                    files += 1
-                    try:
-                        size += os.path.getsize(f)
-                    except OSError:
-                        pass
-        census[table] = {"files": files, "bytes": size}
+    census = {t: {"files": 0, "bytes": 0} for t in _store_tables(path)}
+    for table, bid, bdir in _store_batch_dirs(path):
+        if bid not in committed:
+            orphans.add(bid)
+            # same clock as store_vacuum's grace window
+            m = _store_orphan_clock(doc["displaced"], bid, bdir)
+            if m is not None:
+                oldest = m if oldest is None else min(oldest, m)
+            continue
+        for f in _glob.glob(
+            os.path.join(bdir, "**", "*.parquet"), recursive=True
+        ):
+            census[table]["files"] += 1
+            try:
+                census[table]["bytes"] += os.path.getsize(f)
+            except OSError:
+                pass
     return {
         "committed_batches": len(committed),
         "orphan_batches": len(orphans),
@@ -1514,34 +1607,16 @@ def _store_stats(path: str, tables: tuple[str, ...]) -> dict:
     }
 
 
-def containment_store_stats(path: str) -> dict:
-    """Ensemble-store maintenance snapshot (see :func:`_store_stats`)."""
-    return _store_stats(path, _CONTAINMENT_TABLES)
-
-
-def minhash_store_stats(path: str) -> dict:
-    """MinHash-store maintenance snapshot (see :func:`_store_stats`)."""
-    return _store_stats(path, _MINHASH_TABLES)
-
-
-def substring_store_stats(path: str) -> dict:
-    """Substring-store maintenance snapshot (see :func:`_store_stats`)."""
-    return _store_stats(path, _SUBSTRING_TABLES)
-
-
-def _store_maintain(
+def store_maintain(
     spark: SparkSession,
     path: str,
     *,
-    stats_fn,
-    compact_fn,
-    vacuum_fn,
-    max_batches: int,
-    probe_grace_seconds: float,
+    max_batches: int = 16,
+    probe_grace_seconds: float = 6 * 3600.0,
     max_committed_files: int | None = None,
 ) -> dict:
     """THE maintenance policy loop over a persisted sketch store — the
-    documented consumer of :func:`_store_stats` that turns the r16
+    documented consumer of :func:`store_stats` that turns the r16
     observability primitives into a schedulable action (run it from
     the same cadence that drives the append loop, e.g. after every
     N-th batch admission):
@@ -1549,8 +1624,8 @@ def _store_maintain(
     1. **Compact when the committed set exceeds the budget**
        (``committed_batches > max_batches``): every append adds a
        ``batch=`` partition per table, and probes pay per-batch file
-       listing, a longer manifest ``isin`` prune, and (containment/
-       substring) one additive counts partial per batch — the
+       listing, a longer manifest ``isin`` prune, and one additive
+       ``counts`` partial per batch — the
        small-file problem the reference hand-solved with 1000-row
        insert batching (extractyfinance.py:196-212), solved here by
        folding all committed batches into one. The budget trades
@@ -1561,7 +1636,7 @@ def _store_maintain(
     2. **Vacuum with the probe fleet's grace**: orphans from crashed
        writes and compaction-displaced partitions are reclaimed only
        once ``probe_grace_seconds`` past their DISPLACEMENT mtime
-       (see :func:`_store_vacuum` — the clock starts when a partition
+       (see :func:`store_vacuum` — the clock starts when a partition
        stops being visible, so grace ≥ the longest plausible probe
        duration makes the deletion safe next to an in-flight fleet).
        Pass the fleet's SLA, not 0 — 0 is only safe when no probe is
@@ -1569,16 +1644,18 @@ def _store_maintain(
 
     ``max_committed_files`` (optional) is the second compaction
     trigger: total committed parquet files across tables (the
-    ``_store_stats`` census — what every probe's scan actually
+    :func:`store_stats` census — what every probe's scan actually
     lists/opens) exceeding the budget compacts even when the batch
     count is inside its own — the wide-batch small-file case, e.g. a
-    few appends that each wrote hundreds of bucket files.
+    few appends that each wrote hundreds of bucket files (a single
+    committed batch is already folded: :func:`store_compact` leaves it
+    as it is).
 
     Returns ``{before, compacted, displaced, vacuumed, after}`` —
     the stats snapshots bracketing the actions, whether a compaction
     ran, the batch ids it displaced, and the batch ids vacuum
     reclaimed — so a scheduler can log exactly what maintenance did."""
-    before = stats_fn(path)
+    before = store_stats(path)
     displaced: list[str] = []
     compacted = False
     committed_files = sum(t["files"] for t in before["tables"].values())
@@ -1586,114 +1663,16 @@ def _store_maintain(
         max_committed_files is not None
         and committed_files > max_committed_files
     ):
-        # displaced = the manifest diff across the flip, computed here
-        # rather than from compact_fn's return value (containment/
-        # minhash return the displaced ids but substring returns a
-        # file census — the diff is uniform across all three)
-        pre = _store_manifest(path)
-        compact_fn(spark, path)
-        post = set(_store_manifest(path))
-        displaced = [b for b in pre if b not in post]
+        displaced = store_compact(spark, path)
         compacted = True
-    vacuumed = vacuum_fn(path, older_than_seconds=probe_grace_seconds)
+    vacuumed = store_vacuum(path, older_than_seconds=probe_grace_seconds)
     return {
         "before": before,
         "compacted": compacted,
         "displaced": displaced,
         "vacuumed": vacuumed,
-        "after": stats_fn(path),
+        "after": store_stats(path),
     }
-
-
-def containment_store_maintain(
-    spark: SparkSession,
-    path: str,
-    *,
-    max_batches: int = 16,
-    probe_grace_seconds: float = 6 * 3600.0,
-    max_committed_files: int | None = None,
-) -> dict:
-    """Scheduled stats→compact→vacuum policy pass over an ensemble
-    store (see :func:`_store_maintain`)."""
-    return _store_maintain(
-        spark, path,
-        stats_fn=containment_store_stats,
-        compact_fn=containment_store_compact,
-        vacuum_fn=containment_store_vacuum,
-        max_batches=max_batches,
-        probe_grace_seconds=probe_grace_seconds,
-        max_committed_files=max_committed_files,
-    )
-
-
-def minhash_store_maintain(
-    spark: SparkSession,
-    path: str,
-    *,
-    max_batches: int = 16,
-    probe_grace_seconds: float = 6 * 3600.0,
-    max_committed_files: int | None = None,
-) -> dict:
-    """Scheduled stats→compact→vacuum policy pass over a MinHash
-    store (see :func:`_store_maintain`)."""
-    return _store_maintain(
-        spark, path,
-        stats_fn=minhash_store_stats,
-        compact_fn=minhash_store_compact,
-        vacuum_fn=minhash_store_vacuum,
-        max_batches=max_batches,
-        probe_grace_seconds=probe_grace_seconds,
-        max_committed_files=max_committed_files,
-    )
-
-
-def substring_store_maintain(
-    spark: SparkSession,
-    path: str,
-    *,
-    max_batches: int = 16,
-    probe_grace_seconds: float = 6 * 3600.0,
-    max_committed_files: int | None = None,
-) -> dict:
-    """Scheduled stats→compact→vacuum policy pass over a substring
-    store (see :func:`_store_maintain`)."""
-    return _store_maintain(
-        spark, path,
-        stats_fn=substring_store_stats,
-        compact_fn=substring_store_compact,
-        vacuum_fn=substring_store_vacuum,
-        max_batches=max_batches,
-        probe_grace_seconds=probe_grace_seconds,
-        max_committed_files=max_committed_files,
-    )
-
-
-def containment_store_vacuum(
-    path: str, older_than_seconds: float = 0.0
-) -> list[str]:
-    """Vacuum the ensemble store's orphan batches (grace window and
-    concurrency contract: see :func:`_store_vacuum`)."""
-    return _store_vacuum(path, _CONTAINMENT_TABLES, older_than_seconds)
-
-
-def minhash_store_vacuum(
-    path: str, older_than_seconds: float = 0.0
-) -> list[str]:
-    """Vacuum the MinHash store's orphan batches (grace window and
-    concurrency contract: see :func:`_store_vacuum`)."""
-    return _store_vacuum(path, _MINHASH_TABLES, older_than_seconds)
-
-
-def substring_store_vacuum(
-    path: str, older_than_seconds: float = 0.0
-) -> list[str]:
-    """Vacuum the substring store's orphan batches (grace window and
-    concurrency contract: see :func:`_store_vacuum`)."""
-    return _store_vacuum(path, _SUBSTRING_TABLES, older_than_seconds)
-
-
-#: Shingle document-frequency store: one additive table.
-_DF_TABLES = ("counts",)
 
 
 def df_store_build(
@@ -1704,55 +1683,36 @@ def df_store_build(
     exact on a cap-active corpus (:func:`jaccard_verify_pairs`'s
     ``rare`` input; see its measure contract): (sh: xxhash64 of
     n-gram shingle, cnt: number of docs containing it), stored as
-    ADDITIVE per-batch partials under the same batch-partitioned
-    atomic-manifest layout as every other incremental sketch store.
-    Document frequency is additive under the single-admission
-    contract (a doc enters the corpus through exactly one admitted
-    batch — the contract the arrival loop already maintains), so an
-    append writes ONLY its batch's partial and readers sum; no
-    rewrite, no read-modify-write, crash-orphans invisible, retried
-    appends can never double-count (the shared store discipline:
-    :func:`containment_store_build`)."""
-    import json
-    import os
-
-    _store_build_reset(path)
-    with open(os.path.join(path, "_meta.json"), "w") as fh:
-        json.dump({"n": n}, fh)
+    ADDITIVE per-batch partials in one ``counts`` table. Document
+    frequency is additive under the single-admission contract (a doc
+    enters the corpus through exactly one admitted batch — the
+    contract the arrival loop already maintains), so an append writes
+    ONLY its batch's partial and readers sum; no rewrite, no
+    read-modify-write, crash-orphans invisible, retried appends can
+    never double-count (:func:`_store_write`)."""
+    _store_build_reset(path, {"n": n})
     _df_store_write(df, path, text_col, id_col, n)
 
 
 def _df_store_write(
     df: DataFrame, path: str, text_col: str, id_col: str, n: int
 ) -> None:
-    import uuid
-
-    batch_id = uuid.uuid4().hex[:12]
+    """The df sketch: the batch's per-shingle doc counts, its only
+    table."""
     counts = (
         _hashed_shingles(df, text_col, id_col, n)
         .groupBy("sh")
         .agg(F.count(F.lit(1)).alias("cnt"))
     )
-    schemas = _store_schemas(path, counts=counts)
-    rebalanced(counts).write.parquet(
-        _store_batch_dir(path, "counts", batch_id)
-    )
-    _store_manifest_publish(path, batch_id, schemas)
+    _store_write(path, counts, lambda counts: {"counts": counts})
 
 
 def df_store_append(
     df: DataFrame, path: str, text_col: str, id_col: str
 ) -> None:
     """Admit a batch's df partial using the STORE'S OWN shingle width
-    (from ``_meta.json`` — the caller cannot desynchronize it). Same
-    visibility contract as every store append: the partial lands
-    under a fresh ``batch=`` partition and exists only once the
-    manifest publish succeeds."""
-    import json
-    import os
-
-    with open(os.path.join(path, "_meta.json")) as fh:
-        meta = json.load(fh)
+    (from ``_meta.json`` — the caller cannot desynchronize it)."""
+    meta = _store_meta(path)
     _store_manifest(path)  # refuse to extend an uncommitted store
     _df_store_write(df, path, text_col, id_col, meta["n"])
 
@@ -1776,11 +1736,7 @@ def df_store_rare(
 
     Corpus-sized at 100 TB (it is ~all distinct shingles): consumed
     through a hash-partitioned join, never broadcast."""
-    import json
-    import os
-
-    with open(os.path.join(path, "_meta.json")) as fh:
-        meta = json.load(fh)
+    meta = _store_meta(path)
     if meta["n"] != n:
         raise ValueError(
             f"shingle-width mismatch: df store at {path} was built "
@@ -1794,63 +1750,6 @@ def df_store_rare(
         .agg(F.sum("cnt").alias("df"))
         .where(F.col("df") <= max_df)
         .select("sh")
-    )
-
-
-def df_store_compact(spark: SparkSession, path: str) -> list[str]:
-    """Fold every committed df partial into ONE summed partial (the
-    shared compaction contract: displaced batches returned, deletion
-    deferred to :func:`df_store_vacuum`; atomic flip guarded against
-    concurrent appends). No-op on ≤1 committed batch."""
-    import uuid
-
-    old = _store_manifest(path)
-    if len(old) <= 1:
-        return []
-    batch_id = uuid.uuid4().hex[:12]
-    (
-        rebalanced(
-            _store_read_committed(spark, path, "counts")
-            .groupBy("sh")
-            .agg(F.sum("cnt").alias("cnt"))
-        )
-        .write.parquet(_store_batch_dir(path, "counts", batch_id))
-    )
-    _store_manifest_replace(path, old, [batch_id])
-    return list(old)
-
-
-def df_store_vacuum(
-    path: str, older_than_seconds: float = 0.0
-) -> list[str]:
-    """Vacuum the df store's orphan batches (grace window and
-    concurrency contract: see :func:`_store_vacuum`)."""
-    return _store_vacuum(path, _DF_TABLES, older_than_seconds)
-
-
-def df_store_stats(path: str) -> dict:
-    """DF-store maintenance snapshot (see :func:`_store_stats`)."""
-    return _store_stats(path, _DF_TABLES)
-
-
-def df_store_maintain(
-    spark: SparkSession,
-    path: str,
-    *,
-    max_batches: int = 16,
-    probe_grace_seconds: float = 6 * 3600.0,
-    max_committed_files: int | None = None,
-) -> dict:
-    """Scheduled stats→compact→vacuum policy pass over a df store
-    (see :func:`_store_maintain`)."""
-    return _store_maintain(
-        spark, path,
-        stats_fn=df_store_stats,
-        compact_fn=df_store_compact,
-        vacuum_fn=df_store_vacuum,
-        max_batches=max_batches,
-        probe_grace_seconds=probe_grace_seconds,
-        max_committed_files=max_committed_files,
     )
 
 
@@ -1877,11 +1776,7 @@ def df_store_crossings(
     "previous epoch" and the result is empty. Same shingle-width
     guard as :func:`df_store_rare` — a mismatched ``n`` would hash a
     different gram space and silently cross nothing."""
-    import json
-    import os
-
-    with open(os.path.join(path, "_meta.json")) as fh:
-        meta = json.load(fh)
+    meta = _store_meta(path)
     if meta["n"] != n:
         raise ValueError(
             f"shingle-width mismatch: df store at {path} was built "
@@ -1975,60 +1870,8 @@ def revalidate_pairs(
     return unaffected.unionByName(survivors)
 
 
-def containment_store_compact(spark: SparkSession, path: str) -> list[str]:
-    """Fold every committed batch into ONE (the small-file reclaim for
-    a store that has absorbed many incremental appends — at 100 TB a
-    per-batch hive partition per append is exactly the small-file
-    problem table formats compact away). Rewrites docs/bands under a
-    fresh batch id, re-AGGREGATES the additive ``/counts`` partials
-    (probes then sum one row per bucket instead of one per append),
-    and publishes a manifest naming only the new batch — the same
-    atomic ``os.replace`` as build/append, so a compaction that dies
-    mid-write leaves the store exactly as it was (the half-written
-    batch is an unpublished orphan). Returns the displaced batch ids,
-    which are NOT deleted here: a probe planned under the
-    pre-compaction manifest still reads them mid-scan, so their files
-    must outlive the flip — reclaim them with
-    :func:`containment_store_vacuum` once such probes have drained
-    (the shared compaction contract — see :func:`minhash_store_compact`
-    / :func:`substring_store_compact`). Single-writer like
-    build/append; a concurrent append that lands mid-compaction makes
-    the final manifest flip raise rather than silently erase the
-    append. No-op on a store with ≤1 committed batch."""
-    import uuid
-
-    old = _store_manifest(path)
-    if len(old) <= 1:
-        return []
-    batch_id = uuid.uuid4().hex[:12]
-    concurrently(
-        lambda: rebalanced(_store_read_committed(spark, path, "docs"))
-        .write.parquet(_store_batch_dir(path, "docs", batch_id)),
-        lambda: rebalanced(
-            _store_read_committed(spark, path, "bands"), "side"
-        )
-        .write.partitionBy("side")
-        .parquet(_store_batch_dir(path, "bands", batch_id)),
-        lambda: rebalanced(
-            _store_read_committed(spark, path, "counts")
-            .groupBy("p", "r", "band", "bucket")
-            .agg(F.sum("cnt").alias("cnt"))
-        )
-        .write.parquet(_store_batch_dir(path, "counts", batch_id)),
-    )
-    # REPLACE the committed set (not extend): readers flip from the N
-    # old batches to the one compacted batch in a single os.replace —
-    # guarded against a concurrent append having moved the manifest.
-    _store_manifest_replace(path, old, [batch_id])
-    return list(old)
-
-
 def _containment_store_meta(path: str) -> dict:
-    import json
-    import os
-
-    with open(os.path.join(path, "_meta.json")) as fh:
-        meta = json.load(fh)
+    meta = _store_meta(path)
     # Stores persisted before the max_gap contract existed carry no
     # such key; absent means the floor-derived cutoff (None) — the
     # exact specs those stores were sketched with.
@@ -2084,13 +1927,9 @@ def containment_store_append(
     OWN parameters (read from ``_meta.json`` — the caller cannot
     desynchronize them): append per-doc state, index rows, probe rows,
     and PARTIAL bucket counts (``/counts`` is additive — probes sum it,
-    so appends never rewrite existing files). The batch lands under a
-    fresh ``batch=`` partition and becomes visible only when the
-    trailing manifest publish succeeds — a retried append after a
-    mid-write crash re-writes under a NEW id and can never double-count
-    (the orphan is unpublished; :func:`containment_store_vacuum`
-    reclaims it). The write half of the incremental loop: probe → drop
-    duplicates → append the admitted remainder."""
+    so appends never rewrite existing files; visibility and retry:
+    :func:`_store_write`). The write half of the incremental loop:
+    probe → drop duplicates → append the admitted remainder."""
     meta = _containment_store_meta(path)
     _store_manifest(path)  # refuse to extend an uncommitted store
     _containment_store_write(
@@ -2468,22 +2307,14 @@ def substring_store_build(
     bucketing mismatch would otherwise return zero matches and admit
     every duplicate.
 
-    Both tables are hive-partitioned by ``batch`` (outermost, above
-    ``bkt``) and governed by the shared atomic ``_manifest.json``
-    (the containment-store pattern): the physical writes land first,
-    the manifest publishes last, so a build/append that dies between
-    the two tables is INVISIBLE to probes (fps-without-counts would
-    silently understate occurrence totals and uncap boilerplate
-    fingerprints) and a retried append re-lands under a new id
-    instead of double-appending the additive log (which would
-    overstate totals, cap early, and silently MISS duplicated spans).
-    :func:`substring_store_vacuum` reclaims unpublished orphans."""
-    import json
-    import os
-
-    _store_build_reset(path)  # guarded: empty dir or existing store only
-    with open(os.path.join(path, "_meta.json"), "w") as fh:
-        json.dump({"n": n, "max_occ": max_occ, "n_buckets": n_buckets}, fh)
+    Crash safety and visibility are :func:`_store_write`'s: fps
+    without counts would silently understate occurrence totals and
+    uncap boilerplate fingerprints, and a retry that double-appended
+    the additive log would overstate them, cap early, and silently
+    MISS duplicated spans."""
+    _store_build_reset(
+        path, {"n": n, "max_occ": max_occ, "n_buckets": n_buckets}
+    )
     _substring_store_write(df, path, text_col, id_col, n, n_buckets)
 
 
@@ -2495,35 +2326,23 @@ def _substring_store_write(
     n: int,
     n_buckets: int,
 ) -> None:
-    """Shared write half of substring build/append: one fingerprint
-    pass feeds both tables, both land under a fresh ``batch=``
-    partition, and the trailing atomic manifest publish makes them
-    visible together."""
-    import uuid
-
-    batch_id = uuid.uuid4().hex[:12]
-    fps = _bucketed_fps(df, text_col, id_col, n, n_buckets).cache()
-    try:
-        counts = fps.groupBy("fp").agg(F.count(F.lit(1)).alias("cnt"))
-        schemas = _store_schemas(path, fps=fps, counts=counts)
-        concurrently(
-            lambda: rebalanced(fps, "bkt")
-            .write.partitionBy("bkt")
-            .parquet(_store_batch_dir(path, "fps", batch_id)),
-            lambda: rebalanced(counts).write.parquet(
-                _store_batch_dir(path, "counts", batch_id)
-            ),
-        )
-    finally:
-        fps.unpersist()
-    _store_manifest_publish(path, batch_id, schemas)
+    """The substring sketch: one fingerprint pass (the persisted
+    parent) feeds the bucketed fps table and the additive counts log."""
+    _store_write(
+        path,
+        _bucketed_fps(df, text_col, id_col, n, n_buckets),
+        lambda fps: {
+            "fps": fps,
+            "counts": fps.groupBy("fp").agg(F.count(F.lit(1)).alias("cnt")),
+        },
+    )
 
 
 def _bucketed_fps(
     df: DataFrame, text_col: str, id_col: str, n: int, n_buckets: int
 ) -> DataFrame:
     """Store-layout fingerprints: (doc_id, pos, fp, bkt). Directory
-    routing for the write is the write site's ``rebalanced(fps,
+    routing for the write is :func:`_store_write`'s ``rebalanced(fps,
     "bkt")`` — AQE-sized, replacing the former fixed
     ``repartition("bkt")`` whose partition count was the static
     shuffle default regardless of batch size."""
@@ -2539,125 +2358,13 @@ def substring_store_append(
 ) -> None:
     """Admit a batch into the substring store: append its fingerprints
     (same bucketed layout) and its per-fp counts (the additive log —
-    no read-modify-write of the counts table). The batch lands under a
-    fresh ``batch=`` partition and becomes visible only with the
-    trailing atomic manifest publish — a crash between the two tables
-    leaves an invisible orphan, never a half-admitted batch, and a
-    retry cannot double-append the occurrence log
-    (:func:`substring_store_vacuum` reclaims the orphan)."""
-    import json
-    import os
-
-    with open(os.path.join(path, "_meta.json")) as fh:
-        meta = json.load(fh)
+    no read-modify-write of the counts table), with the store's own
+    parameters (visibility and retry: :func:`_store_write`)."""
+    meta = _store_meta(path)
     _store_manifest(path)  # refuse to extend an uncommitted store
     _substring_store_write(
         df, path, text_col, id_col, meta["n"], meta["n_buckets"]
     )
-
-
-def substring_store_compact(spark: "SparkSession", path: str) -> dict:
-    """MAINTENANCE compaction for the substring store (the OPTIMIZE of
-    this tier): every ``append`` adds a ``batch=`` partition to both
-    tables (a file set in the occurrence log, at least one file per
-    touched bucket), so after thousands of batches each probe pays a
-    many-segment log aggregation, a long ``isin`` committed-batch
-    prune, and small-file swamps in the buckets. Compaction folds
-    every committed batch into ONE: the log re-aggregated to a single
-    coalesced segment, the fingerprints re-bucketed coalesced — the
-    store is then equivalent to a fresh build of the same corpus
-    (pinned by a probe-equality test). Returns before/after COMMITTED
-    file counts (the probe's serving cost; orphans awaiting vacuum are
-    excluded — they are read by no new plan).
-
-    Crash safety is the build/append model, not a directory swap: the
-    folded batch lands under a fresh ``batch=`` partition and the
-    manifest REPLACE publishes it atomically (``os.replace``), so a
-    compaction that dies mid-write leaves the store serving the old
-    batches exactly as they were. The displaced batches become
-    orphans but are NOT deleted here — a probe planned under the
-    pre-compaction manifest still reads their files mid-scan; reclaim
-    them with :func:`substring_store_vacuum` once such probes drain.
-    Single-writer like build/append; a concurrent append landing
-    mid-compaction makes the manifest flip raise instead of silently
-    erasing it."""
-    import glob as _glob
-    import os
-    import uuid
-
-    def _files(sub):
-        committed = set(_store_manifest(path))
-        return [
-            f
-            for batch in committed
-            for f in _glob.glob(
-                os.path.join(
-                    path, sub, f"{_STORE_BATCH_COL}={batch}", "**",
-                    "*.parquet",
-                ),
-                recursive=True,
-            )
-        ]
-
-    old = _store_manifest(path)
-    before = {"fps": len(_files("fps")), "counts": len(_files("counts"))}
-    batch_id = uuid.uuid4().hex[:12]
-    concurrently(
-        lambda: rebalanced(
-            _read_store_table(spark, path, "counts")
-            .groupBy("fp")
-            .agg(F.sum("cnt").alias("cnt"))
-        )
-        .write.parquet(_store_batch_dir(path, "counts", batch_id)),
-        lambda: rebalanced(_read_store_table(spark, path, "fps"), "bkt")
-        .write.partitionBy("bkt")
-        .parquet(_store_batch_dir(path, "fps", batch_id)),
-    )
-    # REPLACE the committed set (not extend): readers flip from the N
-    # old batches to the one folded batch in a single os.replace —
-    # guarded against a concurrent append having moved the manifest.
-    _store_manifest_replace(path, old, [batch_id])
-    return {
-        "before": before,
-        "after": {"fps": len(_files("fps")), "counts": len(_files("counts"))},
-    }
-
-
-_SUBSTRING_SCHEMAS = {
-    "fps": "doc_id bigint, pos int, fp bigint, bkt int",
-    "counts": "fp bigint, cnt bigint",
-}
-
-
-def _read_store_table(spark, path: str, table: str) -> DataFrame:
-    """Read a substring-store table restricted to COMMITTED batches
-    (the shared manifest model), tolerating the DEGENERATE empty
-    store: a corpus whose docs are all shorter than n writes zero part
-    files, and a raw parquet read of a file-less directory fails
-    schema inference — a batch probed against such a store should see
-    an empty corpus (batch×batch pairs only), not crash.
-
-    The empty path applies ONLY to a directory that exists: a MISSING
-    table directory means the store path is wrong or the store was
-    never built, and silently treating it as empty would drop the
-    occurrence cap (counts) or admit every duplicate (fps) — raise
-    instead. Likewise a missing manifest (crashed build) raises via
-    :func:`_store_manifest`. A non-empty table opens with its pinned
-    schema (:func:`_store_read_committed`)."""
-    import glob as _glob
-    import os
-
-    d = os.path.join(path, table)
-    _store_manifest(path)  # a crashed build raises before the table checks
-    if not os.path.isdir(d):
-        raise FileNotFoundError(
-            f"substring-store table missing: {d} — either the store path "
-            "is wrong or the table was never written; refusing to treat "
-            "a missing table as an empty corpus"
-        )
-    if not _glob.glob(os.path.join(d, "**", "*.parquet"), recursive=True):
-        return spark.createDataFrame([], _SUBSTRING_SCHEMAS[table])
-    return _store_read_committed(spark, path, table)
 
 
 def substring_probe_store(
@@ -2703,12 +2410,8 @@ def substring_probe_store(
     batch in a long-running admit loop. ``eager=False`` skips caching
     entirely and returns the fully lazy plan (subtrees replay across
     consumers) — a plan-inspection/debug mode, not a serving shape."""
-    import json
-    import os
-
     spark = new_df.sparkSession
-    with open(os.path.join(path, "_meta.json")) as fh:
-        meta = json.load(fh)
+    meta = _store_meta(path)
     if {k: meta.get(k) for k in ("n", "max_occ")} != {
         "n": n, "max_occ": max_occ,
     }:
@@ -2743,7 +2446,7 @@ def substring_probe_store(
         .distinct()
         .collect()  # bounded: ≤ n_buckets ints
     ]
-    store_all = _read_store_table(spark, path, "fps").where(
+    store_all = _store_read_committed(spark, path, "fps").where(
         F.col("bkt").isin(batch_bkts) if batch_bkts else F.lit(False)
     )
     store_fp = store_all.drop("bkt").join(batch_ids, "doc_id", "left_anti")
@@ -2760,7 +2463,7 @@ def substring_probe_store(
         .agg(F.count(F.lit(1)).alias("dup"))
     )
     store_counts = (
-        _read_store_table(spark, path, "counts")
+        _store_read_committed(spark, path, "counts")
         .groupBy("fp")
         .agg(F.sum("cnt").alias("cnt"))
         .join(dup_counts, "fp", "left")
@@ -3745,22 +3448,13 @@ def minhash_store_build(
     otherwise fail silently (NULL-padded zip folds, disjoint bucket
     spaces) as zero candidates — admitting every duplicate.
 
-    Both tables are hive-partitioned by ``batch`` and governed by the
-    shared atomic ``_manifest.json`` (the containment-store pattern):
-    the physical writes land first, the manifest publishes last, so a
-    build/append that dies between the two tables is INVISIBLE to
-    probes (a half-admitted batch would otherwise sit in ``/sigs`` but
-    not ``/bands`` — silently unfindable as a candidate yet present in
-    verification) and a retried append re-lands under a new id instead
-    of duplicating signature rows (which would fan the verification
-    joins out into duplicated pair rows).
-    :func:`minhash_store_vacuum` reclaims unpublished orphans."""
-    import json
-    import os
-
-    _store_build_reset(path)  # guarded: empty dir or existing store only
-    with open(os.path.join(path, "_meta.json"), "w") as fh:
-        json.dump({"n": n, "k": k, "bands": bands}, fh)
+    Crash safety and visibility are :func:`_store_write`'s: a batch
+    half-admitted between the two tables would otherwise sit in
+    ``/sigs`` but not ``/bands`` — silently unfindable as a candidate
+    yet present in verification — and a retry that duplicated
+    signature rows would fan the verification joins out into
+    duplicated pair rows."""
+    _store_build_reset(path, {"n": n, "k": k, "bands": bands})
     _minhash_store_write(df, path, text_col, id_col, n, k, bands)
 
 
@@ -3773,39 +3467,19 @@ def _minhash_store_write(
     k: int,
     bands: int,
 ) -> None:
-    """Shared write half of minhash build/append: the signature frame
-    is computed ONCE into a persisted parent (the materialization
-    boundary the old write→read-back→write sequence provided — the
-    k-hash fold never replays for the band projection, and the cache
-    cut stops projection collapse re-inlining it, the
-    :func:`_band_rows` caveat), then the sigs and bands tables write
-    CONCURRENTLY from it (guide §2.6 — the containment-store
-    :func:`concurrently` shape; the old sequential read-back paid an
-    extra listing + scan and left the cluster idle between the two
-    writes), and the atomic manifest publish makes both visible
-    together."""
-    import uuid
-
-    from pyspark import StorageLevel
-
-    batch_id = uuid.uuid4().hex[:12]
-    sig_arr = minhash_signature_array(
+    """The MinHash sketch: the signature frame is the persisted parent
+    (the materialization boundary — the k-hash fold never replays for
+    the band projection, and the cache cut stops projection collapse
+    re-inlining it, the :func:`_band_rows` caveat); sigs and bands
+    derive from it."""
+    sigs = minhash_signature_array(
         shingle_arrays(df, text_col, id_col, n).where(F.size("sh_arr") > 0), k
-    ).persist(StorageLevel.MEMORY_AND_DISK)
-    try:
-        band_rows = _band_rows(sig_arr, k, bands)
-        schemas = _store_schemas(path, sigs=sig_arr, bands=band_rows)
-        concurrently(
-            lambda: rebalanced(sig_arr).write.parquet(
-                _store_batch_dir(path, "sigs", batch_id)
-            ),
-            lambda: rebalanced(band_rows).write.parquet(
-                _store_batch_dir(path, "bands", batch_id)
-            ),
-        )
-    finally:
-        sig_arr.unpersist()
-    _store_manifest_publish(path, batch_id, schemas)
+    )
+    _store_write(
+        path,
+        sigs,
+        lambda sigs: {"sigs": sigs, "bands": _band_rows(sigs, k, bands)},
+    )
 
 
 def minhash_probe_store(
@@ -3839,14 +3513,12 @@ def minhash_probe_store(
     next probe (of any persisted-store tier) starts; see
     :func:`containment_probe_store` and :func:`containment_probe_release`
     for the lifecycle."""
-    import json
     import os
 
     spark = new_df.sparkSession
     containment_probe_release()  # at most ONE cached probe batch
     try:
-        with open(os.path.join(path, "_meta.json")) as fh:
-            meta = json.load(fh)
+        meta = _store_meta(path)
     except FileNotFoundError:
         meta = None  # pre-metadata store: caller owns parameter discipline
     if meta is not None and meta != {"n": n, "k": k, "bands": bands}:
@@ -3904,53 +3576,15 @@ def minhash_probe_store(
     )
 
 
-def minhash_store_compact(spark: SparkSession, path: str) -> list[str]:
-    """Fold every committed MinHash-store batch into ONE (the
-    small-file reclaim after many incremental appends — same model as
-    :func:`containment_store_compact` / :func:`substring_store_compact`):
-    both tables rewrite under a fresh batch id and the manifest
-    REPLACE publishes atomically, so a compaction that dies mid-write
-    leaves the store serving the old batches verbatim. Returns the
-    displaced batch ids — NOT deleted here (probes planned under the
-    pre-compaction manifest still read them); reclaim with
-    :func:`minhash_store_vacuum` once those probes drain. A concurrent
-    append landing mid-compaction makes the manifest flip raise
-    instead of silently erasing it. No-op on a store with ≤1 committed
-    batch."""
-    import uuid
-
-    old = _store_manifest(path)
-    if len(old) <= 1:
-        return []
-    batch_id = uuid.uuid4().hex[:12]
-    concurrently(
-        *[
-            lambda table=table: rebalanced(
-                _store_read_committed(spark, path, table)
-            ).write.parquet(_store_batch_dir(path, table, batch_id))
-            for table in _MINHASH_TABLES
-        ]
-    )
-    _store_manifest_replace(path, old, [batch_id])
-    return list(old)
-
-
 def minhash_store_append(df: DataFrame, path: str, text_col: str, id_col: str) -> None:
     """Admit a batch into an existing sketch store: append its
     signatures and band buckets using the STORE'S OWN parameters
     (read from ``_meta.json`` — the caller cannot desynchronize them).
     This is the write half of the incremental loop: probe → drop
     duplicates → append the admitted remainder; the next batch then
-    sees this one as part of the corpus. The batch lands under a fresh
-    ``batch=`` partition and becomes visible only with the trailing
-    atomic manifest publish — a retry after a mid-write crash re-lands
-    cleanly instead of duplicating signature rows
-    (:func:`minhash_store_vacuum` reclaims the orphan)."""
-    import json
-    import os
-
-    with open(os.path.join(path, "_meta.json")) as fh:
-        meta = json.load(fh)
+    sees this one as part of the corpus (visibility and retry:
+    :func:`_store_write`)."""
+    meta = _store_meta(path)
     _store_manifest(path)  # refuse to extend an uncommitted store
     _minhash_store_write(
         df, path, text_col, id_col, meta["n"], meta["k"], meta["bands"]

@@ -1164,7 +1164,7 @@ def dedup_store_maintain(spark: SparkSession, sf_dir: str) -> DataFrame:
     middle: the standing 90% lands in a persisted MinHash store as
     THREE batches (build + two appends — the append loop that makes
     per-batch ``batch=`` partitions the small-file problem), then ONE
-    ``minhash_store_maintain`` call compacts the committed set past
+    ``store_maintain`` call compacts the committed set past
     its budget and vacuums the displaced partitions (grace 0 — no
     probe is in flight here; a production fleet passes its SLA), and
     only THEN does the batch probe. ``maintained_ok`` pins the policy
@@ -1189,7 +1189,7 @@ def dedup_store_maintain(spark: SparkSession, sf_dir: str) -> DataFrame:
         minhash_probe_store,
         minhash_store_append,
         minhash_store_build,
-        minhash_store_maintain,
+        store_maintain,
     )
     from full_docker_etl_spark.operators.util import concurrently
 
@@ -1207,7 +1207,7 @@ def dedup_store_maintain(spark: SparkSession, sf_dir: str) -> DataFrame:
                 store.where(F.col("doc_id") % 3 == rem),
                 path, "text", "doc_id",
             )
-        r = minhash_store_maintain(
+        r = store_maintain(
             spark, path, max_batches=1, probe_grace_seconds=0.0
         )
         maintained_ok = (
@@ -1340,9 +1340,9 @@ def dedup_df_verify(spark: SparkSession, sf_dir: str) -> DataFrame:
         _hashed_shingles,
         df_store_append,
         df_store_build,
-        df_store_maintain,
         df_store_rare,
         jaccard_verify_pairs,
+        store_maintain,
     )
 
     docs = _df_verify_corpus(spark, sf_dir)
@@ -1359,7 +1359,7 @@ def dedup_df_verify(spark: SparkSession, sf_dir: str) -> DataFrame:
             docs.where(F.pmod("doc_id", F.lit(3)) == rem),
             path, "text", "doc_id",
         )
-    r = df_store_maintain(
+    r = store_maintain(
         spark, path, max_batches=1, probe_grace_seconds=0.0
     )
     maintained_ok = (

@@ -95,6 +95,22 @@ def _read_memoized(
     return df
 
 
+def atomic_write(path: str, text: str) -> None:
+    """Publish ``text`` at ``path`` atomically: write a hidden sibling
+    temp file (``.<name>.tmp.<uuid>``), then ``os.replace`` it over
+    ``path`` — readers see the old content or the new, never a torn
+    file. The temp name starts with ``.`` because some targets live
+    inside a directory Spark scans (a snapshot's ``_COMMIT.json``), and
+    Spark skips hidden files."""
+    import uuid
+
+    head, name = os.path.split(path)
+    tmp = os.path.join(head, f".{name}.tmp.{uuid.uuid4().hex[:8]}")
+    with open(tmp, "w") as fh:
+        fh.write(text)
+    os.replace(tmp, path)
+
+
 def data_schema(df: DataFrame, partition_cols: Iterable[str] = ()) -> dict:
     """``df``'s schema in Spark's JSON form with ``partition_cols``
     left out: what a writer pins for :func:`read_parquet`'s ``schema``.

@@ -40,7 +40,11 @@ from full_docker_etl_spark.operators.util import (
     advisory_partition_bytes,
     rebalanced,
 )
-from full_docker_etl_spark.sources.catalog import data_schema, read_parquet
+from full_docker_etl_spark.sources.catalog import (
+    atomic_write,
+    data_schema,
+    read_parquet,
+)
 
 
 class ConcurrentWriteError(RuntimeError):
@@ -472,10 +476,7 @@ def _write_commit_meta(
         "schema": schema,
         "dv_schema": dv_schema,
     }
-    tmp = os.path.join(vdir, f"._commit.tmp.{uuid.uuid4().hex[:8]}")
-    with open(tmp, "w") as fh:
-        json.dump(meta, fh)
-    os.replace(tmp, os.path.join(vdir, "_COMMIT.json"))
+    atomic_write(os.path.join(vdir, "_COMMIT.json"), json.dumps(meta))
 
 
 def _read_commit_meta(vdir: str) -> dict | None:
@@ -810,10 +811,7 @@ class VersionedTable:
             if os.path.exists(dest._pointer):  # raced by another cloner
                 raced = True  # cleanup happens OUTSIDE the lock
             else:
-                tmp = f"{dest._pointer}.tmp.{uuid.uuid4().hex[:8]}"
-                with open(tmp, "w") as fh:
-                    fh.write(new_version)
-                os.replace(tmp, dest._pointer)  # the atomic publish
+                atomic_write(dest._pointer, new_version)  # the publish
         if raced:
             shutil.rmtree(vdir, ignore_errors=True)
             # the DV sidecar was hardlinked alongside the snapshot —
@@ -853,10 +851,7 @@ class VersionedTable:
                 )
             retained = [version] + [v for v in history if v != version]
             retained = retained[: self.keep]
-            tmp = f"{self._pointer}.tmp.{uuid.uuid4().hex[:8]}"
-            with open(tmp, "w") as fh:
-                fh.write("\n".join(retained))
-            os.replace(tmp, self._pointer)  # the atomic publish
+            atomic_write(self._pointer, "\n".join(retained))  # the publish
         # GC outside the lock: rmtree of aged snapshots can be slow and
         # must never stretch the critical section past stale_after
         self._gc(retained, aged=set(history) - set(retained))
@@ -1149,10 +1144,7 @@ class VersionedTable:
                 rejected_head = head  # cleanup happens OUTSIDE the lock
             else:
                 retained = [version] + history[: self.keep - 1]
-                tmp = f"{self._pointer}.tmp.{uuid.uuid4().hex[:8]}"
-                with open(tmp, "w") as fh:
-                    fh.write("\n".join(retained))
-                os.replace(tmp, self._pointer)  # the atomic publish
+                atomic_write(self._pointer, "\n".join(retained))  # the publish
         if rejected_head is not _UNSET:
             if cleanup_on_reject:
                 shutil.rmtree(vdir, ignore_errors=True)

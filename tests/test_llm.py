@@ -764,7 +764,7 @@ def test_containment_store_append_crash_retry_no_double_count(
     assert got == want
 
     # vacuum removes exactly the orphan, and the store still serves
-    removed = D.containment_store_vacuum(path)
+    removed = D.store_vacuum(path)
     assert set(removed) == orphans
     for table in ("docs", "bands", "counts"):
         left = {
@@ -872,7 +872,7 @@ def test_containment_store_compact_folds_batches_same_results(spark):
     # files out from under an in-flight plan
     inflight = D.containment_probe_store(batch, path, "text", "doc_id")
 
-    displaced = D.containment_store_compact(spark, path)
+    displaced = D.store_compact(spark, path)
     assert len(displaced) == 3
     assert len(D._store_manifest(path)) == 1
 
@@ -890,8 +890,8 @@ def test_containment_store_compact_folds_batches_same_results(spark):
             if e.startswith("batch=")
         ]
         assert len(parts) == 4  # folded + 3 displaced awaiting vacuum
-    assert D.containment_store_vacuum(path) == sorted(displaced)
-    assert D.containment_store_vacuum(path) == []
+    assert D.store_vacuum(path) == sorted(displaced)
+    assert D.store_vacuum(path) == []
     for table in ("docs", "bands", "counts"):
         parts = [
             e for e in os.listdir(os.path.join(path, table))
@@ -909,7 +909,7 @@ def test_containment_store_compact_folds_batches_same_results(spark):
     assert norm(
         D.containment_probe_store(batch, path, "text", "doc_id").collect()
     ) == before
-    assert D.containment_store_compact(spark, path) == []
+    assert D.store_compact(spark, path) == []
 
 
 def test_store_manifest_lock_and_compact_replace_guard(spark, tmp_path):
@@ -973,17 +973,17 @@ def test_store_vacuum_grace_window(spark, tmp_path):
     path = str(tmp_path / "gstore")
     D.minhash_store_build(df.where("doc_id < 6"), path, "text", "doc_id")
     D.minhash_store_append(df.where("doc_id >= 6"), path, "text", "doc_id")
-    displaced = D.minhash_store_compact(spark, path)
+    displaced = D.store_compact(spark, path)
     assert len(displaced) == 2
 
     # the flip stamped every displaced id in the manifest, atomically
     doc = D._store_manifest_load(path)
     assert sorted(doc["displaced"]) == sorted(displaced)
     # fresh displaced batches sit inside the window: nothing removed
-    assert D.minhash_store_vacuum(path, older_than_seconds=3600) == []
+    assert D.store_vacuum(path, older_than_seconds=3600) == []
     # age them past the window and the same call reclaims them
     _backdate_displaced_stamps(path, displaced)
-    assert D.minhash_store_vacuum(path, older_than_seconds=3600) == sorted(
+    assert D.store_vacuum(path, older_than_seconds=3600) == sorted(
         displaced
     )
 
@@ -1005,23 +1005,23 @@ def test_store_vacuum_grace_clock_starts_at_displacement(spark, tmp_path):
     D.minhash_store_append(df.where("doc_id >= 6"), path, "text", "doc_id")
     committed = D._store_manifest(path)
     # backdate the COMMITTED batch dirs: written ages ago
-    for table in D._MINHASH_TABLES:
+    for table in ("sigs", "bands"):
         for b in committed:
             os.utime(
                 os.path.join(path, table, f"batch={b}"),
                 (1_000_000_000, 1_000_000_000),
             )
-    displaced = D.minhash_store_compact(spark, path)
+    displaced = D.store_compact(spark, path)
     assert sorted(displaced) == sorted(committed)
     # the flip stamped displacement time in the manifest, so the grace
     # window protects the batches despite their ancient write time
-    assert D.minhash_store_vacuum(path, older_than_seconds=3600) == []
-    for table in D._MINHASH_TABLES:
+    assert D.store_vacuum(path, older_than_seconds=3600) == []
+    for table in ("sigs", "bands"):
         for b in displaced:
             assert os.path.isdir(os.path.join(path, table, f"batch={b}"))
     # once the displacement clock ages out, the same call reclaims
     _backdate_displaced_stamps(path, displaced)
-    assert D.minhash_store_vacuum(path, older_than_seconds=3600) == sorted(
+    assert D.store_vacuum(path, older_than_seconds=3600) == sorted(
         displaced
     )
 
@@ -1042,18 +1042,18 @@ def test_store_vacuum_grace_survives_synthesized_mtimes(spark, tmp_path):
     path = str(tmp_path / "sstore")
     D.minhash_store_build(df.where("doc_id < 6"), path, "text", "doc_id")
     D.minhash_store_append(df.where("doc_id >= 6"), path, "text", "doc_id")
-    displaced = D.minhash_store_compact(spark, path)
+    displaced = D.store_compact(spark, path)
     # simulate an mtime-destroying filesystem: every displaced dir
     # reads ancient, only the manifest stamp knows the flip was now
-    for table in D._MINHASH_TABLES:
+    for table in ("sigs", "bands"):
         for b in displaced:
             os.utime(
                 os.path.join(path, table, f"batch={b}"),
                 (1_000_000_000, 1_000_000_000),
             )
-    assert D.minhash_store_vacuum(path, older_than_seconds=3600) == []
+    assert D.store_vacuum(path, older_than_seconds=3600) == []
     # stats uses the same clock precedence: the orphans read fresh
-    st = D.minhash_store_stats(path)
+    st = D.store_stats(path)
     assert st["orphan_batches"] == len(displaced)
     assert st["oldest_orphan_age_s"] < 3600
 
@@ -1070,15 +1070,15 @@ def test_store_manifest_displaced_stamps_pruned(spark, tmp_path):
     D.minhash_store_append(
         df.where("doc_id >= 6 AND doc_id < 12"), path, "text", "doc_id"
     )
-    first = D.minhash_store_compact(spark, path)
+    first = D.store_compact(spark, path)
     _backdate_displaced_stamps(path, first)
-    assert D.minhash_store_vacuum(path, older_than_seconds=3600) == sorted(
+    assert D.store_vacuum(path, older_than_seconds=3600) == sorted(
         first
     )
     # reclaimed ids still carry stamps until the next flip prunes them
     assert sorted(D._store_manifest_load(path)["displaced"]) == sorted(first)
     D.minhash_store_append(df.where("doc_id >= 12"), path, "text", "doc_id")
-    second = D.minhash_store_compact(spark, path)
+    second = D.store_compact(spark, path)
     doc = D._store_manifest_load(path)
     assert sorted(doc["displaced"]) == sorted(second)  # first's pruned
 
@@ -1098,26 +1098,26 @@ def test_store_vacuum_pre_stamp_manifest_falls_back_to_mtime(
     path = str(tmp_path / "ostore")
     D.minhash_store_build(df.where("doc_id < 6"), path, "text", "doc_id")
     D.minhash_store_append(df.where("doc_id >= 6"), path, "text", "doc_id")
-    displaced = D.minhash_store_compact(spark, path)
+    displaced = D.store_compact(spark, path)
     # rewrite the manifest in the pre-stamp schema
     doc = D._store_manifest_load(path)
     with open(D._store_manifest_path(path), "w") as fh:
         json.dump({"batches": doc["batches"]}, fh)
     # fresh mtimes (the touch-at-flip) keep the orphans inside grace
-    assert D.minhash_store_vacuum(path, older_than_seconds=3600) == []
-    for table in D._MINHASH_TABLES:
+    assert D.store_vacuum(path, older_than_seconds=3600) == []
+    for table in ("sigs", "bands"):
         for b in displaced:
             os.utime(
                 os.path.join(path, table, f"batch={b}"),
                 (1_000_000_000, 1_000_000_000),
             )
-    assert D.minhash_store_vacuum(path, older_than_seconds=3600) == sorted(
+    assert D.store_vacuum(path, older_than_seconds=3600) == sorted(
         displaced
     )
 
 
 def test_store_migrate_publishes_under_manifest_lock(tmp_path):
-    """_store_migrate's one-shot manifest publish honours the same
+    """store_migrate's one-shot manifest publish honours the same
     single-writer loud-failure contract as build/append/compact: a
     concurrent writer's lockfile makes it raise instead of silently
     interleaving (the r16 advice finding). Driver-side only — no
@@ -1133,10 +1133,10 @@ def test_store_migrate_publishes_under_manifest_lock(tmp_path):
         json.dump({"n": 5, "k": 32, "bands": 8}, fh)
     open(D._store_manifest_path(path) + ".lock", "w").write("424242")
     with pytest.raises(RuntimeError, match="concurrent store-manifest"):
-        D.minhash_store_migrate(path)
+        D.store_migrate(path)
     assert not os.path.exists(D._store_manifest_path(path))
     os.unlink(D._store_manifest_path(path) + ".lock")
-    batch = D.minhash_store_migrate(path)
+    batch = D.store_migrate(path)
     assert D._store_manifest(path) == [batch]
 
 
@@ -1192,43 +1192,80 @@ def test_containment_store_spec_drift_guard(spark, tmp_path):
     ).count() >= 0
 
 
-def test_store_stats_maintenance_snapshot(spark, tmp_path):
-    """_store_stats must report exactly what a maintenance scheduler
-    needs: committed batch count grows with appends, the census covers
-    committed files only, compaction's displaced batches show up as
-    orphans with an age, and vacuum zeroes them."""
+#: Store family -> its physical tables.
+_STORE_FAMILIES = {
+    "containment": ("docs", "bands", "counts"),
+    "minhash": ("sigs", "bands"),
+    "substring": ("fps", "counts"),
+    "df": ("counts",),
+}
+
+
+@pytest.mark.parametrize(
+    "family, table",
+    [(family, tables[0])
+     for family, tables in sorted(_STORE_FAMILIES.items())],
+)
+def test_store_stats_maintenance_snapshot(spark, tmp_path, family, table):
+    """store_stats must report exactly what a maintenance scheduler
+    needs, for every store family: committed batch count grows with
+    appends, the census covers committed files only, compaction's
+    displaced batches show up as orphans with an age, and vacuum zeroes
+    them."""
     from full_docker_etl_spark.operators import dedup as D
 
+    build = getattr(D, f"{family}_store_build")
+    append = getattr(D, f"{family}_store_append")
     df = _quote_corpus(spark, n_docs=12, n_quotes=0)
     path = str(tmp_path / "sstore")
-    D.minhash_store_build(df.where("doc_id < 6"), path, "text", "doc_id")
-    s1 = D.minhash_store_stats(path)
+    build(df.where("doc_id < 6"), path, "text", "doc_id")
+    s1 = D.store_stats(path)
     assert s1["committed_batches"] == 1 and s1["orphan_batches"] == 0
-    assert s1["tables"]["sigs"]["files"] > 0
-    assert s1["tables"]["sigs"]["bytes"] > 0
+    assert s1["tables"][table]["files"] > 0
+    assert s1["tables"][table]["bytes"] > 0
 
-    D.minhash_store_append(df.where("doc_id >= 6"), path, "text", "doc_id")
-    s2 = D.minhash_store_stats(path)
+    append(df.where("doc_id >= 6"), path, "text", "doc_id")
+    s2 = D.store_stats(path)
     assert s2["committed_batches"] == 2
-    assert s2["tables"]["sigs"]["files"] > s1["tables"]["sigs"]["files"]
+    assert s2["tables"][table]["files"] > s1["tables"][table]["files"]
 
-    displaced = D.minhash_store_compact(spark, path)
-    s3 = D.minhash_store_stats(path)
+    displaced = D.store_compact(spark, path)
+    s3 = D.store_stats(path)
     assert s3["committed_batches"] == 1
     assert s3["orphan_batches"] == len(displaced) == 2
     assert s3["oldest_orphan_age_s"] is not None
     assert s3["oldest_orphan_age_s"] >= 0.0
     # census counts committed partitions only — orphans excluded
-    assert s3["tables"]["sigs"]["files"] < s2["tables"]["sigs"]["files"] + \
-        s1["tables"]["sigs"]["files"]
+    assert s3["tables"][table]["files"] < s2["tables"][table]["files"] + \
+        s1["tables"][table]["files"]
 
-    D.minhash_store_vacuum(path)
-    s4 = D.minhash_store_stats(path)
+    D.store_vacuum(path)
+    s4 = D.store_stats(path)
     assert s4["orphan_batches"] == 0 and s4["oldest_orphan_age_s"] is None
 
 
+@pytest.mark.parametrize("family", sorted(_STORE_FAMILIES))
+def test_store_compact_single_batch_is_noop(spark, tmp_path, family):
+    """A store with one committed batch is already folded: store_compact
+    returns no displaced batch for every family, and leaves the manifest
+    and the batch directories as they were."""
+    from full_docker_etl_spark.operators import dedup as D
+
+    df = _quote_corpus(spark, n_docs=12, n_quotes=0)
+    path = str(tmp_path / "store")
+    getattr(D, f"{family}_store_build")(df, path, "text", "doc_id")
+    with open(D._store_manifest_path(path)) as fh:
+        manifest = fh.read()
+    dirs = _batch_dirs(path)
+
+    assert D.store_compact(spark, path) == []
+    with open(D._store_manifest_path(path)) as fh:
+        assert fh.read() == manifest
+    assert _batch_dirs(path) == dirs
+
+
 def test_store_maintain_policy_loop(spark, tmp_path):
-    """store_maintain is the documented consumer of *_store_stats —
+    """store_maintain is the documented consumer of store_stats —
     an append loop drives stats→compact→vacuum end-to-end: below the
     batch budget it's a no-op, above it compaction folds the committed
     set to one batch, displaced partitions survive a grace-window
@@ -1259,13 +1296,13 @@ def test_store_maintain_policy_loop(spark, tmp_path):
     want = probe_pairs()
 
     # 4 committed batches, budget 8: nothing to do
-    r1 = D.minhash_store_maintain(spark, path, max_batches=8)
+    r1 = D.store_maintain(spark, path, max_batches=8)
     assert not r1["compacted"] and r1["vacuumed"] == []
     assert r1["after"]["committed_batches"] == 4
 
     # budget 3: compaction folds 4 -> 1; the displaced batches are
     # inside the probe grace window, so vacuum must leave them on disk
-    r2 = D.minhash_store_maintain(
+    r2 = D.store_maintain(
         spark, path, max_batches=3, probe_grace_seconds=3600
     )
     assert r2["compacted"] and len(r2["displaced"]) == 4
@@ -1277,7 +1314,7 @@ def test_store_maintain_policy_loop(spark, tmp_path):
     # probes drained (simulated by ageing the displacement clock):
     # the next scheduled pass reclaims the orphans, compacts nothing
     _backdate_displaced_stamps(path, r2["displaced"])
-    r3 = D.minhash_store_maintain(
+    r3 = D.store_maintain(
         spark, path, max_batches=3, probe_grace_seconds=3600
     )
     assert not r3["compacted"]
@@ -1291,12 +1328,12 @@ def test_store_maintain_policy_loop(spark, tmp_path):
     files_now = sum(
         t["files"] for t in r3["after"]["tables"].values()
     )
-    r4 = D.minhash_store_maintain(
+    r4 = D.store_maintain(
         spark, path, max_batches=8, probe_grace_seconds=3600,
         max_committed_files=files_now - 1,
     )
     assert r4["compacted"]
-    r5 = D.minhash_store_maintain(
+    r5 = D.store_maintain(
         spark, path, max_batches=8, probe_grace_seconds=3600,
         max_committed_files=files_now * 100,
     )
@@ -1357,7 +1394,7 @@ def test_store_migrate_pre_manifest_layout(spark, tmp_path):
     old = str(tmp_path / "old")
     shutil.copytree(ref, old)
     os.unlink(D._store_manifest_path(old))
-    for table in D._CONTAINMENT_TABLES:
+    for table in ("docs", "bands", "counts"):
         tdir = os.path.join(old, table)
         (bdir,) = [e for e in os.listdir(tdir) if e.startswith("batch=")]
         for entry in os.listdir(os.path.join(tdir, bdir)):
@@ -1433,7 +1470,7 @@ def test_substring_store_migrate_nested_bucket_partitions(spark, tmp_path):
     old = str(tmp_path / "old")
     shutil.copytree(ref, old)
     os.unlink(D._store_manifest_path(old))
-    for table in D._SUBSTRING_TABLES:
+    for table in ("fps", "counts"):
         tdir = os.path.join(old, table)
         (bdir,) = [e for e in os.listdir(tdir) if e.startswith("batch=")]
         for entry in os.listdir(os.path.join(tdir, bdir)):
@@ -1445,7 +1482,7 @@ def test_substring_store_migrate_nested_bucket_partitions(spark, tmp_path):
         e.startswith("bkt=") for e in os.listdir(os.path.join(old, "fps"))
     )  # the forged layout really is the nested pre-manifest shape
 
-    D.substring_store_migrate(old)
+    D.store_migrate(old)
     got = {
         tuple(r)
         for r in D.substring_probe_store(batch, old, "text", "doc_id").collect()
@@ -1510,15 +1547,6 @@ def test_ensemble_rows_one_scan_matches_per_scheme_union(spark):
         docs.unpersist()
 
 
-#: Store family -> (physical tables, committed-table reader name).
-_STORE_FAMILIES = {
-    "containment": ("_CONTAINMENT_TABLES", "_store_read_committed"),
-    "minhash": ("_MINHASH_TABLES", "_store_read_committed"),
-    "substring": ("_SUBSTRING_TABLES", "_read_store_table"),
-    "df": ("_DF_TABLES", "_store_read_committed"),
-}
-
-
 def _jobs_started(spark) -> int:
     """Jobs submitted so far, read synchronously from the DAG scheduler
     (the status store fills asynchronously and evicts old jobs)."""
@@ -1553,7 +1581,7 @@ def test_store_tables_open_with_pinned_schema_and_no_job(
     inferring read of the table root gives."""
     from full_docker_etl_spark.operators import dedup as D
 
-    tables_attr, reader = _STORE_FAMILIES[family]
+    tables = _STORE_FAMILIES[family]
     df = _quote_corpus(spark)
     path = str(tmp_path / "store")
     getattr(D, f"{family}_store_build")(
@@ -1563,13 +1591,12 @@ def test_store_tables_open_with_pinned_schema_and_no_job(
         df.where("doc_id % 2 = 1"), path, "text", "doc_id"
     )
     doc = D._store_manifest_load(path)
-    tables = getattr(D, tables_attr)
     assert len(doc["batches"]) == 2
     assert sorted(doc["schemas"]) == sorted(tables)
 
     for table in tables:
         before = _jobs_started(spark)
-        opened = getattr(D, reader)(spark, path, table)
+        opened = D._store_read_committed(spark, path, table)
         assert _jobs_started(spark) - before == 0, table
         plain = (
             spark.read.parquet(f"{path}/{table}")
@@ -1627,7 +1654,7 @@ def test_store_append_of_another_schema_raises_before_writing(
 def test_migrated_store_without_pinned_schemas_reads_and_probes(
     spark, tmp_path, family
 ):
-    """A store folded by ``*_store_migrate`` has a manifest with no
+    """A store folded by ``store_migrate`` has a manifest with no
     schemas: its tables open by inference with the schema a native
     store's pinned open gives, its probe serves exactly the native
     store's pairs, and an append keeps it schemaless (the new batch
@@ -1637,8 +1664,7 @@ def test_migrated_store_without_pinned_schemas_reads_and_probes(
 
     from full_docker_etl_spark.operators import dedup as D
 
-    tables_attr, reader = _STORE_FAMILIES[family]
-    tables = getattr(D, tables_attr)
+    tables = _STORE_FAMILIES[family]
     store_docs = _quote_corpus(spark)
     # re-delivered copies under new ids: a duplicate for every tier
     batch = store_docs.where("doc_id < 3").withColumn(
@@ -1663,14 +1689,16 @@ def test_migrated_store_without_pinned_schemas_reads_and_probes(
                 os.path.join(tdir, bdir, entry), os.path.join(tdir, entry)
             )
         os.rmdir(os.path.join(tdir, bdir))
-    getattr(D, f"{family}_store_migrate")(old)
+    D.store_migrate(old)
     assert D._store_manifest_load(old)["schemas"] == {}
 
     for table in tables:
         before = _jobs_started(spark)
-        opened = getattr(D, reader)(spark, old, table)
+        opened = D._store_read_committed(spark, old, table)
         assert _jobs_started(spark) - before >= 1, table  # inferred
-        assert opened.schema == getattr(D, reader)(spark, ref, table).schema
+        assert opened.schema == D._store_read_committed(
+            spark, ref, table
+        ).schema
     got = {tuple(r) for r in probe(batch, old, "text", "doc_id").collect()}
     assert got == want
 
@@ -2104,7 +2132,7 @@ def test_df_store_incremental_rare_serves_blocked_verification(
 
     # maintenance folds 3 partials to 1 and reclaims displaced
     # batches without changing what the store serves
-    r = D.df_store_maintain(
+    r = D.store_maintain(
         spark, path, max_batches=1, probe_grace_seconds=0.0
     )
     assert r["compacted"] and sorted(r["vacuumed"]) == sorted(
@@ -2207,7 +2235,7 @@ def test_df_store_append_crash_retry_no_double_count(spark, monkeypatch):
     assert rare_of(path) == want
 
     # vacuum reclaims exactly the orphan, and the store still serves
-    removed = D.df_store_vacuum(path)
+    removed = D.store_vacuum(path)
     assert set(removed) == orphans
     assert rare_of(path) == want
 
@@ -2920,7 +2948,7 @@ def test_substring_store_append_crash_retry_no_double_count(
         if e.startswith("batch=")
     }
     assert len(on_disk - committed) == 1
-    assert set(D.substring_store_vacuum(path)) == on_disk - committed
+    assert set(D.store_vacuum(path)) == on_disk - committed
     got2 = {
         (r.d1, r.d2, r.d1_pos, r.d2_pos, r.span_tokens)
         for r in D.substring_probe_store(batch, path, "text", "doc_id").collect()
@@ -2980,10 +3008,11 @@ def test_substring_store_compact_preserves_probe(spark, docs, tmp_path):
     output BYTE-IDENTICAL — the store is maintenance-rewritten, never
     semantically changed."""
     from full_docker_etl_spark.operators.dedup import (
+        store_compact,
+        store_stats,
         substring_probe_store,
         substring_store_append,
         substring_store_build,
-        substring_store_compact,
     )
 
     path = str(tmp_path / "cstore")
@@ -3004,11 +3033,17 @@ def test_substring_store_compact_preserves_probe(spark, docs, tmp_path):
             ).collect()
         }
 
+    def census():
+        tables = store_stats(path)["tables"]
+        return {t: tables[t]["files"] for t in ("fps", "counts")}
+
     pre = rows()
-    census = substring_store_compact(spark, path)
-    assert census["after"]["counts"] == 1
-    assert census["after"]["counts"] < census["before"]["counts"]
-    assert census["after"]["fps"] <= census["before"]["fps"]
+    before = census()
+    store_compact(spark, path)
+    after = census()
+    assert after["counts"] == 1
+    assert after["counts"] < before["counts"]
+    assert after["fps"] <= before["fps"]
     assert rows() == pre and pre
 
 
@@ -3078,9 +3113,9 @@ def test_substring_store_compact_degenerate_empty_store(spark, tmp_path):
     """Compacting a store with zero data files must not crash and must
     leave it probeable (still an empty corpus)."""
     from full_docker_etl_spark.operators.dedup import (
+        store_compact,
         substring_probe_store,
         substring_store_build,
-        substring_store_compact,
     )
 
     path = str(tmp_path / "cestore")
@@ -3088,7 +3123,7 @@ def test_substring_store_compact_degenerate_empty_store(spark, tmp_path):
         spark.createDataFrame([(1, "tiny")], "doc_id long, text string"),
         path, "text", "doc_id",
     )
-    substring_store_compact(spark, path)
+    store_compact(spark, path)
     R = " ".join(f"e{i}" for i in range(25))
     batch = spark.createDataFrame(
         [(10, R), (11, R)], "doc_id long, text string"
@@ -3459,7 +3494,7 @@ def test_minhash_store_crash_retry_and_compact(spark, docs, tmp_path, monkeypatc
     keys = [(r.d1, r.d2) for r in rows]
     assert len(keys) == len(set(keys))
 
-    orphans = set(D.minhash_store_vacuum(path))
+    orphans = set(D.store_vacuum(path))
     assert len(orphans) == 1
     assert norm(
         D.minhash_probe_store(batch, path, "text", "doc_id").collect()
@@ -3469,10 +3504,10 @@ def test_minhash_store_crash_retry_and_compact(spark, docs, tmp_path, monkeypatc
     # the displaced batches await an explicit vacuum (deferred so
     # probes planned under the old manifest keep their files)
     assert len(D._store_manifest(path)) == 2
-    displaced = D.minhash_store_compact(spark, path)
+    displaced = D.store_compact(spark, path)
     assert len(displaced) == 2
     assert len(D._store_manifest(path)) == 1
-    assert set(D.minhash_store_vacuum(path)) == set(displaced)
+    assert set(D.store_vacuum(path)) == set(displaced)
     for table in ("sigs", "bands"):
         parts = [
             e for e in os.listdir(os.path.join(path, table))
@@ -3482,7 +3517,7 @@ def test_minhash_store_crash_retry_and_compact(spark, docs, tmp_path, monkeypatc
     assert norm(
         D.minhash_probe_store(batch, path, "text", "doc_id").collect()
     ) == want
-    assert D.minhash_store_compact(spark, path) == []
+    assert D.store_compact(spark, path) == []
 
 
 def test_pii_scrub_idempotent_and_lossless_on_clean_text(spark):

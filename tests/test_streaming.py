@@ -15,6 +15,24 @@ from full_docker_etl_spark.sources.catalog import load_table
 from full_docker_etl_spark.streaming.events import stream_events, tumbling_agg
 
 
+def _drain(q, seconds: int) -> None:
+    """Wait up to ``seconds`` for a drain-and-stop stream to finish.
+    On a timeout the failure lists the stream's recent micro-batches
+    (batchId, durationMs.triggerExecution, numInputRows), which tells a
+    hung micro-batch from a stalled trigger loop."""
+    assert q.awaitTermination(seconds), (
+        f"stream drain timed out after {seconds} s; recent micro-batches "
+        "(batchId, triggerExecution ms, numInputRows): "
+        + repr(
+            [
+                (p.batchId, p.durationMs.get("triggerExecution"),
+                 p.numInputRows)
+                for p in q.recentProgress
+            ]
+        )
+    )
+
+
 @pytest.fixture(scope="module")
 def events_dir(spark, sf_dir):
     """Copy events into a multi-file directory source (two batches, so
@@ -39,7 +57,7 @@ def test_stream_equals_batch(spark, sf_dir, events_dir):
         .trigger(availableNow=True)
         .start()
     )
-    assert q.awaitTermination(120), 'stream drain timed out'
+    _drain(q, 120)
     streamed = {
         (r.bucket_s, r.event_type): (r.n_events, str(r.sum_value))
         for r in spark.sql("SELECT * FROM t_stream").collect()
@@ -70,14 +88,14 @@ def test_stream_foreachbatch_upsert_exactly_once(spark, sf_dir):
     ev.where("event_id % 2 = 0").write.mode("overwrite").parquet(src)
     chk = tempfile.mkdtemp(prefix="fde_ups_chk_")
     q = stream_upsert(spark, src, ev.schema, target, ["event_id"], chk)
-    assert q.awaitTermination(120), 'stream drain timed out'
+    _drain(q, 120)
     n1 = spark.read.parquet(target).count()
     assert n1 == ev.where("event_id % 2 = 0").count()
 
     # batch 2: ALL rows, overlapping batch 1, with updated values
     ev.withColumn("value", F.col("value") + 1000.0).write.mode("append").parquet(src)
     q = stream_upsert(spark, src, ev.schema, target, ["event_id"], chk)
-    assert q.awaitTermination(120), 'stream drain timed out'
+    _drain(q, 120)
 
     out = spark.read.parquet(target)
     assert out.count() == ev.count()  # one row per key, no dups
@@ -89,7 +107,7 @@ def test_stream_foreachbatch_upsert_exactly_once(spark, sf_dir):
     # replaying the SAME source with a FRESH checkpoint converges
     chk2 = tempfile.mkdtemp(prefix="fde_ups_chk2_")
     q = stream_upsert(spark, src, ev.schema, target, ["event_id"], chk2)
-    assert q.awaitTermination(120), 'stream drain timed out'
+    _drain(q, 120)
     again = spark.read.parquet(target)
     assert again.count() == ev.count()
     for d in (src, target, chk, chk2):
@@ -129,7 +147,7 @@ def test_stream_static_enrichment_equals_batch(spark, sf_dir, events_dir):
         .trigger(availableNow=True)
         .start()
     )
-    assert q.awaitTermination(120), 'stream drain timed out'
+    _drain(q, 120)
     streamed = {
         r.c_mktsegment: (r.n_events, str(r.sum_value))
         for r in spark.sql("SELECT * FROM t_enrich").collect()
@@ -179,7 +197,7 @@ def test_stream_stream_range_join_equals_batch(spark, sf_dir):
         .trigger(availableNow=True)
         .start()
     )
-    assert q.awaitTermination(180), 'stream drain timed out'
+    _drain(q, 180)
     streamed = {
         (r.click_id, r.purchase_id)
         for r in spark.sql("SELECT * FROM t_ssjoin").collect()
@@ -324,14 +342,14 @@ def test_stream_upsert_versioned_atomic_epochs(spark, sf_dir):
     chk = tempfile.mkdtemp(prefix="fde_vups_chk_")
     q = stream_upsert(spark, src, ev.schema, root, ["event_id"], chk,
                       versioned=True)
-    assert q.awaitTermination(120), 'stream drain timed out'
+    _drain(q, 120)
     t = VersionedTable(root)
     assert t.read(spark).count() == ev.where("event_id % 2 = 0").count()
 
     ev.withColumn("value", F.col("value") + 1000.0).write.mode("append").parquet(src)
     q = stream_upsert(spark, src, ev.schema, root, ["event_id"], chk,
                       versioned=True)
-    assert q.awaitTermination(120), 'stream drain timed out'
+    _drain(q, 120)
     out = t.read(spark)
     assert out.count() == ev.count()
     assert out.groupBy("event_id").count().where("count > 1").count() == 0
@@ -415,7 +433,7 @@ def test_streaming_incremental_dedup_against_sketch_store(spark):
             .trigger(availableNow=True)
             .start()
         )
-        assert q.awaitTermination(180), 'stream drain timed out'
+        _drain(q, 180)
         return set(admitted)
 
     streamed = run_pipeline(tempfile.mkdtemp(prefix="fde_sdedup_a_") + "/s")
@@ -542,7 +560,7 @@ def test_streaming_incremental_cluster_labels_loop(spark):
         .trigger(availableNow=True)
         .start()
     )
-    assert q.awaitTermination(180), "stream drain timed out"
+    _drain(q, 180)
 
     got = {r.node: r.comp for r in state["labels"].collect()}
     ref_pairs = spark.createDataFrame(seen_pairs, "d1 long, d2 long")
@@ -651,7 +669,7 @@ def test_streaming_incremental_containment_dedup_loop(spark):
             .trigger(availableNow=True)
             .start()
         )
-        assert q.awaitTermination(180), "stream drain timed out"
+        _drain(q, 180)
         return set(admitted)
 
     streamed = run_streamed(tempfile.mkdtemp(prefix="fde_scont_a_") + "/s")
@@ -669,7 +687,7 @@ def test_streaming_incremental_containment_dedup_loop(spark):
 
 def test_streaming_dedup_loop_with_inline_maintenance(spark):
     """The always-on loop RUNNING ITS OWN maintenance: the MinHash
-    streaming admit loop with a `minhash_store_maintain(max_batches=2,
+    streaming admit loop with a `store_maintain(max_batches=2,
     probe_grace_seconds=0)` pass inside every foreachBatch — the
     production shape where maintenance shares the ingest cadence
     instead of a separate scheduler. Must admit EXACTLY the same set
@@ -687,8 +705,8 @@ def test_streaming_dedup_loop_with_inline_maintenance(spark):
         minhash_probe_store,
         minhash_store_append,
         minhash_store_build,
-        minhash_store_maintain,
-        minhash_store_stats,
+        store_maintain,
+        store_stats,
     )
 
     base = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
@@ -749,11 +767,11 @@ def test_streaming_dedup_loop_with_inline_maintenance(spark):
         ).cache()
         admitted.extend(r.doc_id for r in keep.select("doc_id").collect())
         minhash_store_append(keep, store, "text", "doc_id")
-        minhash_store_maintain(
+        store_maintain(
             s, store, max_batches=2, probe_grace_seconds=0.0
         )
         committed_trace.append(
-            minhash_store_stats(store)["committed_batches"]
+            store_stats(store)["committed_batches"]
         )
         batch_df.unpersist()
         keep.unpersist()
@@ -768,13 +786,13 @@ def test_streaming_dedup_loop_with_inline_maintenance(spark):
         .trigger(availableNow=True)
         .start()
     )
-    assert q.awaitTermination(180), "stream drain timed out"
+    _drain(q, 180)
 
     assert set(admitted) == expected
     # the budget held at every cadence point: never more than
     # max_batches committed after a maintenance pass
     assert committed_trace and all(c <= 2 for c in committed_trace)
-    s = minhash_store_stats(store)
+    s = store_stats(store)
     assert s["orphan_batches"] == 0  # vacuum kept pace with compaction
 
 
@@ -784,7 +802,7 @@ def test_streaming_df_store_tracks_corpus_df_with_inline_maintenance(
     """The df store (fourth persisted family) under Structured
     Streaming: each micro-batch appends ITS OWN df partial —
     single-admission holds because a doc enters through exactly one
-    micro-batch — and runs `df_store_maintain(max_batches=2)` inline,
+    micro-batch — and runs `store_maintain(max_batches=2)` inline,
     the production cadence where maintenance rides ingest. The
     property that makes this family interesting across a stream: a
     shingle's corpus df ACCUMULATES over batches, so its cap status
@@ -803,10 +821,10 @@ def test_streaming_df_store_tracks_corpus_df_with_inline_maintenance(
         _hashed_shingles,
         df_store_build,
         df_store_append,
-        df_store_maintain,
         df_store_rare,
-        df_store_stats,
         jaccard_verify_pairs,
+        store_maintain,
+        store_stats,
     )
 
     boiler = " ".join(f"q{i}" for i in range(10))
@@ -840,9 +858,8 @@ def test_streaming_df_store_tracks_corpus_df_with_inline_maintenance(
             built.append(True)
         else:
             df_store_append(batch_df, store, "text", "doc_id")
-        df_store_maintain(s, store, max_batches=2,
-                          probe_grace_seconds=0.0)
-        committed_trace.append(df_store_stats(store)["committed_batches"])
+        store_maintain(s, store, max_batches=2, probe_grace_seconds=0.0)
+        committed_trace.append(store_stats(store)["committed_batches"])
 
     chk = tempfile.mkdtemp(prefix="fde_sdf_chk_")
     q = (
@@ -854,7 +871,7 @@ def test_streaming_df_store_tracks_corpus_df_with_inline_maintenance(
         .trigger(availableNow=True)
         .start()
     )
-    assert q.awaitTermination(180), "stream drain timed out"
+    _drain(q, 180)
 
     # streamed partials sum to the full-pass corpus df
     want_rare = {
@@ -888,7 +905,7 @@ def test_streaming_df_store_tracks_corpus_df_with_inline_maintenance(
     # maintenance held the budget at every cadence point, vacuum
     # kept pace
     assert committed_trace and all(c <= 2 for c in committed_trace)
-    s = df_store_stats(store)
+    s = store_stats(store)
     assert s["orphan_batches"] == 0
 
 
@@ -995,7 +1012,7 @@ def test_streaming_incremental_substring_dedup_loop(spark):
         .trigger(availableNow=True)
         .start()
     )
-    assert q.awaitTermination(180), 'stream drain timed out'
+    _drain(q, 180)
 
     sequential = run(
         tempfile.mkdtemp(prefix="fde_ssdst_b_") + "/s",
@@ -1112,7 +1129,7 @@ def test_stream_grain_refresh_equals_batch_rebuild(spark, sf_dir, events_dir):
             spark, d, schema, fact, grain, build, "ts",
             keys=["event_id"], checkpoint_dir=chk,
         )
-        assert q.awaitTermination(180), 'stream drain timed out'
+        _drain(q, 180)
 
     run(base + "/chk1")
     cols = ["series", "period_key", "n", "sum_value"]
@@ -1337,7 +1354,7 @@ def test_stream_grain_refresh_moved_key_scrubs_old_period(spark):
             spark, src, schema, fact, grain, build, "ts",
             keys=["event_id"], checkpoint_dir=base + "/chk",
         )
-        assert q.awaitTermination(180), 'stream drain timed out'
+        _drain(q, 180)
 
     # delivery 1: two January events, one lone February event
     mk(
@@ -1401,7 +1418,7 @@ def test_stream_model_scores_frozen_model_with_oov(spark):
     out = tempfile.mkdtemp(prefix="fde_serve_out_")
     chk = tempfile.mkdtemp(prefix="fde_serve_chk_")
     q = stream_model_scores(spark, d, schema, odds, scalars, out, chk)
-    assert q.awaitTermination(120), 'stream drain timed out'
+    _drain(q, 120)
 
     got = {
         r.doc_id: (r.n_tokens, r.log_odds, r.pred_pos)
@@ -1483,7 +1500,7 @@ def test_streaming_ingest_loop_quota_then_score(spark):
         .trigger(availableNow=True)
         .start()
     )
-    assert q.awaitTermination(120), 'stream drain timed out'
+    _drain(q, 120)
 
     got = {
         r.doc_id: (r.host, r.host_seq, r.log_odds, r.pred_pos)

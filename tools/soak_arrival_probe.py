@@ -21,7 +21,7 @@ FIVE arrival tiers with store maintenance riding every cycle:
          FROM-SCRATCH exact loop (jaccard_pairs over all docs seen so
          far -> CC -> same resolution)
       5. admit the batch into the store (append) and run
-         minhash_store_maintain(max_batches=2, probe_grace_seconds=0)
+         store_maintain(max_batches=2, probe_grace_seconds=0)
          — compaction + vacuum inside the loop, the always-on cadence
 
 Checked invariants, every cycle:
@@ -55,8 +55,8 @@ whether dedup later keeps it or not — single-admission holds because
 each doc arrives in exactly one batch), so ``df_store_rare`` serves
 the EXACT corpus df at every arrival without a corpus rescan, and
 each arrival's blocked verify measure equals that arrival's
-``jaccard_pairs`` measure identically. df_store_maintain rides every
-cycle alongside the sketch store's maintenance.
+``jaccard_pairs`` measure identically. store_maintain runs over the df
+store every cycle alongside the sketch store's maintenance.
 
 MEASURE DRIFT — why the truth is a REPLAY, not a one-shot: the
 blocked measure is NOT time-monotone. Corpus growth pushes shingles
@@ -160,7 +160,6 @@ def main() -> int:
     if store_kind == "minhash":
         store_build = D.minhash_store_build
         store_append = D.minhash_store_append
-        store_maintain = D.minhash_store_maintain
 
         def store_probe(batch, path):
             return D.minhash_probe_store(
@@ -171,7 +170,6 @@ def main() -> int:
             D.containment_store_build(df, path, text_col, id_col,
                                       threshold=0.8)
         store_append = D.containment_store_append
-        store_maintain = D.containment_store_maintain
 
         def store_probe(batch, path):
             return D.containment_probe_store(
@@ -349,11 +347,11 @@ def main() -> int:
 
         c2 = time.perf_counter()
         store_append(batch, path, "text", "doc_id")
-        maint = store_maintain(
+        maint = D.store_maintain(
             spark, path, max_batches=2, probe_grace_seconds=0.0
         )
         if measure == "blocked":
-            D.df_store_maintain(
+            D.store_maintain(
                 spark, df_path, max_batches=2, probe_grace_seconds=0.0
             )
         admit_s = time.perf_counter() - c2
