@@ -873,7 +873,9 @@ _STORE_BATCH_COL = "batch"
 #:     ``side``/``bkt`` its frame carries — containment ``bands`` by
 #:     ``side``, substring ``fps`` by ``bkt``. Partition columns are
 #:     discovered from paths on read, so never part of a pinned data
-#:     schema.
+#:     schema; the store's first batch pins each table's ``side``/``bkt``
+#:     columns in the manifest beside its data schema, for the tables
+#:     whose paths hold none (:func:`_store_scan`).
 #: (c) Additive tables: a table named ``counts`` holds additive
 #:     partials that readers sum over ``cnt``; compaction re-aggregates
 #:     ``sum(cnt)`` grouped by its other data columns.
@@ -894,24 +896,25 @@ def _containment_store_write(
     for the whole build/append input), banded into both sides in one
     pass and one side-partitioned table, plus the additive
     bucket-count rollup."""
+    docs = _ensemble_docs(df, text_col, id_col, n, k)
+    index = _ensemble_rows(docs, _ensemble_index_schemes(specs))
+    bands = index.withColumn("side", F.lit("i")).unionByName(
+        _ensemble_rows(docs, specs).withColumn("side", F.lit("p"))
+    )
+    counts = index.groupBy("p", "r", "band", "bucket").agg(
+        F.count(F.lit(1)).alias("cnt")
+    )
+    _store_write(
+        path, docs, {"docs": docs, "bands": bands, "counts": counts}
+    )
 
-    def tables(docs: DataFrame) -> dict[str, DataFrame]:
-        index = _ensemble_rows(docs, _ensemble_index_schemes(specs))
-        bands = index.withColumn("side", F.lit("i")).unionByName(
-            _ensemble_rows(docs, specs).withColumn("side", F.lit("p"))
-        )
-        counts = index.groupBy("p", "r", "band", "bucket").agg(
-            F.count(F.lit(1)).alias("cnt")
-        )
-        return {"docs": docs, "bands": bands, "counts": counts}
 
-    _store_write(path, _ensemble_docs(df, text_col, id_col, n, k), tables)
-
-
-def _store_write(path: str, parent: DataFrame, tables) -> None:
-    """THE write half of every store build and append: ``tables`` maps
-    the family's sketch frame ``parent`` to the batch's named table
-    frames, and this writes them as one batch.
+def _store_write(
+    path: str, parent: DataFrame, frames: dict[str, DataFrame]
+) -> None:
+    """THE write half of every store build and append: ``frames`` are
+    the batch's named table frames, all derived from the family's
+    sketch frame ``parent``, and this writes them as one batch.
 
     Crash safety and visibility: every table lands under a fresh
     ``batch=<id>`` partition (:func:`_store_write_tables`), and the
@@ -932,8 +935,8 @@ def _store_write(path: str, parent: DataFrame, tables) -> None:
     pin executor heap). A single table is written as it is computed: a
     persisted frame with one consumer saves nothing and costs its own
     job under AQE. The ``finally`` that releases the parent covers
-    deriving the tables, checking their schemas against the pinned
-    ones (:func:`_store_schemas`) and writing them — a failure at any
+    checking the tables' schemas against the pinned ones
+    (:func:`_store_schemas`) and writing them — a failure at either
     step releases what it pinned and publishes nothing. The tables
     share the parent and no ordering: only the manifest publish
     sequences visibility, so they write concurrently, and a failed
@@ -943,15 +946,23 @@ def _store_write(path: str, parent: DataFrame, tables) -> None:
     from pyspark import StorageLevel
 
     batch_id = uuid.uuid4().hex[:12]
+    if len(frames) > 1:
+        parent.persist(StorageLevel.MEMORY_AND_DISK)
     try:
-        frames = tables(parent)
-        if len(frames) > 1:
-            parent.persist(StorageLevel.MEMORY_AND_DISK)
         schemas = _store_schemas(path, **frames)
         _store_write_tables(path, batch_id, frames)
     finally:
         parent.unpersist()
-    _store_manifest_publish(path, batch_id, schemas)
+    partitions = {table: _store_partitions(df) for table, df in frames.items()}
+    _store_manifest_publish(
+        path, batch_id, {"schemas": schemas, "partitions": partitions}
+    )
+
+
+def _store_partitions(frame: DataFrame) -> list[str]:
+    """The ``side``/``bkt`` columns ``frame`` is hive-partitioned by
+    (layout rule b)."""
+    return [c for c in _STORE_PARTITION_COLS[1:] if c in frame.columns]
 
 
 def _store_write_tables(
@@ -967,7 +978,7 @@ def _store_write_tables(
     the same bytes on disk."""
 
     def write(table: str, frame: DataFrame) -> None:
-        parts = [c for c in ("side", "bkt") if c in frame.columns]
+        parts = _store_partitions(frame)
         writer = rebalanced(frame, *parts).write
         if parts:
             writer = writer.partitionBy(*parts)
@@ -1070,7 +1081,8 @@ def _store_batch_dir(path: str, table: str, batch_id: str) -> str:
 
 def _store_manifest_load(path: str) -> dict:
     """Full manifest document: ``{"batches": [...], "displaced":
-    {batch_id: epoch_seconds}, "schemas": {table: schema}}``.
+    {batch_id: epoch_seconds}, "schemas": {table: schema},
+    "partitions": {table: [column, ...]}}``.
 
     ``schemas`` pins each table's DATA schema (Spark's JSON form of a
     ``StructType``, hive partition columns — ``batch``, ``side``,
@@ -1081,7 +1093,10 @@ def _store_manifest_load(path: str) -> dict:
     ``spark.read.schema(pinned)`` (:func:`_store_read_committed`), so an
     open starts no footer-inference job. Manifests written by an earlier
     release or by :func:`store_migrate` carry none and load with
-    ``schemas`` empty — their readers infer, as before.
+    ``schemas`` empty — their readers infer, as before. ``partitions``
+    pins each table's ``side``/``bkt`` partition columns the same way
+    (first batch, carried unchanged) and loads empty from manifests
+    that carry none.
 
     The ``displaced`` map records the
     moment each compaction-displaced batch stopped being visible —
@@ -1108,6 +1123,7 @@ def _store_manifest_load(path: str) -> dict:
         doc = json.load(fh)
     doc.setdefault("displaced", {})
     doc.setdefault("schemas", {})
+    doc.setdefault("partitions", {})
     return doc
 
 
@@ -1122,9 +1138,10 @@ def _store_manifest_write(
     batches: list[str],
     displaced: dict[str, float] | None = None,
     schemas: dict[str, dict] | None = None,
+    partitions: dict[str, list[str]] | None = None,
 ) -> None:
     """Publish the committed set (with the displaced-at stamp map and
-    the pinned table schemas) atomically
+    the pinned table schemas and partition columns) atomically
     (:func:`~full_docker_etl_spark.sources.catalog.atomic_write` —
     readers see the old or the new document, never a torn file)."""
     import json
@@ -1136,6 +1153,7 @@ def _store_manifest_write(
                 "batches": batches,
                 "displaced": displaced or {},
                 "schemas": schemas or {},
+                "partitions": partitions or {},
             }
         ),
     )
@@ -1177,15 +1195,16 @@ def _store_manifest_lock(path: str):
 
 
 def _store_manifest_publish(
-    path: str, batch_id: str, schemas: dict[str, dict] | None = None
+    path: str, batch_id: str, pins: dict[str, dict] | None = None
 ) -> None:
     """Append ``batch_id`` to the committed set atomically. The
     read-modify-write runs under the O_EXCL manifest lock so a
     violated single-writer contract raises instead of silently
-    dropping a concurrent append's batch. ``schemas`` (the batch's
-    table schemas, :func:`_store_schemas`) are pinned only by the
-    store's FIRST batch; later publishes carry the manifest's pinned
-    schemas and displaced-at stamp map along unchanged."""
+    dropping a concurrent append's batch. ``pins`` — the batch's
+    ``schemas`` (:func:`_store_schemas`) and ``partitions`` (their
+    partition columns) — are pinned only by the store's FIRST batch;
+    later publishes carry the manifest's pins and displaced-at stamp
+    map along unchanged."""
     import os
 
     with _store_manifest_lock(path):
@@ -1194,9 +1213,9 @@ def _store_manifest_publish(
         if os.path.exists(_store_manifest_path(path)):
             doc = _store_manifest_load(path)
             batches, displaced = doc["batches"], doc["displaced"]
-            schemas = doc["schemas"]
+            pins = {k: doc[k] for k in ("schemas", "partitions")}
         batches.append(batch_id)
-        _store_manifest_write(path, batches, displaced, schemas)
+        _store_manifest_write(path, batches, displaced, **(pins or {}))
 
 
 def _store_manifest_replace(
@@ -1258,7 +1277,9 @@ def _store_manifest_replace(
             if bid in on_disk  # prune stamps for vacuumed batches
         }
         stamps.update({bid: now for bid in displaced})
-        _store_manifest_write(path, batches, stamps, doc["schemas"])
+        _store_manifest_write(
+            path, batches, stamps, doc["schemas"], doc["partitions"]
+        )
 
 
 def _store_schemas(path: str, **frames: DataFrame) -> dict[str, dict]:
@@ -1314,10 +1335,17 @@ def _store_scan(spark: SparkSession, path: str, table: str) -> DataFrame:
     no data file — a partitioned write of no rows lands none, e.g. a
     corpus whose docs are all shorter than n — leaves path discovery
     nothing to find, so its pinned open lacks the partition columns:
-    it opens as an empty frame of its data schema plus every partition
-    column (rule b; ``bkt`` typed as path inference types it). A batch
-    probed against such a store sees an empty corpus (batch×batch pairs
-    only), not a crash."""
+    it opens as an empty frame of its data schema, ``batch`` and the
+    ``side``/``bkt`` columns the manifest pins for it — the schema it
+    has once it holds data (each typed ``string``, as path discovery
+    types them with partition-column type inference off, which this
+    engine's sessions pin). Only a partitioned table can be file-less
+    (an empty unpartitioned write lands one schema-only file), so a
+    manifest that pins no partition columns (an earlier release)
+    opens it with both rule-b columns. A batch probed against such a
+    store sees an empty corpus (batch×batch pairs only), not a crash.
+    A file-less table whose manifest pins no data schema either has no
+    schema source left and raises Spark's inference error."""
     import os
 
     from pyspark.sql.types import StructType
@@ -1332,13 +1360,11 @@ def _store_scan(spark: SparkSession, path: str, table: str) -> DataFrame:
         )
     frame = read_parquet(spark, tdir, doc["schemas"].get(table))
     if _STORE_BATCH_COL not in frame.columns:
-        frame = spark.createDataFrame(
-            [],
-            StructType(frame.schema.fields)
-            .add(_STORE_BATCH_COL, "string")
-            .add("side", "string")
-            .add("bkt", "integer"),
-        )
+        parts = doc["partitions"].get(table, ["side", "bkt"])
+        schema = StructType(list(frame.schema.fields))
+        for col in (_STORE_BATCH_COL, *parts):
+            schema.add(col, "string")
+        frame = spark.createDataFrame([], schema)
     return frame.where(F.col(_STORE_BATCH_COL).isin(doc["batches"]))
 
 
@@ -1704,7 +1730,7 @@ def _df_store_write(
         .groupBy("sh")
         .agg(F.count(F.lit(1)).alias("cnt"))
     )
-    _store_write(path, counts, lambda counts: {"counts": counts})
+    _store_write(path, counts, {"counts": counts})
 
 
 def df_store_append(
@@ -2328,14 +2354,9 @@ def _substring_store_write(
 ) -> None:
     """The substring sketch: one fingerprint pass (the persisted
     parent) feeds the bucketed fps table and the additive counts log."""
-    _store_write(
-        path,
-        _bucketed_fps(df, text_col, id_col, n, n_buckets),
-        lambda fps: {
-            "fps": fps,
-            "counts": fps.groupBy("fp").agg(F.count(F.lit(1)).alias("cnt")),
-        },
-    )
+    fps = _bucketed_fps(df, text_col, id_col, n, n_buckets)
+    counts = fps.groupBy("fp").agg(F.count(F.lit(1)).alias("cnt"))
+    _store_write(path, fps, {"fps": fps, "counts": counts})
 
 
 def _bucketed_fps(
@@ -3476,9 +3497,7 @@ def _minhash_store_write(
         shingle_arrays(df, text_col, id_col, n).where(F.size("sh_arr") > 0), k
     )
     _store_write(
-        path,
-        sigs,
-        lambda sigs: {"sigs": sigs, "bands": _band_rows(sigs, k, bands)},
+        path, sigs, {"sigs": sigs, "bands": _band_rows(sigs, k, bands)}
     )
 
 

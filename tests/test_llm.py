@@ -3111,10 +3111,12 @@ def test_substring_store_degenerate_empty_store(spark, tmp_path):
 
 def test_substring_store_compact_degenerate_empty_store(spark, tmp_path):
     """Compacting a store with zero data files must not crash and must
-    leave it probeable (still an empty corpus)."""
+    leave it probeable (still an empty corpus): two file-less batches
+    fold into one."""
     from full_docker_etl_spark.operators.dedup import (
         store_compact,
         substring_probe_store,
+        substring_store_append,
         substring_store_build,
     )
 
@@ -3123,12 +3125,58 @@ def test_substring_store_compact_degenerate_empty_store(spark, tmp_path):
         spark.createDataFrame([(1, "tiny")], "doc_id long, text string"),
         path, "text", "doc_id",
     )
-    store_compact(spark, path)
+    substring_store_append(
+        spark.createDataFrame([(2, "too short")], "doc_id long, text string"),
+        path, "text", "doc_id",
+    )
+    assert len(store_compact(spark, path)) == 2
     R = " ".join(f"e{i}" for i in range(25))
     batch = spark.createDataFrame(
         [(10, R), (11, R)], "doc_id long, text string"
     )
     got = substring_probe_store(batch, path, "text", "doc_id").collect()
+    assert [(r.d1, r.d2, r.span_tokens) for r in got] == [(10, 11, 25)]
+
+
+def test_store_file_less_table_reads_its_logical_schema(spark, tmp_path):
+    """A table with no data file (a partitioned write of no rows) reads
+    with the columns and types it has once it holds data — its pinned
+    partition columns, none it does not carry — before and after a
+    compaction; a manifest that pins no partition columns (an earlier
+    release) still probes as an empty corpus."""
+    from full_docker_etl_spark.operators import dedup as D
+
+    full, empty = str(tmp_path / "full"), str(tmp_path / "empty")
+    R = " ".join(f"f{i}" for i in range(25))
+    D.substring_store_build(
+        spark.createDataFrame([(1, R)], "doc_id long, text string"),
+        full, "text", "doc_id",
+    )
+    D.substring_store_build(
+        spark.createDataFrame([(1, "tiny")], "doc_id long, text string"),
+        empty, "text", "doc_id",
+    )
+    D.substring_store_append(
+        spark.createDataFrame([(2, "too short")], "doc_id long, text string"),
+        empty, "text", "doc_id",
+    )
+    want = {
+        t: D._store_read_committed(spark, full, t).dtypes
+        for t in ("fps", "counts")
+    }
+    for _ in range(2):  # before and after the compaction
+        for table, dtypes in want.items():
+            got = D._store_read_committed(spark, empty, table).dtypes
+            assert got == dtypes
+        D.store_compact(spark, empty)
+    doc = D._store_manifest_load(empty)
+    D._store_manifest_write(
+        empty, doc["batches"], doc["displaced"], doc["schemas"]
+    )
+    batch = spark.createDataFrame(
+        [(10, R), (11, R)], "doc_id long, text string"
+    )
+    got = D.substring_probe_store(batch, empty, "text", "doc_id").collect()
     assert [(r.d1, r.d2, r.span_tokens) for r in got] == [(10, 11, 25)]
 
 
