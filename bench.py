@@ -105,12 +105,14 @@ def main() -> int:
     m = re.search(r"sf([0-9.]+)", sf_dir)
     sf = float(m.group(1)) if m else None
 
+    from pyspark.sql import functions as F
+
+    from full_docker_etl_spark import harness
     from full_docker_etl_spark.registry import all_specs
-    from full_docker_etl_spark.session import default_parallelism, get_spark
+    from full_docker_etl_spark.session import default_parallelism
 
     cpus = default_parallelism()
-    spark = get_spark(app_name="bench", shuffle_partitions=cpus)
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = harness.session("bench")
 
     specs = all_specs()
     subset = os.environ.get("BENCH_QUERIES")
@@ -119,57 +121,7 @@ def main() -> int:
         if subset
         else sorted(specs)
     )
-
-    # warm-up: prime JVM, codegen caches, and the file index of every
-    # table (first touch of a parquet path builds an InMemoryFileIndex —
-    # a per-session cost, not a per-query one)
-    from full_docker_etl_spark.sources.catalog import register_views
-
-    register_views(spark, sf_dir)
-    specs["global_count"].fn(spark, sf_dir).count()
-    # also prime the Python worker pool + Arrow serialization path:
-    # the first pandas_udf/mapInPandas stage otherwise pays worker
-    # fork + import cost inside whichever timed query hits it first.
-    # Import the heavy per-worker modules while we're in there: lxml
-    # alone costs ~4-5 s across 32 workers and previously landed on
-    # xbrl_metrics (the alphabetically-first lxml user), reading as a
-    # 3x regression of a 1.4 s query.
-    def _prime(it):
-        import zlib  # noqa: F401  (text_compression)
-
-        try:
-            import lxml.etree  # noqa: F401  (xbrl, zip_xml_ingest)
-        except ImportError:
-            pass
-        yield from it
-
-    spark.range(cpus, numPartitions=cpus).mapInPandas(
-        _prime, "id long"
-    ).count()
-    # and prime the heavyweight JVM operator classes on a tiny range:
-    # the session's first ObjectHashAggregate (percentile), KLL /
-    # HLL sketch, count-distinct expand, window, and shuffled-join
-    # stages each pay one-time JIT + codegen-compilation cost.
-    # Without this the cost lands on whichever query alphabetically
-    # reaches that operator first (observed: 5-12 s attributed to
-    # sub-second agg_* queries). Data-independent by construction.
-    from pyspark.sql import Window
-    from pyspark.sql import functions as F
-
-    warm = spark.range(100_000, numPartitions=cpus).selectExpr(
-        "id", "id % 7 AS k", "CAST(id AS DOUBLE) AS v"
-    )
-    warm.groupBy("k").agg(
-        F.expr("percentile(v, array(0.5, 0.9))"),
-        F.expr("percentile_approx(v, 0.5, 100)"),
-        F.approx_count_distinct("v"),
-        F.count_distinct("v"),
-        F.sum(F.col("v").cast("decimal(18,2)")),
-    ).count()
-    warm.select(
-        F.row_number().over(Window.partitionBy("k").orderBy("id"))
-    ).count()
-    warm.join(warm.groupBy("k").count(), "k").count()
+    harness.warm_up(spark, sf_dir)
 
     def _anchor_sec() -> float:
         # environment-drift anchor: one fixed cheap query, timed AFTER
@@ -224,37 +176,12 @@ def main() -> int:
 
     timings: dict[str, float] = {}
     for name in names:
-        # label the query's jobs (optimization guide §1.5) so event
-        # logs / status-store dumps attribute work to the query; the
-        # description is thread-local and costs nothing in the timed
-        # region
-        spark.sparkContext.setJobDescription(f"bench:{name}")
-        t0 = time.perf_counter()
         try:
-            df = specs[name].fn(spark, sf_dir)
-            df.write.format("noop").mode("overwrite").save()
-            timings[name] = round(time.perf_counter() - t0, 3)
+            timings[name] = round(harness.run_one(spark, name, sf_dir), 3)
         except Exception as exc:  # a failing query must not kill the bench
             print(f"bench: {name} FAILED: {exc}", file=sys.stderr)
             timings[name] = -1.0
-        finally:
-            spark.sparkContext.setJobDescription(None)
-        # Operators cache intra-query intermediates (shingle tables,
-        # LSH signatures) and never unpersist — across 78 queries the
-        # accumulated cache pressures the JVM and skews late queries.
-        # Clear between queries so each is measured cold-cache and
-        # independent of its position in the run order.
-        spark.catalog.clearCache()
-        # clearCache only reaches CacheManager entries (df.cache());
-        # localCheckpoint blocks from iterative operators (CC rounds,
-        # k-means) live as persisted RDDs outside it and were the r4
-        # late-query contamination — sweep them too. Safe between
-        # queries: results are fully materialized by the noop write.
-        try:
-            for jrdd in spark.sparkContext._jsc.getPersistentRDDs().values():
-                jrdd.unpersist(False)
-        except Exception:
-            pass
+        harness.sweep(spark)
 
     anchor_end = _anchor_sec()
     anchor_cpu_end = _anchor_cpu_sec()

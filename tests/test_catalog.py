@@ -11,20 +11,15 @@ import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
 
+from full_docker_etl_spark.harness import job_watermark
 from full_docker_etl_spark.sources import load_table, read_parquet
 from full_docker_etl_spark.sources.sinks import VersionedTable
 
 
-def _jobs_started(spark) -> int:
-    """Jobs submitted so far, read synchronously from the DAG scheduler
-    (the status store fills asynchronously and evicts old jobs)."""
-    return int(spark.sparkContext._jsc.sc().dagScheduler().numTotalJobs())
-
-
 def _jobs_for(spark, fn):
-    before = _jobs_started(spark)
+    before = job_watermark(spark)
     out = fn()
-    return out, _jobs_started(spark) - before
+    return out, job_watermark(spark) - before
 
 
 def test_load_table_second_open_of_unchanged_file_starts_no_job(spark, tmp_path):

@@ -17,6 +17,7 @@ import re
 import pytest
 from pyspark.sql import functions as F
 
+from full_docker_etl_spark.harness import job_watermark
 from full_docker_etl_spark.operators.dedup import (
     jaccard_pairs,
     minhash_lsh_pairs,
@@ -834,7 +835,7 @@ def test_store_write_failure_releases_persisted_parent(
     assert D._store_manifest(path) == committed
 
 
-def test_containment_store_compact_folds_batches_same_results(spark):
+def test_store_compact_containment_folds_batches_same_results(spark):
     """Compaction folds N committed batches into one (small-file
     reclaim after many incremental appends), re-aggregates the
     additive /counts partials, and publishes atomically: probe results
@@ -1445,7 +1446,7 @@ def test_store_migrate_pre_manifest_layout(spark, tmp_path):
         D.containment_store_migrate(half)
 
 
-def test_substring_store_migrate_nested_bucket_partitions(spark, tmp_path):
+def test_store_migrate_substring_nested_bucket_partitions(spark, tmp_path):
     """The migrate helper must also handle a table whose pre-manifest
     layout is itself hive-partitioned (substring /fps carries bkt=
     subdirs): the moved layout becomes batch=<id>/bkt=<b>, exactly
@@ -1547,12 +1548,6 @@ def test_ensemble_rows_one_scan_matches_per_scheme_union(spark):
         docs.unpersist()
 
 
-def _jobs_started(spark) -> int:
-    """Jobs submitted so far, read synchronously from the DAG scheduler
-    (the status store fills asynchronously and evicts old jobs)."""
-    return int(spark.sparkContext._jsc.sc().dagScheduler().numTotalJobs())
-
-
 def _partition_filters(df) -> str:
     """The scan's PartitionFilters with expression ids stripped."""
     plan = df._jdf.queryExecution().executedPlan().toString()
@@ -1595,9 +1590,9 @@ def test_store_tables_open_with_pinned_schema_and_no_job(
     assert sorted(doc["schemas"]) == sorted(tables)
 
     for table in tables:
-        before = _jobs_started(spark)
+        before = job_watermark(spark)
         opened = D._store_read_committed(spark, path, table)
-        assert _jobs_started(spark) - before == 0, table
+        assert job_watermark(spark) - before == 0, table
         plain = (
             spark.read.parquet(f"{path}/{table}")
             .where(F.col("batch").isin(doc["batches"]))
@@ -1693,9 +1688,9 @@ def test_migrated_store_without_pinned_schemas_reads_and_probes(
     assert D._store_manifest_load(old)["schemas"] == {}
 
     for table in tables:
-        before = _jobs_started(spark)
+        before = job_watermark(spark)
         opened = D._store_read_committed(spark, old, table)
-        assert _jobs_started(spark) - before >= 1, table  # inferred
+        assert job_watermark(spark) - before >= 1, table  # inferred
         assert opened.schema == D._store_read_committed(
             spark, ref, table
         ).schema
@@ -3002,7 +2997,7 @@ def test_substring_store_probe_prunes_buckets(spark, tmp_path):
     ]
 
 
-def test_substring_store_compact_preserves_probe(spark, docs, tmp_path):
+def test_store_compact_substring_preserves_probe(spark, docs, tmp_path):
     """Compaction must shrink the store's file census (the additive
     log folds to one segment, buckets coalesce) while leaving probe
     output BYTE-IDENTICAL — the store is maintenance-rewritten, never
@@ -3109,7 +3104,7 @@ def test_substring_store_degenerate_empty_store(spark, tmp_path):
     assert got == [(10, 11, 25)]
 
 
-def test_substring_store_compact_degenerate_empty_store(spark, tmp_path):
+def test_store_compact_substring_degenerate_empty_store(spark, tmp_path):
     """Compacting a store with zero data files must not crash and must
     leave it probeable (still an empty corpus): two file-less batches
     fold into one."""

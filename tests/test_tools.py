@@ -400,89 +400,140 @@ def test_contention_without_recorded_cpus_judges_by_psi_alone(monkeypatch):
         assert not C.is_contended({"loadavg_1m": 0.5, "cpus": 64})
 
 
-def test_profile_query_counts_jobs_by_watermark_not_retained_list():
-    """profile_query attributes to a query exactly the jobs whose ids
-    lie between the scheduler watermarks taken around it: a status
-    store that has evicted old jobs (its list is shorter than the job
-    ids) or still holds earlier reps' jobs must not move the counts."""
-    import importlib.util
+def _fake_session(retained: list, total: list):
+    """A session whose status store lists ``retained`` jobs and whose DAG
+    scheduler has handed out ``total[0]`` job ids."""
     from types import SimpleNamespace as NS
 
-    spec = importlib.util.spec_from_file_location(
-        "profile_query_mod", str(REPO / "tools" / "profile_query.py")
-    )
-    mod = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(mod)
-
-    def job(jid, stages, tasks):
-        return NS(
-            jobId=lambda: jid,
-            completionTime=lambda: NS(isDefined=lambda: True),
-            stageIds=lambda: NS(size=lambda: stages),
-            numCompletedTasks=lambda: tasks,
-        )
-
-    # jobs 0-99 ran earlier; only 97-99 are retained; the query ran 100-102
-    retained = [job(j, 1, 1) for j in (97, 98, 99)]
-    retained += [job(100, 2, 4), job(101, 1, 3), job(102, 3, 8)]
     store = NS(jobsList=lambda _: NS(
         size=lambda: len(retained), apply=lambda i: retained[i]
     ))
-    sc = NS(statusStore=lambda: store)
-    spark = NS(sparkContext=NS(_jsc=NS(sc=lambda: sc)))
-    assert mod._layers(spark, 100, 103) == {"jobs": 3, "stages": 6, "tasks": 15}
-
-
-def test_job_profile_takes_rep_jobs_by_watermark_not_status_store():
-    """job_profile starts each rep at the DAG scheduler's job-id
-    watermark, not at max job id + 1 from the status store: that store
-    fills asynchronously (its newest jobs may not be there yet when the
-    rep starts) and evicts old ones, so a rep gets exactly the jobs
-    whose ids lie between the watermarks taken around it."""
-    import importlib.util
-    from types import SimpleNamespace as NS
-
-    spec = importlib.util.spec_from_file_location(
-        "job_profile_mod", str(REPO / "tools" / "job_profile.py")
-    )
-    mod = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(mod)
-
-    def some(v):
-        return NS(isDefined=lambda: True, get=lambda: v)
-
-    def job(jid, tasks):
-        return NS(
-            jobId=lambda: jid,
-            submissionTime=lambda: some(NS(getTime=lambda: 1000 * jid)),
-            completionTime=lambda: some(NS(getTime=lambda: 1000 * jid + 7)),
-            description=lambda: some(f"j{jid}"),
-            numCompletedTasks=lambda: tasks,
-            stageIds=lambda: NS(size=lambda: 1),
-        )
-
-    # jobs 0-99 ran earlier (97-99 still retained); 100 and 101 were
-    # submitted before the rep but have not reached the store yet; the
-    # rep ran 102-104
-    retained = [job(j, 1) for j in (97, 98, 99)]
-    store = NS(jobsList=lambda _: NS(
-        size=lambda: len(retained), apply=lambda i: retained[i]
-    ))
-    total = [102]
     sc = NS(
         statusStore=lambda: store,
         dagScheduler=lambda: NS(numTotalJobs=lambda: total[0]),
     )
-    spark = NS(sparkContext=NS(_jsc=NS(sc=lambda: sc)))
-    lo = mod._next_job_id(spark)
+    return NS(sparkContext=NS(_jsc=NS(sc=lambda: sc)))
+
+
+def _fake_job(jid: int, stages: int, tasks: int):
+    """A completed job submitted at ``1000 * jid`` ms that ran 7 ms."""
+    from types import SimpleNamespace as NS
+
+    def some(v):
+        return NS(isDefined=lambda: True, get=lambda: v)
+
+    return NS(
+        jobId=lambda: jid,
+        submissionTime=lambda: some(NS(getTime=lambda: 1000 * jid)),
+        completionTime=lambda: some(NS(getTime=lambda: 1000 * jid + 7)),
+        description=lambda: some(f"j{jid}"),
+        jobGroup=lambda: NS(isDefined=lambda: False),
+        numCompletedTasks=lambda: tasks,
+        stageIds=lambda: NS(size=lambda: stages),
+    )
+
+
+def test_profile_query_counts_jobs_by_watermark_not_retained_list():
+    """The harness's job reader, which the profile tool totals per rep,
+    attributes to a query exactly the jobs whose ids lie between the
+    scheduler watermarks taken around it: a status store that has
+    evicted old jobs (its list is shorter than the job ids) or still
+    holds earlier reps' jobs must not move the counts."""
+    from full_docker_etl_spark.harness import job_rows
+
+    # jobs 0-99 ran earlier; only 97-99 are retained; the query ran 100-102
+    retained = [_fake_job(j, 1, 1) for j in (97, 98, 99)]
+    retained += [_fake_job(100, 2, 4), _fake_job(101, 1, 3), _fake_job(102, 3, 8)]
+    rows = job_rows(_fake_session(retained, [103]), 100, 103)
+    totals = {
+        "jobs": len(rows),
+        "stages": sum(r["stages"] for r in rows),
+        "tasks": sum(r["tasks"] for r in rows),
+    }
+    assert totals == {"jobs": 3, "stages": 6, "tasks": 15}
+
+
+def test_job_profile_takes_rep_jobs_by_watermark_not_status_store():
+    """A profiled rep starts at the DAG scheduler's job-id watermark,
+    not at max job id + 1 from the status store: that store fills
+    asynchronously (its newest jobs may not be there yet when the rep
+    starts) and evicts old ones, so a rep gets exactly the jobs whose
+    ids lie between the watermarks taken around it."""
+    from full_docker_etl_spark.harness import job_rows, job_watermark
+
+    # jobs 0-99 ran earlier (97-99 still retained); 100 and 101 were
+    # submitted before the rep but have not reached the store yet; the
+    # rep ran 102-104
+    retained = [_fake_job(j, 1, 1) for j in (97, 98, 99)]
+    total = [102]
+    spark = _fake_session(retained, total)
+    lo = job_watermark(spark)
     assert lo == 102
-    retained += [job(100, 1), job(101, 1)]
-    retained += [job(102, 2), job(103, 3), job(104, 8)]
+    retained += [_fake_job(100, 1, 1), _fake_job(101, 1, 1)]
+    retained += [_fake_job(102, 1, 2), _fake_job(103, 1, 3), _fake_job(104, 1, 8)]
     total[0] = 105
-    rows = mod._rep_jobs(spark, lo, mod._next_job_id(spark))
+    rows = job_rows(spark, lo, job_watermark(spark))
     assert [r["job"] for r in rows] == [102, 103, 104]
     assert [r["tasks"] for r in rows] == [2, 3, 8]
     assert rows[0]["dur_ms"] == 7 and rows[0]["desc"] == "j102"
+
+
+def test_run_one_labels_every_job_and_sweep_releases_its_checkpoints(
+    spark, sf_dir
+):
+    """Every job a measured query starts carries ``bench:<name>``, and
+    the sweep after it releases the checkpoints the query pinned (its
+    connected-components rounds), leaving the session's persisted RDDs
+    as they were before the query."""
+    from full_docker_etl_spark import harness
+
+    def persisted():
+        return set(spark.sparkContext._jsc.getPersistentRDDs().keys())
+
+    name = "dedup_components"
+    harness.sweep(spark)
+    baseline = persisted()
+    lo = harness.job_watermark(spark)
+    harness.run_one(spark, name, sf_dir)
+    hi = harness.job_watermark(spark)
+    assert hi > lo
+    descs = [r["desc"] for r in harness.job_rows(spark, lo, hi)]
+    assert descs == [f"bench:{name}"] * (hi - lo)
+    assert spark.sparkContext.getLocalProperty("spark.job.description") is None
+    assert persisted() > baseline
+    harness.sweep(spark)
+    assert persisted() == baseline
+
+
+def test_measurement_primitives_are_written_once_in_the_harness():
+    """The job watermark, the status-store job reader and the
+    persisted-RDD sweep exist once, in ``full_docker_etl_spark/harness.py``;
+    ``perfbench/`` keeps its own as the benchmark's definition."""
+    import os
+    import re
+
+    patterns = [
+        r"\.numTotalJobs\(\)",
+        r"\.statusStore\(\)",
+        r"getPersistentRDDs\(\)\.values\(\)",
+    ]
+    found = {p: [] for p in patterns}
+    for base, dirs, files in os.walk(REPO):
+        dirs[:] = [
+            d for d in dirs
+            if not d.startswith(".") and not (
+                Path(base) == REPO and d == "perfbench"
+            )
+        ]
+        for f in files:
+            if f.endswith(".py"):
+                path = Path(base, f)
+                text = path.read_text(encoding="utf-8")
+                for p in patterns:
+                    found[p] += [path.relative_to(REPO).as_posix()] * len(
+                        re.findall(p, text)
+                    )
+    assert found == {p: ["full_docker_etl_spark/harness.py"] for p in patterns}
 
 
 def test_bench_compare_adjudicate_labels_drift_vs_real(monkeypatch):

@@ -9,31 +9,8 @@ import time
 import pytest
 from pyspark.sql import functions as F
 
+from full_docker_etl_spark.harness import job_rows, job_watermark
 from full_docker_etl_spark.operators.util import concurrently
-
-
-def _next_job_id(spark) -> int:
-    return int(spark.sparkContext._jsc.sc().dagScheduler().numTotalJobs())
-
-
-def _job_labels(spark, lo: int, hi: int) -> list[tuple]:
-    """(description, job group) of every job with id in [lo, hi), from
-    the status store, waited on briefly until it holds them all."""
-    store = spark.sparkContext._jsc.sc().statusStore()
-    deadline = time.monotonic() + 10.0
-    while True:
-        try:
-            jobs = [store.job(j) for j in range(lo, hi)]
-            break
-        except Exception:
-            if time.monotonic() > deadline:
-                raise
-            time.sleep(0.05)
-
-    def opt(o):
-        return o.get() if o.isDefined() else None
-
-    return [(opt(j.description()), opt(j.jobGroup())) for j in jobs]
 
 
 def test_concurrently_carries_the_callers_job_labels(spark):
@@ -58,7 +35,7 @@ def test_concurrently_carries_the_callers_job_labels(spark):
         relabelled.wait(10)
         return sc.getLocalProperty("spark.job.description")
 
-    lo = _next_job_id(spark)
+    lo = job_watermark(spark)
     sc.setJobGroup("caller-group", "caller-label")
     try:
         out = concurrently(
@@ -71,14 +48,13 @@ def test_concurrently_carries_the_callers_job_labels(spark):
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setJobDescription(None)
-    hi = _next_job_id(spark)
+    hi = job_watermark(spark)
     # a label one thunk sets stays its own
     assert out == [10, [20, 30], "own-label", "caller-label"]
     assert caller_label == "caller-label"
     assert hi - lo >= 3
-    assert _job_labels(spark, lo, hi) == [("caller-label", "caller-group")] * (
-        hi - lo
-    )
+    labels = [(r["desc"], r["group"]) for r in job_rows(spark, lo, hi)]
+    assert labels == [("caller-label", "caller-group")] * (hi - lo)
 
 
 def test_concurrently_raises_first_failure_after_every_thunk(spark):

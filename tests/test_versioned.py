@@ -22,6 +22,7 @@ import time
 
 import pytest
 
+from full_docker_etl_spark.harness import job_watermark
 from full_docker_etl_spark.sources.sinks import (
     ConcurrentWriteError,
     VersionedTable,
@@ -198,12 +199,6 @@ def test_merge_tombstones_empty_boolean_partition_not_resurrected(spark):
     )
 
 
-def _jobs_started(spark) -> int:
-    """Jobs submitted so far, read synchronously from the DAG scheduler
-    (the status store fills asynchronously and evicts old jobs)."""
-    return int(spark.sparkContext._jsc.sc().dagScheduler().numTotalJobs())
-
-
 def _leaf_inodes(t: VersionedTable, version: str) -> dict[str, dict[str, int]]:
     """{partition leaf: {data file: inode}} of one snapshot."""
     vdir = os.path.join(t.root, "_versions", version)
@@ -249,9 +244,9 @@ def test_scoped_tombstone_merge_single_pass_one_file(spark):
             }
         )
     )
-    before = _jobs_started(spark)
+    before = job_watermark(spark)
     v2 = t.merge(batch, ["k", "st"], delete_col="_deleted")
-    assert _jobs_started(spark) - before <= 6
+    assert job_watermark(spark) - before <= 6
     old, new = _leaf_inodes(t, v1), _leaf_inodes(t, v2)
     assert len(new["st=O"]) == 1
     assert new["st=F"] == old["st=F"] and new["st=P"] == old["st=P"]
@@ -1474,9 +1469,9 @@ def _pin(t: VersionedTable, version: str) -> dict:
 
 def _open_jobs(spark, t: VersionedTable, version: str | None = None):
     """(frame, jobs started by opening it) for ``t.read``."""
-    before = _jobs_started(spark)
+    before = job_watermark(spark)
     df = t.read(spark, version)
-    return df, _jobs_started(spark) - before
+    return df, job_watermark(spark) - before
 
 
 def test_new_version_opens_with_its_pinned_schema_and_no_job(spark, monkeypatch):

@@ -25,14 +25,12 @@ def main() -> int:
     out_dir, suffix, *names = sys.argv[1:]
     os.makedirs(out_dir, exist_ok=True)
 
+    from full_docker_etl_spark import harness
     from full_docker_etl_spark.registry import all_specs
-    from full_docker_etl_spark.session import default_parallelism, get_spark
     from full_docker_etl_spark.sources.catalog import register_views
 
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = default_parallelism()
-    spark = get_spark(app_name="dump_plans", shuffle_partitions=cpus)
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = harness.session("dump_plans")
     register_views(spark, sf_dir)
 
     specs = all_specs()
@@ -45,12 +43,7 @@ def main() -> int:
         with open(path, "w") as fh:
             fh.write(buf.getvalue())
         print(f"wrote {path}", file=sys.stderr)
-        spark.catalog.clearCache()
-        try:
-            for jrdd in spark.sparkContext._jsc.getPersistentRDDs().values():
-                jrdd.unpersist(False)
-        except Exception:
-            pass
+        harness.sweep(spark)
     return 0
 
 

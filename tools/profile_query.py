@@ -1,16 +1,24 @@
 #!/usr/bin/env python
-"""Per-query profiling harness (optimization guide §1): run named
-registered queries through the noop sink in a bench-identical session
-and report, per query, wall seconds plus job/stage/task counts: jobs
-by the DAG scheduler's job-id watermark, stages and tasks of those
-jobs from the live AppStatusStore — the local-mode stand-in for the
-Spark UI's Jobs/Stages tabs (spark.ui.enabled=false here).
+"""Per-query, per-job profile of registered queries (optimization guide
+§1/§7 without a UI): run each named query through the noop sink in
+bench.py's session, warm-up and between-query sweep (all from
+``full_docker_etl_spark.harness``) and report, per rep, the wall
+seconds, the job/stage/task totals and one row per Spark job the rep
+launched — the ids between the DAG scheduler's job-id watermarks taken
+around it — with submission time, duration, stages, tasks,
+description and job group from the AppStatusStore, the stand-in for
+the Spark UI's Jobs tab (engine sessions run with spark.ui.enabled
+false).
+This is how a query of 100+ sequential small jobs (store protocols, CC
+loops) gets its wall attributed to phases, and a slow rep to a job or
+to the gaps between jobs.
 
 Usage:
-    python tools/profile_query.py q1 q2 ...      # profile these queries
-    python tools/profile_query.py --top N        # N slowest from BENCH_DETAIL.json
+    python tools/profile_query.py q1 q2 ... [--repeat N]
+    python tools/profile_query.py --top N   # N slowest in BENCH_DETAIL.json
 
-Output: one JSON line per query to stdout (and a human table to stderr).
+Output: one JSON line per rep to stdout, with the job rows under
+``job_rows`` (and a human table to stderr).
 """
 
 from __future__ import annotations
@@ -19,34 +27,8 @@ import argparse
 import json
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-
-from tools.job_profile import _next_job_id  # noqa: E402
-
-
-def _layers(spark, lo: int, hi: int) -> dict:
-    """Jobs, stages and tasks of the jobs with ids in [lo, hi). The job
-    count is exact; stages and tasks come from the status store, which
-    is waited on (briefly) until it holds every job of the range."""
-    store = spark.sparkContext._jsc.sc().statusStore()
-    deadline = time.monotonic() + 5.0
-    while True:
-        jobs = store.jobsList(None)
-        mine = [
-            j for j in (jobs.apply(i) for i in range(jobs.size()))
-            if lo <= j.jobId() < hi
-        ]
-        done = all(j.completionTime().isDefined() for j in mine)
-        if (len(mine) == hi - lo and done) or time.monotonic() > deadline:
-            break
-        time.sleep(0.05)
-    return {
-        "jobs": hi - lo,
-        "stages": sum(j.stageIds().size() for j in mine),
-        "tasks": sum(j.numCompletedTasks() for j in mine),
-    }
 
 
 def main() -> int:
@@ -68,79 +50,43 @@ def main() -> int:
 
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
-    from full_docker_etl_spark.registry import all_specs
-    from full_docker_etl_spark.session import default_parallelism, get_spark
+    from full_docker_etl_spark import harness
 
-    cpus = default_parallelism()
-    spark = get_spark(app_name="profile", shuffle_partitions=cpus)
-    spark.sparkContext.setLogLevel("ERROR")
-
-    specs = all_specs()
-
-    # bench-identical warm-up
-    from full_docker_etl_spark.sources.catalog import register_views
-
-    register_views(spark, sf_dir)
-    specs["global_count"].fn(spark, sf_dir).count()
-
-    def _prime(it):
-        import zlib  # noqa: F401
-
-        try:
-            import lxml.etree  # noqa: F401
-        except ImportError:
-            pass
-        yield from it
-
-    spark.range(cpus, numPartitions=cpus).mapInPandas(_prime, "id long").count()
-    from pyspark.sql import Window
-    from pyspark.sql import functions as F
-
-    warm = spark.range(100_000, numPartitions=cpus).selectExpr(
-        "id", "id % 7 AS k", "CAST(id AS DOUBLE) AS v"
-    )
-    warm.groupBy("k").agg(
-        F.expr("percentile(v, array(0.5, 0.9))"),
-        F.expr("percentile_approx(v, 0.5, 100)"),
-        F.approx_count_distinct("v"),
-        F.count_distinct("v"),
-        F.sum(F.col("v").cast("decimal(18,2)")),
-    ).count()
-    warm.select(
-        F.row_number().over(Window.partitionBy("k").orderBy("id"))
-    ).count()
-    warm.join(warm.groupBy("k").count(), "k").count()
-
-    rows = []
+    spark = harness.session("profile")
+    harness.warm_up(spark, sf_dir)
     for name in names:
         for rep in range(args.repeat):
-            lo = _next_job_id(spark)
-            t0 = time.perf_counter()
-            df = specs[name].fn(spark, sf_dir)
-            df.write.format("noop").mode("overwrite").save()
-            wall = time.perf_counter() - t0
-            layers = _layers(spark, lo, _next_job_id(spark))
-            spark.catalog.clearCache()
-            try:
-                for jrdd in (
-                    spark.sparkContext._jsc.getPersistentRDDs().values()
-                ):
-                    jrdd.unpersist(False)
-            except Exception:
-                pass
-            row = {
+            lo = harness.job_watermark(spark)
+            wall = harness.run_one(spark, name, sf_dir)
+            hi = harness.job_watermark(spark)
+            rows = harness.job_rows(spark, lo, hi)
+            harness.sweep(spark)
+            line = {
                 "query": name,
                 "rep": rep,
                 "wall_sec": round(wall, 3),
-                **layers,
+                "jobs": hi - lo,
+                "stages": sum(r["stages"] for r in rows),
+                "tasks": sum(r["tasks"] for r in rows),
+                "job_rows": rows,
             }
-            rows.append(row)
-            print(json.dumps(row), flush=True)
+            print(json.dumps(line), flush=True)
+            busy = sum(r["dur_ms"] or 0 for r in rows) / 1000
             print(
-                f"{name:45s} rep{rep} {wall:7.2f}s  jobs={row['jobs']:4d} "
-                f"stages={row['stages']:5d} tasks={row['tasks']:6d}",
+                f"== {name} rep{rep}: wall {wall:.2f}s, jobs={line['jobs']} "
+                f"stages={line['stages']} tasks={line['tasks']}, "
+                f"sum(job dur) {busy:.2f}s",
                 file=sys.stderr,
             )
+            t_base = rows[0]["t_sub_ms"] if rows else 0
+            for r in rows:
+                rel = (r["t_sub_ms"] - t_base) / 1000 if r["t_sub_ms"] else 0
+                print(
+                    f"  j{r['job']:5d} +{rel:7.2f}s "
+                    f"{(r['dur_ms'] or 0) / 1000:7.2f}s stages={r['stages']:3d} "
+                    f"tasks={r['tasks']:5d} {r['desc'] or ''} {r['group'] or ''}",
+                    file=sys.stderr,
+                )
     spark.stop()
     return 0
 

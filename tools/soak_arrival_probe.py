@@ -177,14 +177,10 @@ def main() -> int:
             )
     else:
         raise SystemExit(f"unknown --store {store_kind}")
-    from full_docker_etl_spark.session import default_parallelism, get_spark
+    from full_docker_etl_spark import harness
     from full_docker_etl_spark.sources.catalog import load_table
 
-    spark = get_spark(
-        app_name="soak-arrival-probe",
-        shuffle_partitions=default_parallelism(),
-    )
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = harness.session("soak-arrival-probe")
 
     docs = (
         load_table(spark, sf_dir, "documents")
