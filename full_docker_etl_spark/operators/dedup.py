@@ -25,8 +25,6 @@ representative (its SQL runs on DuckDB unchanged in spirit).
 
 from __future__ import annotations
 
-from contextlib import contextmanager as _contextmanager
-
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -37,6 +35,7 @@ from full_docker_etl_spark.operators.util import concurrently, rebalanced
 from full_docker_etl_spark.operators.util import spread as _spread
 from full_docker_etl_spark.sources.catalog import (
     atomic_write,
+    commit_lock,
     data_schema,
     read_parquet,
 )
@@ -1159,52 +1158,27 @@ def _store_manifest_write(
     )
 
 
-@_contextmanager
 def _store_manifest_lock(path: str):
-    """O_EXCL lockfile around every manifest read-modify-write. The
-    store contract is single-writer, but a VIOLATION must fail loudly:
-    without the lock, two concurrent appends would interleave their
-    read-modify-writes and silently drop one committed batch — data
-    loss with no error signal. The lock is held only across the
-    manifest update (microseconds; the heavy parquet writes happen
-    outside it). A writer that crashes inside the window leaves the
-    lockfile behind; the error names it so an operator can confirm no
-    writer is live and remove it."""
-    import os
-
-    lock = _store_manifest_path(path) + ".lock"
-    try:
-        fd = os.open(lock, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-    except FileExistsError:
-        raise RuntimeError(
-            f"concurrent store-manifest writer detected: {lock} exists. "
-            "The store contract is single-writer (serialize builds/"
-            "appends/compactions per store). If the previous writer "
-            "crashed mid-publish, confirm it is dead and remove the "
-            "lockfile."
-        ) from None
-    try:
-        os.write(fd, str(os.getpid()).encode())
-        os.close(fd)
-        yield
-    finally:
-        try:
-            os.unlink(lock)
-        except OSError:
-            pass
+    """:func:`commit_lock` around every manifest read-modify-write (the
+    parquet writes run outside it). The store contract is single-writer,
+    so a second writer fails at once (``wait=0``) instead of silently
+    dropping a committed batch; a crashed writer's lock is broken by the
+    next writer once older than ``STALE_LOCK_S``."""
+    return commit_lock(_store_manifest_path(path) + ".lock", 0, "store-manifest")
 
 
 def _store_manifest_publish(
     path: str, batch_id: str, pins: dict[str, dict] | None = None
 ) -> None:
     """Append ``batch_id`` to the committed set atomically. The
-    read-modify-write runs under the O_EXCL manifest lock so a
-    violated single-writer contract raises instead of silently
-    dropping a concurrent append's batch. ``pins`` — the batch's
-    ``schemas`` (:func:`_store_schemas`) and ``partitions`` (their
-    partition columns) — are pinned only by the store's FIRST batch;
-    later publishes carry the manifest's pins and displaced-at stamp
-    map along unchanged."""
+    read-modify-write runs under the manifest lock
+    (:func:`_store_manifest_lock`), so a violated single-writer
+    contract raises instead of silently dropping a concurrent append's
+    batch, and a crashed writer's lock is broken once stale.
+    ``pins`` — the batch's ``schemas`` (:func:`_store_schemas`) and
+    ``partitions`` (their partition columns) — are pinned only by the
+    store's FIRST batch; later publishes carry the manifest's pins and
+    displaced-at stamp map along unchanged."""
     import os
 
     with _store_manifest_lock(path):
@@ -1523,7 +1497,7 @@ def store_migrate(path: str) -> str:
     # Under the manifest lock like every other manifest write: a
     # build/append racing the one-shot migration violates the
     # single-writer contract and must fail LOUDLY here, not interleave
-    # silently.
+    # silently; a crashed writer's lock is broken once stale.
     with _store_manifest_lock(path):
         _store_manifest_write(path, [batch_id])
     return batch_id
@@ -1562,7 +1536,8 @@ def containment_store_pin_specs(path: str) -> list[tuple[int, int, int]]:
     The ``_meta.json`` rewrite is atomic
     (:func:`~full_docker_etl_spark.sources.catalog.atomic_write`) and
     runs under the store's manifest lock: metadata writes obey the
-    same single-writer loud-failure contract as manifest writes."""
+    same single-writer loud-failure contract as manifest writes, and
+    the same stale-lock break (:func:`_store_manifest_lock`)."""
     import json
     import os
 

@@ -11,9 +11,12 @@ partition-prune instead of the driver looping over namespaces.
 
 from __future__ import annotations
 
+import contextlib
 import glob
 import os
 import threading
+import time
+import uuid
 from collections import OrderedDict
 from collections.abc import Iterable
 
@@ -101,14 +104,91 @@ def atomic_write(path: str, text: str) -> None:
     ``path`` — readers see the old content or the new, never a torn
     file. The temp name starts with ``.`` because some targets live
     inside a directory Spark scans (a snapshot's ``_COMMIT.json``), and
-    Spark skips hidden files."""
-    import uuid
-
+    Spark skips hidden files. Nothing is fsynced before the replace: a
+    publish survives a killed process (the page cache does), and power
+    loss durability is out of scope."""
     head, name = os.path.split(path)
     tmp = os.path.join(head, f".{name}.tmp.{uuid.uuid4().hex[:8]}")
     with open(tmp, "w") as fh:
         fh.write(text)
     os.replace(tmp, path)
+
+
+class ConcurrentWriteError(RuntimeError):
+    """A commit lost to another writer and was NOT applied; the table
+    or store is untouched. Either the optimistic-concurrency check
+    failed — the live version is no longer the snapshot the mutation
+    was derived from, and the rejecting head is on ``.head`` (re-read
+    and re-derive; merge/delete retry this automatically a few times
+    before surfacing it) — or :func:`commit_lock` was not acquired in
+    its wait, and there is no ``.head``."""
+
+
+#: A commit lock older than this is a crashed holder's and the next
+#: acquirer breaks it (locked sections are pointer/manifest I/O only).
+STALE_LOCK_S = 60.0
+
+
+@contextlib.contextmanager
+def commit_lock(lock_path: str, wait: float, what: str):
+    """The one commit lock of
+    :class:`~full_docker_etl_spark.sources.sinks.VersionedTable` and the
+    sketch stores, held around a commit's read-modify-publish.
+
+    Acquire is an O_EXCL create of ``lock_path``, polled for ``wait``
+    seconds (``0`` fails at once), then :class:`ConcurrentWriteError`
+    naming the ``what`` writer, with no ``.head``: that is how a lock
+    timeout is told from a parent mismatch. A lock older than
+    :data:`STALE_LOCK_S` is a crashed holder's and is broken by renaming
+    it aside, which exactly one contender wins (two waiters that each
+    unlinked it could both enter).
+
+    Release unlinks only inside the lease, and only while the path still
+    names the inode this holder created (the fd stays open for the
+    check): an overstayed lock is breakable, so even a checked unlink
+    could delete a waiter's fresh lock. It also sweeps the
+    ``<lock name>.stale.*`` debris.
+
+    Durability as :func:`atomic_write`: a process kill is survived (a
+    killed holder's lock is broken once stale), power loss is not."""
+    deadline = time.monotonic() + wait
+    while True:
+        try:
+            fd = os.open(lock_path, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
+            break
+        except FileExistsError:
+            try:
+                if time.time() - os.path.getmtime(lock_path) > STALE_LOCK_S:
+                    os.replace(
+                        lock_path, f"{lock_path}.stale.{uuid.uuid4().hex[:8]}"
+                    )
+                    continue
+            except OSError:
+                continue  # holder released between stat and replace
+            if time.monotonic() >= deadline:
+                raise ConcurrentWriteError(
+                    f"concurrent {what} writer detected: {lock_path} is "
+                    f"still held after {wait:g}s (a lock is broken as a "
+                    f"crashed writer's only once older than {STALE_LOCK_S:g}s)"
+                ) from None
+            time.sleep(0.02)
+    acquired = time.monotonic()
+    try:
+        os.write(fd, str(os.getpid()).encode())
+        yield
+    finally:
+        with contextlib.suppress(OSError):
+            if (
+                time.monotonic() - acquired < STALE_LOCK_S
+                and os.fstat(fd).st_ino == os.stat(lock_path).st_ino
+            ):
+                os.unlink(lock_path)
+        os.close(fd)
+        head, name = os.path.split(lock_path)
+        for entry in os.listdir(head or "."):
+            if entry.startswith(f"{name}.stale."):
+                with contextlib.suppress(OSError):
+                    os.unlink(os.path.join(head, entry))
 
 
 def data_schema(df: DataFrame, partition_cols: Iterable[str] = ()) -> dict:

@@ -41,18 +41,12 @@ from full_docker_etl_spark.operators.util import (
     rebalanced,
 )
 from full_docker_etl_spark.sources.catalog import (
+    ConcurrentWriteError,
     atomic_write,
+    commit_lock,
     data_schema,
     read_parquet,
 )
-
-
-class ConcurrentWriteError(RuntimeError):
-    """A commit lost the optimistic-concurrency check: the table's live
-    version is no longer the snapshot this mutation was derived from
-    (another writer published first). The mutation was NOT applied and
-    the table is untouched; re-read and re-derive (merge/delete retry
-    this automatically a few times before surfacing it)."""
 
 
 _UNSET = object()  # "no expected_parent given" — distinct from None
@@ -492,6 +486,12 @@ def _read_commit_meta(vdir: str) -> dict | None:
         return None
 
 
+_PARENT_GCD = (  # a scoped or DV commit's VersionedTable._gc_raced message
+    "parent snapshot {} was garbage-collected mid-link (it fell out of "
+    "retention under concurrent commits); re-read and re-derive"
+)
+
+
 class VersionedTable:
     """ATOMIC commits on plain Parquet via a pointer file — the piece
     :func:`_swap_write` documents as missing. Layout::
@@ -579,68 +579,11 @@ class VersionedTable:
         self._hist_cache = (key, tuple(hist))
         return hist
 
-    @contextlib.contextmanager
-    def _publish_lock(self, timeout: float = 30.0, stale_after: float = 60.0):
-        """Mutual exclusion around the pointer read-modify-publish (the
-        only critical section — snapshot writes go to uniquely-named
-        dirs and need no coordination). O_EXCL lock file; held for
-        pointer-file I/O only — snapshot cleanup (_gc, rejected-commit
-        rmtree) runs OUTSIDE the lock so the critical section never
-        stretches into filesystem-tree territory. A lock older than
-        ``stale_after`` is debris from a crashed publisher: it is
-        broken by atomically renaming it aside (os.replace — exactly
-        ONE contender wins the rename, so two waiters can never each
-        'break' the lock and both enter, which a naive unlink would
-        allow). Release is double-guarded: a holder that OVERSTAYED
-        ``stale_after`` never unlinks at all — its lock is legally
-        breakable from that moment, so any unlink (even inode-checked:
-        stat-then-unlink is itself a window) could delete a waiter's
-        fresh lock; the file is left for the next acquirer's stale
-        sweep. A holder inside its lease additionally verifies
-        OWNERSHIP (the path still names OUR inode) before unlinking,
-        which covers wall-clock jumps that make a young lock look
-        stale to a waiter. The fd is kept open across the critical
-        section so the held inode is comparable at release time."""
-        lock = os.path.join(self.root, "_LOCK")
-        deadline = time.monotonic() + timeout
-        while True:
-            try:
-                fd = os.open(lock, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-                break
-            except FileExistsError:
-                try:
-                    if time.time() - os.path.getmtime(lock) > stale_after:
-                        os.replace(lock, f"{lock}.stale.{uuid.uuid4().hex[:8]}")
-                        continue
-                except OSError:
-                    continue  # holder released between stat and replace
-                if time.monotonic() > deadline:
-                    raise ConcurrentWriteError(
-                        f"could not acquire the publish lock at {lock} "
-                        f"within {timeout}s; a publisher is stuck or the "
-                        "table is under heavy concurrent write load"
-                    )
-                time.sleep(0.02)
-        acquired = time.monotonic()
-        try:
-            os.write(fd, str(os.getpid()).encode())
-            yield
-        finally:
-            # Never unlink once the lease is overstayed (see docstring:
-            # a breakable lock may be SOMEONE ELSE'S by the time any
-            # check-then-unlink pair runs); inside the lease, unlink
-            # only if the path still names OUR inode.
-            with contextlib.suppress(OSError):
-                if (
-                    time.monotonic() - acquired < stale_after
-                    and os.fstat(fd).st_ino == os.stat(lock).st_ino
-                ):
-                    os.unlink(lock)
-            os.close(fd)
-            for entry in os.listdir(self.root):
-                if entry.startswith("_LOCK.stale."):
-                    with contextlib.suppress(OSError):
-                        os.unlink(os.path.join(self.root, entry))
+    def _publish_lock(self):
+        """:func:`commit_lock` around the pointer read-modify-publish, the
+        only critical section (snapshot writes and cleanup run outside
+        it); a writer waits up to 30 s."""
+        return commit_lock(os.path.join(self.root, "_LOCK"), 30.0, "table")
 
     def current_version(self) -> str | None:
         hist = self._history()
@@ -709,6 +652,27 @@ class VersionedTable:
         # snapshot's: written before publish, GC'd with its version.
         return os.path.join(self.root, "_dv", version)
 
+    def _discard(self, version: str) -> None:
+        """Remove a never-published snapshot and its deletion-vector
+        sidecar (which would otherwise be an orphan under ``_dv``)."""
+        shutil.rmtree(
+            os.path.join(self.root, "_versions", version), ignore_errors=True
+        )
+        shutil.rmtree(self._dv_dir(version), ignore_errors=True)
+
+    @contextlib.contextmanager
+    def _gc_raced(self, version: str, message: str):
+        """Hardlinking into ``version`` from another snapshot happens
+        OUTSIDE the lock, so it races that snapshot's GC. A vanished file
+        is a retryable staleness, not an I/O fault: ``version`` is
+        discarded and :class:`ConcurrentWriteError` raised with
+        ``message``, which ``_retry_concurrent`` re-derives from."""
+        try:
+            yield
+        except FileNotFoundError as exc:
+            self._discard(version)
+            raise ConcurrentWriteError(message) from exc
+
     def _read_dv(self, spark: SparkSession, version: str) -> DataFrame | None:
         """The snapshot's deletion vector (distinct tombstoned key
         tuples), or None when the snapshot carries none; opened with
@@ -774,22 +738,18 @@ class VersionedTable:
         # DIRECTORY is silently skipped by os.walk — so a clean
         # FileNotFoundError is not enough, the snapshot must ALSO still
         # be retained after linking or the clone may be silently PARTIAL.
-        try:
+        with dest._gc_raced(
+            new_version,
+            f"source snapshot {version!r} was garbage-collected "
+            "mid-clone (it fell out of retention under concurrent "
+            "source commits); re-read and re-clone",
+        ):
             _link_tree(src_dir, vdir, skip=frozenset({"_COMMIT.json"}))
             if os.path.isdir(self._dv_dir(version)):
                 # the snapshot's deletion vector is part of its state
                 _link_tree(self._dv_dir(version), dest._dv_dir(new_version))
-        except FileNotFoundError as exc:
-            shutil.rmtree(vdir, ignore_errors=True)
-            shutil.rmtree(dest._dv_dir(new_version), ignore_errors=True)
-            raise ConcurrentWriteError(
-                f"source snapshot {version!r} was garbage-collected "
-                "mid-clone (it fell out of retention under concurrent "
-                "source commits); re-read and re-clone"
-            ) from exc
         if version not in self._history():
-            shutil.rmtree(vdir, ignore_errors=True)
-            shutil.rmtree(dest._dv_dir(new_version), ignore_errors=True)
+            dest._discard(new_version)
             raise ConcurrentWriteError(
                 f"source snapshot {version!r} fell out of retention "
                 "while the clone was linking; the clone could be "
@@ -813,11 +773,7 @@ class VersionedTable:
             else:
                 atomic_write(dest._pointer, new_version)  # the publish
         if raced:
-            shutil.rmtree(vdir, ignore_errors=True)
-            # the DV sidecar was hardlinked alongside the snapshot —
-            # leaving it would orphan _dv/<never-published-version> in
-            # the winner's table (the other discard paths clean both)
-            shutil.rmtree(dest._dv_dir(new_version), ignore_errors=True)
+            dest._discard(new_version)
             raise FileExistsError(
                 f"destination {dest_root} was initialized concurrently"
             )
@@ -853,7 +809,7 @@ class VersionedTable:
             retained = retained[: self.keep]
             atomic_write(self._pointer, "\n".join(retained))  # the publish
         # GC outside the lock: rmtree of aged snapshots can be slow and
-        # must never stretch the critical section past stale_after
+        # must never stretch the critical section past STALE_LOCK_S
         self._gc(retained, aged=set(history) - set(retained))
         return version
 
@@ -932,25 +888,10 @@ class VersionedTable:
                 dv_schema = self._propagate_dv(
                     df.sparkSession, link_from, vdir, version, schema
                 )
-            try:
+            with self._gc_raced(version, _PARENT_GCD.format(link_from)):
                 _link_missing_partitions(
                     link_from, vdir, len(self.partition_by), link_exclude
                 )
-            except FileNotFoundError as exc:
-                # the parent snapshot fell out of retention and was
-                # GC'd by concurrent commits while this writer was
-                # linking (links happen OUTSIDE the lock by design) —
-                # a retryable staleness, not an I/O fault: surface it
-                # as the rejection it is so _retry_concurrent
-                # re-derives from the new head instead of dying on a
-                # raw FileNotFoundError
-                shutil.rmtree(vdir, ignore_errors=True)
-                shutil.rmtree(self._dv_dir(version), ignore_errors=True)
-                raise ConcurrentWriteError(
-                    f"parent snapshot {link_from} was garbage-collected "
-                    "mid-link (it fell out of retention under concurrent "
-                    "commits); re-read and re-derive"
-                ) from exc
             _write_commit_meta(
                 vdir,
                 full=False,
@@ -974,8 +915,7 @@ class VersionedTable:
             rebased = self._try_rebase(version, vdir, link_from,
                                        expected_parent)
             if rebased is None:
-                shutil.rmtree(vdir, ignore_errors=True)
-                shutil.rmtree(self._dv_dir(version), ignore_errors=True)
+                self._discard(version)
                 raise
             self.last_commit_rebased = True
             return rebased
@@ -1156,7 +1096,7 @@ class VersionedTable:
             exc.head = rejected_head
             raise exc
         # GC outside the lock: rmtree of aged snapshots can be slow and
-        # must never stretch the critical section past stale_after
+        # must never stretch the critical section past STALE_LOCK_S
         self._gc(retained, aged=set(history) - set(retained))
 
     def merge(
@@ -1705,15 +1645,8 @@ class VersionedTable:
         version = f"v_{uuid.uuid4().hex[:12]}"
         vdir = os.path.join(self.root, "_versions", version)
         parent_dir = os.path.join(self.root, "_versions", expected_parent)
-        try:
+        with self._gc_raced(version, _PARENT_GCD.format(expected_parent)):
             _link_tree(parent_dir, vdir, skip=frozenset({"_COMMIT.json"}))
-        except FileNotFoundError as exc:
-            shutil.rmtree(vdir, ignore_errors=True)
-            raise ConcurrentWriteError(
-                f"parent snapshot {expected_parent} was garbage-collected "
-                "mid-link (it fell out of retention under concurrent "
-                "commits); re-read and re-derive"
-            ) from exc
         dv_df.coalesce(1).write.mode("overwrite").parquet(
             self._dv_dir(version)
         )
@@ -1731,7 +1664,7 @@ class VersionedTable:
         try:
             self._publish(version, vdir, expected_parent)
         except ConcurrentWriteError:
-            shutil.rmtree(self._dv_dir(version), ignore_errors=True)
+            self._discard(version)  # a lock timeout leaves vdir too
             raise
         return version
 

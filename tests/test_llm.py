@@ -950,6 +950,31 @@ def test_store_manifest_lock_and_compact_replace_guard(spark, tmp_path):
     assert D._store_manifest(path) == committed
 
 
+def test_store_backdated_lock_is_broken_not_wedging(spark, tmp_path):
+    """A manifest lock left by a writer that crashed an hour ago must
+    not wedge the store: the next append breaks it as stale (rename-
+    aside) and commits, and the stale debris is swept. A fresh foreign
+    lock still fails at once (the test above)."""
+    import os
+    import time
+
+    from full_docker_etl_spark.operators import dedup as D
+
+    df = _quote_corpus(spark)
+    path = str(tmp_path / "bstore")
+    D.containment_store_build(df.where("doc_id < 10"), path, "text", "doc_id")
+    lock = D._store_manifest_path(path) + ".lock"
+    open(lock, "w").write("424242")
+    old = time.time() - 3600
+    os.utime(lock, (old, old))  # crashed an hour ago
+    D.containment_store_append(
+        df.where("doc_id >= 10 and doc_id < 15"), path, "text", "doc_id"
+    )
+    assert len(D._store_manifest(path)) == 2
+    assert not os.path.exists(lock)
+    assert not [e for e in os.listdir(path) if ".stale." in e]
+
+
 def _backdate_displaced_stamps(
     path, batch_ids, ts: float = 1_000_000_000.0
 ) -> None:

@@ -23,6 +23,7 @@ import time
 import pytest
 
 from full_docker_etl_spark.harness import job_watermark
+from full_docker_etl_spark.sources.catalog import commit_lock
 from full_docker_etl_spark.sources.sinks import (
     ConcurrentWriteError,
     VersionedTable,
@@ -646,6 +647,62 @@ def test_release_never_unlinks_a_foreign_lock():
     os.unlink(lock)
 
 
+def test_lock_timeout_raises_without_head(tmp_path):
+    """A lock held by a live writer (fresh, so never broken as stale)
+    makes a waiter give up after ``wait`` with a ConcurrentWriteError
+    that carries no ``head``: ``_try_rebase`` reads the missing head
+    as a lock timeout, not a parent mismatch, and stops rebasing."""
+    lock = str(tmp_path / "_LOCK")
+    with commit_lock(lock, 0.05, "table"):
+        start = time.monotonic()
+        with pytest.raises(ConcurrentWriteError, match="still held") as info:
+            with commit_lock(lock, 0.05, "table"):
+                pass
+        assert time.monotonic() - start >= 0.05
+        assert not hasattr(info.value, "head")
+    assert not os.path.exists(lock)
+
+
+def test_commit_lock_is_written_once():
+    """``os.O_EXCL`` and the stale lock's rename-aside
+    (``os.replace(lock, "<lock>.stale.<id>")``) live in one function of
+    the package: ``catalog.commit_lock``, the lock that VersionedTable
+    and the sketch stores both take."""
+    import ast
+
+    pkg = os.path.join(
+        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+        "full_docker_etl_spark",
+    )
+    found = {"O_EXCL": [], "rename-aside": []}
+
+    def visit(node, where):
+        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+            where = f"{where.split(':')[0]}:{node.name}"
+        if isinstance(node, ast.Attribute) and node.attr == "O_EXCL":
+            found["O_EXCL"].append(where)
+        if (
+            isinstance(node, ast.Call)
+            and isinstance(node.func, ast.Attribute)
+            and node.func.attr in ("replace", "rename")
+            and ".stale." in ast.unparse(node)
+        ):
+            found["rename-aside"].append(where)
+        for child in ast.iter_child_nodes(node):
+            visit(child, where)
+
+    for base, _, files in os.walk(pkg):
+        for f in files:
+            if f.endswith(".py"):
+                path = os.path.join(base, f)
+                with open(path, encoding="utf-8") as fh:
+                    visit(ast.parse(fh.read()), os.path.relpath(path, pkg))
+    assert found == {
+        "O_EXCL": ["sources/catalog.py:commit_lock"],
+        "rename-aside": ["sources/catalog.py:commit_lock"],
+    }
+
+
 def test_merge_upcasts_narrow_batch_without_flag(spark):
     """A batch column NARROWER than the table's (int into long) must
     up-cast silently — lossless, no rewrite, no evolve_schema flag —
@@ -752,21 +809,59 @@ def test_concurrent_compact_and_merge(spark):
         assert t.read(spark, version=v).count() >= 41
 
 
-def test_gcd_parent_mid_link_rejects_as_concurrent(spark, tmp_path):
-    """A scoped commit hardlinks from its parent OUTSIDE the lock; if
-    the parent snapshot was GC'd in the gap (it fell out of retention
-    under heavy concurrent commits), the failure must surface as a
-    retryable ConcurrentWriteError — not a raw FileNotFoundError that
-    kills the writer — and the half-written snapshot must be
-    discarded."""
+@pytest.mark.parametrize(
+    "site", ["parent_gone", "commit", "commit_dv", "clone"]
+)
+def test_gcd_parent_mid_link_rejects_as_concurrent(
+    spark, tmp_path, monkeypatch, site
+):
+    """Every commit that hardlinks from another snapshot OUTSIDE the
+    lock — a scoped commit and a deletion-vector commit from their
+    parent, a clone from its source — races that snapshot's GC (it can
+    fall out of retention under heavy concurrent commits). A file GC'd
+    mid-link must surface as a retryable ConcurrentWriteError — not a
+    raw FileNotFoundError that kills the writer — and the half-written
+    snapshot and its ``_dv`` sidecar must be discarded. ``parent_gone``
+    is a scoped commit whose whole parent directory was GC'd before it
+    linked; in the other cases a source file vanishes at its link. The
+    scoped commit has already written its carried vector when linking
+    fails; the clone fails while linking the source's vector."""
     t = _table(keep_versions=2, partition_by=["p"])
-    t.overwrite(spark.createDataFrame([(1, 0, "a")], "k int, p int, v string"))
-    df = spark.createDataFrame([(2, 1, "b")], "k int, p int, v string")
-    gone = os.path.join(t.root, "_versions", "v_gone")
+    t.overwrite(
+        spark.createDataFrame([(1, 0, "a"), (2, 1, "b")], "k int, p int, v string")
+    )
+    head = t.delete_dv(spark.createDataFrame([(1, 0)], "k int, p int"), ["k", "p"])
+    real_link = os.link
+
+    def gcd_link(src, dst, *args, **kwargs):
+        if site != "clone" or f"{os.sep}_dv{os.sep}" in src:
+            os.unlink(src)  # the source's GC got there first
+        return real_link(src, dst, *args, **kwargs)
+
+    monkeypatch.setattr(os, "link", gcd_link)
+    target = t
     with pytest.raises(ConcurrentWriteError, match="garbage-collected"):
-        t._commit(df, link_from=gone, expected_parent=t.current_version())
-    on_disk = set(os.listdir(os.path.join(t.root, "_versions")))
-    assert on_disk == set(t.versions())  # no orphaned half-commit
+        if site in ("parent_gone", "commit"):
+            parent = "v_gone" if site == "parent_gone" else head
+            t._commit(
+                spark.createDataFrame([(3, 1, "c")], "k int, p int, v string"),
+                link_from=os.path.join(t.root, "_versions", parent),
+                expected_parent=head,
+            )
+        elif site == "commit_dv":
+            t._commit_dv(spark.createDataFrame([(2, 1)], "k int, p int"), head)
+        else:
+            target = VersionedTable(str(tmp_path / "clone"))
+            t.clone_to(target.root)
+    monkeypatch.undo()
+    assert target.current_version() == (None if site == "clone" else head)
+
+    def on_disk(sub):
+        d = os.path.join(target.root, sub)
+        return set(os.listdir(d)) if os.path.isdir(d) else set()
+
+    assert on_disk("_versions") == set(target.versions())  # no half-commit
+    assert on_disk("_dv") <= set(target.versions())  # no orphaned sidecar
 
 
 def test_shallow_clone_zero_copy_and_independent(spark, tmp_path):
